@@ -1,9 +1,11 @@
 """mapInPandas stages: vectorized OCR and batched NER.
 
 The engine's two Python-side operators (everything else is JVM-side SQL).
-Both follow the Spark ML-inference pattern (SURVEY.md §2.8 M1-M6): state
-built once per python worker, Arrow-batched iterators, per-row error
-absorption into an `error` column (failures never kill the job,
+Both follow the Spark ML-inference pattern (SURVEY.md §2.8 M1-M6): the
+closure (gazetteer, resolver, kernels) is unpickled and the stage state
+(the NER token trie) is built once per task, at the top of `stage()` —
+not per batch, and not once per python worker; Arrow-batched iterators,
+per-row error absorption into an `error` column (failures never kill the job,
 /root/reference/src/pipelines/base.py:44-57 semantics), and an in-batch
 wall-clock guard replacing the reference's thread-pool timeout
 (/root/reference/src/utils.py:21-46).
@@ -494,8 +496,10 @@ def make_ner_stage(
     """Build the NER mapInPandas function + its output schema.
 
     Appends `entities` (array<struct>) and `bio` (tag string) to every input
-    row. The gazetteer rides the closure (broadcast by Spark's task
-    serialization — it is small); the token trie builds once per worker.
+    row. The gazetteer rides the closure (shipped with every task by
+    Spark's task serialization — it is small); the GazetteerTagger and its
+    token trie are built once per task, when `stage()` starts, and reused
+    for every Arrow batch of that task.
     """
     if passthrough is None:
         raise ValueError("passthrough schema required (input schema of the stage)")

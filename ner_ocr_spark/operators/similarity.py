@@ -250,6 +250,14 @@ def lloyd_kmeans(
     return cents
 
 
+def _centroid_scores(vecs: pd.Series, c: np.ndarray,
+                     half_norms: np.ndarray) -> np.ndarray:
+    """x . c - |c|^2 / 2 per (vector, centroid): higher = nearer (the
+    shared Arrow kernel of the IVF UDFs; module-level, so their python
+    workers load the engine and its zip guard, `_pyworker`)."""
+    return np.vstack(vecs.to_numpy()) @ c.T - half_norms
+
+
 def ivf_assign_udf(centroids: np.ndarray):
     """Nearest-centroid id (argmin squared distance = argmax v.c - |c|^2/2)
     as a VECTORIZED Arrow kernel: one numpy matmul per batch.
@@ -267,8 +275,7 @@ def ivf_assign_udf(centroids: np.ndarray):
 
     @pandas_udf("int")
     def _assign(vecs: pd.Series) -> pd.Series:
-        x = np.vstack(vecs.to_numpy())
-        scores = x @ c.T - half_norms
+        scores = _centroid_scores(vecs, c, half_norms)
         return pd.Series(scores.argmax(axis=1).astype("int32"))
 
     return _assign
@@ -285,8 +292,7 @@ def ivf_probe_udf(centroids: np.ndarray, n_probe: int):
 
     @pandas_udf("array<int>")
     def _probe(vecs: pd.Series) -> pd.Series:
-        x = np.vstack(vecs.to_numpy())
-        d = half_norms - x @ c.T  # asc = nearest
+        d = -_centroid_scores(vecs, c, half_norms)  # asc = nearest
         order = np.argsort(d, axis=1, kind="stable")[:, :n_probe]
         return pd.Series([row.astype("int32").tolist() for row in order])
 

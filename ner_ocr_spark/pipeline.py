@@ -108,8 +108,10 @@ def extract_spans(
     # schedules in many fine waves; when partitions ≈ cores (small local
     # runs), pass media_partitions explicitly — one wave per core lets the
     # slowest task stretch the whole stage (measured +8% at 16 cores going
-    # from 2 to 8 waves), while over-splitting a tiny input pays ~20% in
-    # per-task Arrow/python overhead. Granularity follows data volume.
+    # from 2 to 8 waves), while over-splitting a tiny input paid ~20% in
+    # per-task overhead — measured before _pyworker removed the per-task
+    # pyspark.zip re-read that made up most of it; re-measure before
+    # tuning this default. Granularity follows data volume.
     n_part = media_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions")
     )

@@ -1,7 +1,9 @@
 """SparkSession factory with the engine's standard tuning.
 
-Local-mode defaults match the sandbox (local[32], 32-core box); on a real
-cluster the same builder is used minus `master` (spark-submit provides it).
+Local mode runs on local[N] with N from the SPARK_GRAFT_CPUS environment
+variable (32 when unset), and shuffle partitions default to N; pass
+`master` to override. On a real cluster the same builder is used minus
+`master` (spark-submit provides it).
 """
 
 from __future__ import annotations

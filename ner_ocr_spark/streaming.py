@@ -96,6 +96,33 @@ _SESSION_STATE_SCHEMA = (
 )
 
 
+def _fold_sessions(user, rows, opened, gap_s):
+    """Merge one user's (epoch, order)-sorted events into the open session
+    `opened` = (session_id, n_events, start, last). Returns the columns of
+    the sessions a gap > gap_s closed and the session left open (last is
+    None while nothing has been seen). Module-level, so the state
+    function's python workers load the engine and its zip guard
+    (`_pyworker`)."""
+    sid, n, start, last = opened
+    closed = {"user_id": [], "session_id": [], "n_events": [],
+              "start_epoch": [], "end_epoch": []}
+    for epoch, _ in rows:
+        epoch = int(epoch)
+        if last is None:
+            start, n = epoch, 1
+        elif epoch - last > gap_s:
+            closed["user_id"].append(user)
+            closed["session_id"].append(sid)
+            closed["n_events"].append(n)
+            closed["start_epoch"].append(start)
+            closed["end_epoch"].append(last)
+            sid, start, n = sid + 1, epoch, 1
+        else:
+            n += 1
+        last = epoch
+    return closed, (sid, n, start, last)
+
+
 def stateful_sessionize(
     events: DataFrame,
     gap_s: int = 1800,
@@ -140,27 +167,10 @@ def stateful_sessionize(
             rows.extend(
                 zip(pdf[epoch_col].astype("int64"), pdf[order_col])
             )
-        rows.sort()
-        if state.exists:
-            sid, n, start, last = state.get
-        else:
-            sid, n, start, last = 0, 0, None, None
-        closed = {"user_id": [], "session_id": [], "n_events": [],
-                  "start_epoch": [], "end_epoch": []}
-        for epoch, _ in rows:
-            epoch = int(epoch)
-            if last is None:
-                start, n = epoch, 1
-            elif epoch - last > gap_s:
-                closed["user_id"].append(user)
-                closed["session_id"].append(sid)
-                closed["n_events"].append(n)
-                closed["start_epoch"].append(start)
-                closed["end_epoch"].append(last)
-                sid, start, n = sid + 1, epoch, 1
-            else:
-                n += 1
-            last = epoch
+        opened = state.get if state.exists else (0, 0, None, None)
+        closed, (sid, n, start, last) = _fold_sessions(
+            user, sorted(rows), opened, gap_s
+        )
         if last is not None:  # no-op batches must not write a null state
             state.update((sid, n, start, last))
             # flush once the watermark proves no extender can arrive

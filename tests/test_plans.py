@@ -172,3 +172,21 @@ def test_interval_join_is_equi_not_nested_loop(spark):
     plan = _executed(e.q_interval_join(spark, SF))
     assert "NestedLoop" not in plan and "Cartesian" not in plan
     assert "Join" in plan
+
+
+def test_get_spark_pins_performance_settings(spark):
+    """The session settings performance depends on (`spark` is built by
+    session.get_spark): the InferFiltersFromGenerate exclusion and the
+    1024-row Arrow batch bound."""
+    rules = spark.conf.get("spark.sql.optimizer.excludedRules").split(",")
+    assert "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate" in rules
+    assert spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch") == "1024"
+    # and the exclusion holds in the plan: exploding a computed array gets
+    # no inferred size(...) > 0 filter re-evaluating the generator input
+    # (a projected array, then exploded: the span builder's shape)
+    q = spark.range(3).select(
+        F.transform(F.split(F.col("id").cast("string"), ","), F.upper)
+        .alias("a")
+    ).select(F.posexplode("a"))
+    optimized = q._jdf.queryExecution().optimizedPlan().toString()
+    assert "size(" not in optimized, optimized
