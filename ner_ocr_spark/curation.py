@@ -6,7 +6,7 @@ flagship COMPOSITION — what a user actually runs over a crawl dump:
 
     documents
       -> gopher_filter            quality rules          (map-only)
-      -> repetition_stats keep    n-gram repetition      (2 hash-agg shuffles)
+      -> repetition_cols keep     n-gram repetition      (map-only)
       -> exact-dedup canonical    min-id per content key (1 window shuffle)
       -> stratified_sample        per-language rates     (map-only filter)
       -> pack_sequences           concat-and-chunk       (1 window shuffle)

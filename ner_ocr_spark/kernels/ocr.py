@@ -34,6 +34,9 @@ _TEMPLATES, _CHARS = font.template_stack()
 _MATCH_H, _MATCH_W = font.GLYPH_H * 3, font.GLYPH_W * 3
 
 MAX_SIDE_LIMIT = 1500  # reference default, /root/reference/src/config.py:13
+# deskew grid of the score-gated second pass (reference TrOCR enhancement
+# analog): the same recipe as the first pass, swept 5x finer
+REFINE_STEP = 0.05
 
 
 @dataclass
@@ -150,29 +153,6 @@ def estimate_skew(
         if o > best_obj:
             best_obj, best_angle = o, float(ang)
     return best_angle
-
-
-def rotate_mask(mask: np.ndarray, angle_deg: float) -> np.ndarray:
-    """Nearest-neighbor rotation of a boolean mask about the center,
-    output canvas expanded to fit."""
-    if abs(angle_deg) < 1e-9:
-        return mask
-    h, w = mask.shape
-    r = math.radians(angle_deg)
-    c, s = math.cos(r), math.sin(r)
-    nh = int(abs(h * c) + abs(w * s) + 1)
-    nw = int(abs(w * c) + abs(h * s) + 1)
-    cy, cx = (h - 1) / 2.0, (w - 1) / 2.0
-    ncy, ncx = (nh - 1) / 2.0, (nw - 1) / 2.0
-    # inverse map: dest -> src (separable outer sums, see rotate_gray)
-    dy = (np.arange(nh, dtype=np.float32) - ncy)
-    dx = (np.arange(nw, dtype=np.float32) - ncx)
-    sy = np.round((c * dy + cy)[:, None] + (s * dx)[None, :]).astype(np.int64)
-    sx = np.round((-s * dy + cx)[:, None] + (c * dx)[None, :]).astype(np.int64)
-    valid = (sy >= 0) & (sy < h) & (sx >= 0) & (sx < w)
-    out = np.zeros((nh, nw), dtype=bool)
-    out[valid] = mask[sy[valid], sx[valid]]
-    return out
 
 
 def rotate_gray(gray: np.ndarray, angle_deg: float, bg: int) -> np.ndarray:
@@ -472,8 +452,14 @@ def recognize_mask(mask: np.ndarray) -> list[LineResult]:
     return results
 
 
-def ocr_page(png_bytes: bytes, max_side_limit: int = MAX_SIDE_LIMIT) -> list[LineResult]:
-    """Full kernel: decode -> resize -> Otsu -> despeckle -> deskew -> recognize."""
+def ocr_page(
+    png_bytes: bytes, max_side_limit: int = MAX_SIDE_LIMIT, step: float = 0.25
+) -> list[LineResult]:
+    """Full kernel: decode -> resize -> Otsu -> despeckle -> deskew -> recognize.
+
+    `step` is the deskew angle grid: the first pass runs the default, the
+    refine pass (operators/extract) runs REFINE_STEP — one recipe, so both
+    passes share the noise erase, the ink-bbox crop and the box frame."""
     gray = decode_gray(png_bytes)
     gray = bounded_resize(gray, max_side_limit)
     raw = binarize(gray)
@@ -486,7 +472,7 @@ def ocr_page(png_bytes: bytes, max_side_limit: int = MAX_SIDE_LIMIT) -> list[Lin
     if noise.any():
         gray = gray.copy()
         gray[noise] = bg
-    angle = estimate_skew(mask)  # the correction angle (rotate by it to deskew)
+    angle = estimate_skew(mask, step=step)  # correction angle: rotate by it
     if abs(angle) > 1e-9:
         # crop to the ink bounding box (+2 px) first: margins would only
         # inflate the rotated canvas and every downstream full-image pass

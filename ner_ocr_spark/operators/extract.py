@@ -66,24 +66,20 @@ def make_ocr_stage(
     blob_resolver: Callable[[str], bytes] | None = None,
     batch_timeout_s: float = 400.0,
     max_side_limit: int = 1500,
-    min_score: float | None = None,
     refine_below: float | None = None,
     gazetteer: list[tuple[str, str]] | None = None,
-    kind_label: str = "media",
     pdf_rasterizer: Callable[[bytes, float], list[bytes]] | None = None,
     pdf_max_pages: int | None = None,
     pdf_zoom: float = 2.0,
 ) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
     """Build the OCR mapInPandas function.
 
-    Input batches: (doc_id, span_idx, media_ref[, image_png][, line_base]).
-    If an `image_png` column is present (blobs joined upstream, or PDF
-    pages rasterized upstream) it is used; a NULL image_png — and the
-    column's absence — falls back to `blob_resolver(media_ref)`, the
-    production shape where media_ref points into an object store and the
-    fetch happens executor-side (no image bytes ever shuffle). An optional
-    `line_base` column offsets the emitted line_idx — the PDF branch uses
-    page_idx * 100000 so multi-page spans keep one global line order.
+    Input batches: (doc_id, span_idx, kind, media_ref[, image_png]).
+    If an `image_png` column is present (blobs joined upstream) it is used;
+    a NULL image_png — and the column's absence — falls back to
+    `blob_resolver(media_ref)`, the production shape where media_ref points
+    into an object store and the fetch happens executor-side (no image
+    bytes ever shuffle).
 
     Output: OCR_SCHEMA, one row per recognized line, line_idx ordered
     top-to-bottom; a failed row degrades to a single (text=None, error=...)
@@ -91,6 +87,10 @@ def make_ocr_stage(
     batch_timeout_s mirrors the reference's 400 s OCR budget
     (/root/reference/config.yaml:3): on breach, remaining rows in the batch
     emit timeout-error rows instead of running.
+
+    When `refine_below` is given, a page with any line scoring below it is
+    re-read by the same kernel recipe on the finer REFINE_STEP deskew grid
+    (reference M2 analog); the result rides transformer_text/score.
 
     When `gazetteer` is given, the stage also normalizes each recognized
     line (python twin of operators/normalize.normalize_expr — pinned equal
@@ -153,7 +153,7 @@ def make_ocr_stage(
                 out["doc_id"].append(doc_id)
                 out["span_idx"].append(span_idx)
                 out["line_idx"].append(line_idx)
-                out["kind"].append(kind if kind is not None else kind_label)
+                out["kind"].append(kind)
                 out["text"].append(text)
                 out["media_ref"].append(media_ref)
                 out["box"].append(box)
@@ -163,31 +163,11 @@ def make_ocr_stage(
                 out["error"].append(error)
 
             has_png = "image_png" in pdf.columns
-            has_base = "line_base" in pdf.columns
-            has_kind = "kind" in pdf.columns
-            has_pre_err = "error" in pdf.columns
             for row in pdf.itertuples(index=False):
-                base = int(row.line_base) if has_base and row.line_base is not None and not pd.isna(row.line_base) else 0
-                rk = row.kind if has_kind else None
-                if has_pre_err and isinstance(row.error, str):
-                    # upstream stage (pdf rasterizer) already failed this
-                    # span: pass the error row through untouched
-                    emit(row.doc_id, int(row.span_idx), base, None,
-                         row.media_ref, None, None, row.error, kind=rk)
-                    continue
+                rk = row.kind
                 if time.monotonic() - t0 > batch_timeout_s:
-                    emit(row.doc_id, int(row.span_idx), base, None, row.media_ref,
+                    emit(row.doc_id, int(row.span_idx), 0, None, row.media_ref,
                          None, None, "timeout: batch OCR budget exceeded", kind=rk)
-                    continue
-                if has_png and row.image_png is None and has_base:
-                    # pdf branch (line_base column present): a successfully
-                    # parsed ZERO-page PDF arrives as one posexplode_outer
-                    # row with NULL image and NULL error. Falling back to
-                    # the resolver here would decode the raw PDF blob as an
-                    # image and manufacture a spurious error row (round-2
-                    # ADVICE) — emit a clean no-lines row instead.
-                    emit(row.doc_id, int(row.span_idx), base, None,
-                         row.media_ref, None, 0.0, None, kind=rk)
                     continue
                 try:
                     raw = bytes(
@@ -201,13 +181,13 @@ def make_ocr_stage(
                             pages = pages[: int(pdf_max_pages)]
                         if not pages:
                             # zero-page PDF: one clean no-lines row
-                            emit(row.doc_id, int(row.span_idx), base, None,
+                            emit(row.doc_id, int(row.span_idx), 0, None,
                                  row.media_ref, None, 0.0, None, kind=rk)
                             continue
                         page_imgs = [(pi * 100000, p) for pi, p in enumerate(pages)]
                     else:
                         page_imgs = [(0, raw)]
-                    for page_base, png in page_imgs:
+                    for base, png in page_imgs:
                         if isinstance(png, str):
                             # born-digital PDF page: the rasterizer hook
                             # (pdfio_page_source) extracted the text layer
@@ -218,47 +198,47 @@ def make_ocr_stage(
                             # the no-lines OCR row.
                             tlines = [l for l in png.split("\n") if l]
                             if not tlines:
-                                emit(row.doc_id, int(row.span_idx),
-                                     base + page_base, None, row.media_ref,
-                                     None, 0.0, None, kind=rk)
+                                emit(row.doc_id, int(row.span_idx), base, None,
+                                     row.media_ref, None, 0.0, None, kind=rk)
                             for li, tline in enumerate(tlines):
-                                emit(row.doc_id, int(row.span_idx),
-                                     base + page_base + li, tline,
-                                     row.media_ref, None, 1.0, None,
+                                emit(row.doc_id, int(row.span_idx), base + li,
+                                     tline, row.media_ref, None, 1.0, None,
                                      kind=rk)
                             continue
                         lines = ocr.ocr_page(bytes(png), max_side_limit)
                         t_lines = None
-                        if refine_below is not None and lines and any(
+                        if refine_below is not None and any(
                             lr.score < refine_below for lr in lines
                         ):
-                            # M2 analog: score-gated second pass with a finer
-                            # deskew grid; results ride transformer_text/score
-                            # per line (never overwrite the first pass)
-                            t_lines = _second_pass(bytes(png), max_side_limit, ocr)
+                            # M2 analog: score-gated second pass, the same
+                            # recipe on a finer deskew grid; results ride
+                            # transformer_text/score per line (never
+                            # overwrite the first pass)
+                            try:
+                                t_lines = ocr.ocr_page(bytes(png), max_side_limit,
+                                                       step=ocr.REFINE_STEP)
+                            except Exception:  # noqa: BLE001 — keep the first pass
+                                t_lines = None
                             if t_lines is not None and len(t_lines) != len(lines):
                                 # segmentation changed -> per-line alignment is
                                 # undefined; keep whichever whole pass scored
                                 # higher as the first pass, attach no transformer
-                                s1 = sum(lr.score for lr in lines) / max(len(lines), 1)
+                                s1 = sum(lr.score for lr in lines) / len(lines)
                                 s2 = sum(lr.score for lr in t_lines) / max(len(t_lines), 1)
                                 if s2 > s1:
                                     lines = t_lines
                                 t_lines = None
                         if not lines:
-                            emit(row.doc_id, int(row.span_idx), base + page_base,
-                                 None, row.media_ref, None, 0.0, None, kind=rk)
+                            emit(row.doc_id, int(row.span_idx), base, None,
+                                 row.media_ref, None, 0.0, None, kind=rk)
                         for li, lr in enumerate(lines):
-                            if min_score is not None and lr.score < min_score:
-                                continue
                             tt = t_lines[li].text if t_lines is not None else None
                             ts = float(t_lines[li].score) if t_lines is not None else None
-                            emit(row.doc_id, int(row.span_idx),
-                                 base + page_base + li, lr.text,
-                                 row.media_ref, lr.box, float(lr.score), None,
-                                 tt, ts, kind=rk)
+                            emit(row.doc_id, int(row.span_idx), base + li,
+                                 lr.text, row.media_ref, lr.box, float(lr.score),
+                                 None, tt, ts, kind=rk)
                 except Exception as e:  # noqa: BLE001 — M6 row-level absorption
-                    emit(row.doc_id, int(row.span_idx), base, None, row.media_ref,
+                    emit(row.doc_id, int(row.span_idx), 0, None, row.media_ref,
                          None, None, f"{type(e).__name__}: {e}", kind=rk)
             # object dtype per column: a batch whose rows were ALL dropped
             # (blank-after-normalize, zero-page PDFs) otherwise yields empty
@@ -271,35 +251,17 @@ def make_ocr_stage(
     return stage
 
 
-def _second_pass(png: bytes, max_side_limit: int, ocr):
-    """Fine-step re-recognition (reference TrOCR enhancement analog,
-    /root/reference/src/ui/app.py:525-538). Returns the refined line list,
-    or None on failure (caller keeps the first pass — error absorption)."""
-    import numpy as np
-
-    try:
-        gray = ocr.bounded_resize(ocr.decode_gray(png), max_side_limit)
-        mask = ocr.despeckle(ocr.binarize(gray))
-        angle = ocr.estimate_skew(mask, step=0.05)
-        if abs(angle) > 1e-9:
-            gray = ocr.rotate_gray(gray, angle, int(np.median(gray)))
-            mask = ocr.despeckle(ocr.binarize(gray))
-        return ocr.recognize_mask(mask)
-    except Exception:  # noqa: BLE001 — keep the first pass on failure
-        return None
-
-
 def make_refine_stage(
     blob_resolver: Callable[[str], bytes] | None = None,
     max_side_limit: int = 1500,
-    fine_step: float = 0.05,
     pdf_rasterizer: Callable[[bytes, float], list[bytes]] | str | None = "auto",
     pdf_zoom: float = 2.0,
     pdf_max_pages: int | None = None,
 ) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
     """Second-pass refinement (reference M2 / TrOCR analog,
     /root/reference/src/transformer_ocr.py:189-283): re-recognize a page
-    with a finer deskew grid and record the result in transformer_text /
+    with the first-pass recipe on the finer REFINE_STEP deskew grid
+    (kernels/ocr.ocr_page) and record the result in transformer_text /
     transformer_score (never overwriting the first pass — OCRResult carries
     both, /root/reference/src/custom_types/data.py:20-21; downstream P4
     coalesce picks the winner). The caller filters to low-score rows first
@@ -380,15 +342,8 @@ def make_refine_stage(
                 if page >= len(pages) or isinstance(pages[page], str):
                     lines = []
                 else:
-                    gray = ocr.bounded_resize(
-                        ocr.decode_gray(pages[page]), max_side_limit
-                    )
-                    mask = ocr.despeckle(ocr.binarize(gray))
-                    angle = ocr.estimate_skew(mask, step=fine_step)
-                    if abs(angle) > 1e-9:
-                        gray = ocr.rotate_gray(gray, angle, int(np.median(gray)))
-                        mask = ocr.despeckle(ocr.binarize(gray))
-                    lines = ocr.recognize_mask(mask)
+                    lines = ocr.ocr_page(pages[page], max_side_limit,
+                                         step=ocr.REFINE_STEP)
             except Exception:  # noqa: BLE001
                 lines = []
             line_cache[key] = lines
@@ -440,7 +395,9 @@ def make_refine_stage(
                     # SUBSET from the workbench, or a deskew artifact
                     # adding a spurious line), and index pairing would
                     # then attach the wrong line. Geometry works per row:
-                    # both passes run at the same resize scale, so the
+                    # both passes are one recipe (same resize scale, noise
+                    # erase and ink-bbox crop), so their boxes share a
+                    # frame up to the small angle difference, and the
                     # refined line with dominant vertical overlap IS the
                     # row's line.
                     if nl_all is not None:

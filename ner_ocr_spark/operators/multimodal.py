@@ -1,24 +1,16 @@
-"""Multimodal columns: image/audio/video as opaque binary + typed metadata.
+"""Multimodal columns: media as opaque binary + typed image metadata.
 
-Driver-brief operators for a training-data pipeline. The Spark-side
-plumbing (schemas, partitioning, Arrow batch shape, UDF signatures) is real
-and tested. Payload *decoding* is real for images — PNG in every 8-bit
+`image_features` decodes image payloads for real — PNG in every 8-bit
 color type (gray / RGB / palette / alpha, ner_ocr_spark.png) and baseline
 JPEG 4:4:4 / 4:2:0 (ner_ocr_spark.jpeg), dispatched by format sniffing in
-ner_ocr_spark.imageio — and for PCM-WAV audio (stdlib `wave` in
-`_wav_features`). Compressed audio (mp3/ogg/…) and video frame extraction
-remain STUBBED: by default they raise NotImplementedError per row (absorbed
-into the error column); with `deterministic_fake=True` they emit seeded
-fake features so the pipeline shape is testable end-to-end.
-
-All stages are mapInPandas over (media_ref, kind, payload) — payload bytes
-never shuffle (the stage is map-only; any downstream join moves features,
-not blobs).
+ner_ocr_spark.imageio — into dims, ink ratio and Otsu threshold. It is a
+mapInPandas over (media_ref, kind, payload): payload bytes never shuffle
+(the stage is map-only; any downstream join moves features, not blobs),
+and an undecodable payload becomes a per-row error.
 """
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Callable, Iterator
 
 import pandas as pd
@@ -29,7 +21,7 @@ from pyspark.sql import types as T
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_ref", T.StringType(), False),
-        T.StructField("kind", T.StringType(), False),  # image | audio | video
+        T.StructField("kind", T.StringType(), False),  # only "image" is featurized
         T.StructField("payload", T.BinaryType(), True),
         T.StructField("mime", T.StringType(), True),
     ]
@@ -45,30 +37,6 @@ IMAGE_FEATURES_SCHEMA = T.StructType(
         T.StructField("error", T.StringType(), True),
     ]
 )
-
-AUDIO_FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_ref", T.StringType(), False),
-        T.StructField("duration_ms", T.IntegerType(), True),
-        T.StructField("sample_rate", T.IntegerType(), True),
-        T.StructField("rms", T.DoubleType(), True),
-        T.StructField("error", T.StringType(), True),
-    ]
-)
-
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("media_ref", T.StringType(), False),
-        T.StructField("frame_idx", T.IntegerType(), False),
-        T.StructField("frame_png", T.BinaryType(), True),
-        T.StructField("error", T.StringType(), True),
-    ]
-)
-
-
-def _seed(ref: str, salt: str) -> int:
-    return int.from_bytes(hashlib.sha256(f"{salt}|{ref}".encode()).digest()[:4], "big")
-
 
 def image_features_stage() -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
     """REAL image decode: PNG (gray/RGB/palette/RGBA) or baseline JPEG ->
@@ -102,125 +70,7 @@ def image_features_stage() -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.Dat
     return stage
 
 
-def _wav_features(payload: bytes) -> tuple[int, int, float]:
-    """REAL decode for RIFF/PCM WAV (stdlib wave + numpy): duration_ms,
-    sample_rate, rms of the normalized signal."""
-    import io
-    import wave
-
-    import numpy as np
-
-    with wave.open(io.BytesIO(payload), "rb") as w:
-        sr = w.getframerate()
-        n = w.getnframes()
-        width = w.getsampwidth()
-        frames = w.readframes(n)
-    if width == 2:
-        x = np.frombuffer(frames, dtype="<i2").astype(np.float64) / 32768.0
-    elif width == 1:
-        x = (np.frombuffer(frames, dtype=np.uint8).astype(np.float64) - 128.0) / 128.0
-    else:
-        raise NotImplementedError(f"{8 * width}-bit WAV unsupported")
-    rms = float(np.sqrt((x * x).mean())) if len(x) else 0.0
-    return int(round(n * 1000 / sr)), sr, round(rms, 4)
-
-
-def audio_features_stage(
-    deterministic_fake: bool = False,
-) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
-    """Audio decode: REAL for RIFF/PCM WAV (stdlib wave — duration, sample
-    rate, rms); compressed formats (mp3/ogg/aac) have no codec in this
-    container and raise per row into the error column (honest absorption).
-    deterministic_fake=True emits seeded features for end-to-end shape
-    tests regardless of payload."""
-
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in AUDIO_FEATURES_SCHEMA.fieldNames()}
-            for row in pdf.itertuples(index=False):
-                out["media_ref"].append(row.media_ref)
-                if deterministic_fake:
-                    s = _seed(row.media_ref, "audio")
-                    out["duration_ms"].append(1000 + s % 60000)
-                    out["sample_rate"].append(16000)
-                    out["rms"].append(round((s % 1000) / 1000.0, 4))
-                    out["error"].append(None)
-                    continue
-                try:
-                    payload = bytes(row.payload) if row.payload is not None else b""
-                    if payload[:4] != b"RIFF":
-                        raise NotImplementedError(
-                            "compressed audio decode requires a codec "
-                            "library not present in this environment"
-                        )
-                    dur, sr, rms = _wav_features(payload)
-                    out["duration_ms"].append(dur)
-                    out["sample_rate"].append(sr)
-                    out["rms"].append(rms)
-                    out["error"].append(None)
-                except Exception as e:  # noqa: BLE001 — M6 absorption
-                    out["duration_ms"].append(None)
-                    out["sample_rate"].append(None)
-                    out["rms"].append(None)
-                    out["error"].append(f"{type(e).__name__}: {e}")
-            yield pd.DataFrame(out)
-
-    return stage
-
-
-def frame_sample_stage(
-    n_frames: int = 3, deterministic_fake: bool = False
-) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
-    """STUB video frame sampler (1:N expansion — the PDF->pages shape,
-    SURVEY.md §2.1 S3). deterministic_fake renders seeded gradient frames
-    through the real PNG encoder so downstream image stages compose."""
-
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from ner_ocr_spark.png import encode_gray
-
-        for pdf in batches:
-            out = {k: [] for k in FRAME_SCHEMA.fieldNames()}
-            for row in pdf.itertuples(index=False):
-                if deterministic_fake:
-                    s = _seed(row.media_ref, "video")
-                    for i in range(n_frames):
-                        g = np.fromfunction(
-                            lambda y, x: (x + y + s + 31 * i) % 256, (32, 32)
-                        ).astype(np.uint8)
-                        out["media_ref"].append(row.media_ref)
-                        out["frame_idx"].append(i)
-                        out["frame_png"].append(bytearray(encode_gray(g)))
-                        out["error"].append(None)
-                else:
-                    out["media_ref"].append(row.media_ref)
-                    out["frame_idx"].append(0)
-                    out["frame_png"].append(None)
-                    out["error"].append(
-                        "NotImplementedError: video decode requires a codec "
-                        "library not present in this environment"
-                    )
-            yield pd.DataFrame(out)
-
-    return stage
-
-
 def image_features(media: DataFrame) -> DataFrame:
     return media.filter("kind = 'image'").mapInPandas(
         image_features_stage(), IMAGE_FEATURES_SCHEMA
-    )
-
-
-def audio_features(media: DataFrame, deterministic_fake: bool = False) -> DataFrame:
-    return media.filter("kind = 'audio'").mapInPandas(
-        audio_features_stage(deterministic_fake), AUDIO_FEATURES_SCHEMA
-    )
-
-
-def sample_frames(
-    media: DataFrame, n_frames: int = 3, deterministic_fake: bool = False
-) -> DataFrame:
-    return media.filter("kind = 'video'").mapInPandas(
-        frame_sample_stage(n_frames, deterministic_fake), FRAME_SCHEMA
     )

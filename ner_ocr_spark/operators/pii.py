@@ -13,7 +13,7 @@ ASCII input.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
@@ -30,14 +30,6 @@ _PII = [
     ("ip", IPV4_RE, "<IP>"),
     ("phone", PHONE_RE, "<PHONE>"),
 ]
-
-
-def scrub_expr(col: Column) -> Column:
-    """The scrubbed text as a single chained-regexp_replace expression."""
-    out = col
-    for _, pat, token in _PII:
-        out = F.regexp_replace(out, pat, token)
-    return out
 
 
 def scrub_pii(df: DataFrame, text_col: str = "text") -> DataFrame:

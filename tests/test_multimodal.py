@@ -1,10 +1,9 @@
-"""Multimodal plumbing tests: real PNG image path, stubbed audio/video."""
+"""Multimodal plumbing tests: the real PNG image-features path."""
 
 from __future__ import annotations
 
 from ner_ocr_spark import corpus
 from ner_ocr_spark.operators import multimodal as mm
-from ner_ocr_spark.png import decode_gray
 
 
 def _media_df(spark):
@@ -19,61 +18,10 @@ def _media_df(spark):
 
 def test_image_features_real_decode(spark):
     out = {r["media_ref"]: r for r in mm.image_features(_media_df(spark)).collect()}
+    assert set(out) == {"img1", "img2"}  # non-image kinds are filtered out
     ok = out["img1"]
     assert ok["error"] is None
     assert ok["width"] > 0 and ok["height"] > 0
     assert 0.0 < ok["ink_ratio"] < 1.0
     bad = out["img2"]
     assert bad["error"] is not None and bad["width"] is None
-
-
-def test_audio_stub_absorbs_and_fake_works(spark):
-    media = _media_df(spark)
-    stub = mm.audio_features(media).collect()
-    assert len(stub) == 1 and "NotImplementedError" in stub[0]["error"]
-    fake = mm.audio_features(media, deterministic_fake=True).collect()[0]
-    assert fake["error"] is None and fake["sample_rate"] == 16000
-    fake2 = mm.audio_features(media, deterministic_fake=True).collect()[0]
-    assert fake.asDict() == fake2.asDict()  # deterministic
-
-
-def test_audio_wav_real_decode(spark):
-    """PCM WAV decodes for REAL (stdlib wave): duration, sample rate, and
-    the rms of a known sine wave."""
-    import io
-    import math
-    import struct
-    import wave
-
-    sr, n = 8000, 4000  # 500 ms
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(sr)
-        amp = 0.5
-        w.writeframes(b"".join(
-            struct.pack("<h", int(amp * 32767 * math.sin(2 * math.pi * 440 * t / sr)))
-            for t in range(n)
-        ))
-    rows = [("wav1", "audio", bytearray(buf.getvalue()), "audio/wav")]
-    media = spark.createDataFrame(rows, mm.MEDIA_SCHEMA)
-    got = mm.audio_features(media).collect()[0]
-    assert got["error"] is None
-    assert got["sample_rate"] == sr
-    assert got["duration_ms"] == 500
-    # rms of a sine of amplitude a is a/sqrt(2)
-    assert abs(got["rms"] - 0.5 / math.sqrt(2)) < 0.01
-
-
-def test_frame_sampling_expansion_composes_with_image_stage(spark):
-    media = _media_df(spark)
-    frames = mm.sample_frames(media, n_frames=3, deterministic_fake=True)
-    rows = frames.collect()
-    assert len(rows) == 3
-    assert sorted(r["frame_idx"] for r in rows) == [0, 1, 2]
-    # fake frames are real PNGs -> the real image stage can consume them
-    g = decode_gray(bytes(rows[0]["frame_png"]))
-    assert g.shape == (32, 32)
-    stub = mm.sample_frames(media, n_frames=3).collect()
-    assert len(stub) == 1 and "NotImplementedError" in stub[0]["error"]

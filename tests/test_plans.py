@@ -190,3 +190,24 @@ def test_get_spark_pins_performance_settings(spark):
     ).select(F.posexplode("a"))
     optimized = q._jdf.queryExecution().optimizedPlan().toString()
     assert "size(" not in optimized, optimized
+
+
+def test_curate_fence_keeps_hof_trees_out_of_keep_filters(spark):
+    """curate() fences each keep flag (`curation._fence`) so
+    PushPredicateThroughNonJoin cannot inline the map-only quality and
+    repetition trees into the `keep == 1` filters. Inlined, the word
+    split and the sorted gram-hash arrays are re-evaluated per predicate
+    reference (sort_array 2 -> 6, split 2 -> 29 in this plan; 110 s vs
+    13 s for the sf1 curation, see `_fence`). Each tree must appear once
+    in the optimized plan: the gopher and repetition word splits, and the
+    2- and 3-gram hash sorts."""
+    from ner_ocr_spark.curation import curate
+
+    docs = spark.createDataFrame(
+        [(1, "en", "the cat sat on the mat and the dog ran"),
+         (2, "de", "a b c")],
+        "doc_id long, lang string, text string",
+    )
+    plan = curate(docs, {"en": 1.0})._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("split(") == 2, plan
+    assert plan.count("sort_array(") == 2, plan

@@ -249,6 +249,36 @@ def test_refine_stage_pairs_rows_straddling_batches(spark):
         assert normalize_text(r["transformer_text"]) == truth[i]
 
 
+def test_refine_stage_pairs_first_pass_rows_on_skewed_page():
+    """The refine pass re-reads a page with the first pass's own recipe
+    (noise erase + ink-bbox crop, finer deskew grid), so its lines and
+    boxes line up with the first-pass rows. A separate copy of the recipe
+    without the noise erase and crop found a phantom line on this skewed
+    page and put its boxes in another frame, so neither first-pass row got
+    a transformer_text."""
+    import pandas as pd
+
+    from ner_ocr_spark import corpus
+    from ner_ocr_spark.kernels import ocr
+    from ner_ocr_spark.kernels.normalize import normalize_text
+    from ner_ocr_spark.operators.extract import make_refine_stage
+
+    ref = "doc00000011/m0"
+    truth = [normalize_text(t) for t in corpus.media_truth_text(ref)]
+    first_pass = ocr.ocr_page(corpus.render_media_blob(ref), 1500)
+    assert [normalize_text(lr.text) for lr in first_pass] == truth
+    batch = pd.DataFrame([{
+        "doc_id": "d", "span_idx": 0, "line_idx": i, "kind": "media",
+        "text": lr.text, "media_ref": ref,
+        "box": [float(v) for v in lr.box], "score": float(lr.score),
+        "transformer_text": None, "transformer_score": None,
+        "error": None, "n_lines": len(first_pass),
+    } for i, lr in enumerate(first_pass)])
+    out = pd.concat(list(make_refine_stage()(iter([batch]))))
+    got = list(out.sort_values("line_idx")["transformer_text"])
+    assert [normalize_text(t) if t is not None else None for t in got] == truth
+
+
 def test_enhancement_mixed_text_and_raster_pdf(spark):
     """Round-5: a PDF mixing a scanned page with a BORN-DIGITAL text
     page through the workbench enhance path — raster-page rows refine
