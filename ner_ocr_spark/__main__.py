@@ -116,6 +116,23 @@ def load_gazetteer(path: str | None) -> list[tuple[str, str]] | None:
     return out
 
 
+def write_counted(df, write) -> int:
+    """Run `write` on `df` and return the number of rows it wrote.
+    observe() piggybacks the count on the write job itself — a re-read (or
+    a separate count()) would re-scan everything just written / recompute
+    the pipeline for one log line."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    obs = Observation()
+    write(df.observe(obs, F.count(F.lit(1)).alias("n")))
+    return obs.get["n"]
+
+
+def write_parquet(path: str):
+    return lambda df: df.write.mode("overwrite").parquet(path)
+
+
 def main(argv: list[str] | None = None) -> int:
     args = parse_args(argv)
     from ner_ocr_spark import lineage
@@ -136,26 +153,15 @@ def main(argv: list[str] | None = None) -> int:
         # join the surviving text back so each shard file is directly
         # trainable (placement + payload); the placement side is the
         # post-curation survivor set
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-
         out = placed.join(docs.select("doc_id", "text"), "doc_id")
-        # observe() piggybacks the count on the write job itself — a
-        # re-read (or a separate count()) would re-scan everything just
-        # written / recompute the pipeline for one log line
-        obs = Observation("curate")
-        out = out.observe(obs, F.count(F.lit(1)).alias("n"))
-        write_training_shards(out, args.output)
+        n = write_counted(out, lambda d: write_training_shards(d, args.output))
         print(json.dumps({"mode": "curate", "output": args.output,
-                          "n_docs": obs.get["n"], "shards": args.shards,
+                          "n_docs": n, "shards": args.shards,
                           "budget": args.budget}))
         spark.stop()
         return 0
 
     if args.mode == "html":
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-
         from ner_ocr_spark.operators.html import (
             extract_main_content, extract_metadata,
         )
@@ -164,27 +170,20 @@ def main(argv: list[str] | None = None) -> int:
         out = extract_metadata(
             extract_main_content(pages, args.html_col), args.html_col
         ).select("*", "meta.*").drop("meta", args.html_col)
-        obs = Observation("html")
-        out = out.observe(obs, F.count(F.lit(1)).alias("n"))
-        out.write.mode("overwrite").parquet(args.output)
+        n = write_counted(out, write_parquet(args.output))
         print(json.dumps({"mode": "html", "output": args.output,
-                          "n_pages": obs.get["n"]}))
+                          "n_pages": n}))
         spark.stop()
         return 0
 
     if args.mode == "pdf":
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-
         from ner_ocr_spark.operators.pdf import pdf_report
 
         rows = spark.read.parquet(args.input)
         out = pdf_report(rows, payload_col=args.pdf_col, id_col=args.id_col)
-        obs = Observation("pdf")
-        out = out.observe(obs, F.count(F.lit(1)).alias("n"))
-        out.write.mode("overwrite").parquet(args.output)
+        n = write_counted(out, write_parquet(args.output))
         print(json.dumps({"mode": "pdf", "output": args.output,
-                          "n_rows": obs.get["n"]}))
+                          "n_rows": n}))
         spark.stop()
         return 0
 

@@ -21,8 +21,6 @@ class OCRConfig:
 
     max_side_limit: int = 1500
     ocr_timeout: int = 400  # per-batch wall budget, seconds
-    deskew_max_angle: float = 6.0
-    deskew_step: float = 0.25
 
 
 @dataclass
@@ -32,7 +30,6 @@ class RefineConfig:
 
     enabled: bool = False
     refine_below: float = 0.9
-    fine_step: float = 0.05
 
 
 @dataclass

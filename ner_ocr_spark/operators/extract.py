@@ -13,12 +13,13 @@ wall-clock guard replacing the reference's thread-pool timeout
 
 from __future__ import annotations
 
-import time
 from collections.abc import Callable, Iterator
 
 import pandas as pd
 
 from pyspark.sql import types as T
+
+from ner_ocr_spark.operators.rows import absorb_rows
 
 # one row per recognized OCR line (reference OCRResult analog, long form).
 # transformer_text/transformer_score carry the enhancement second pass
@@ -62,6 +63,16 @@ ENTITY_TYPE = T.ArrayType(
 )
 
 
+def tag_columns(tagger, text: str) -> dict:
+    """The entities/bio columns of one text, as both NER paths write them."""
+    ents, bio = tagger.tag(text)
+    return {
+        "entities": [{"entity_type": e.entity_type, "surface": e.surface,
+                      "start": e.start, "end": e.end} for e in ents],
+        "bio": bio,
+    }
+
+
 def make_ocr_stage(
     blob_resolver: Callable[[str], bytes] | None = None,
     batch_timeout_s: float = 400.0,
@@ -82,11 +93,12 @@ def make_ocr_stage(
     bytes ever shuffle).
 
     Output: OCR_SCHEMA, one row per recognized line, line_idx ordered
-    top-to-bottom; a failed row degrades to a single (text=None, error=...)
-    row so reassembly still sees the span (M6 error absorption).
-    batch_timeout_s mirrors the reference's 400 s OCR budget
-    (/root/reference/config.yaml:3): on breach, remaining rows in the batch
-    emit timeout-error rows instead of running.
+    top-to-bottom. The stage runs on the `absorb_rows` skeleton
+    (operators/rows.py): a span fails as a unit, so a failed span — any
+    of its pages — degrades to a single (text=None, error=...) row and
+    reassembly still sees the span (M6); batch_timeout_s is the
+    reference's 400 s OCR budget, and once a batch breaches it the
+    remaining rows emit timeout-error rows instead of running (M5).
 
     When `refine_below` is given, a page with any line scoring below it is
     re-read by the same kernel recipe on the finer REFINE_STEP deskew grid
@@ -94,14 +106,16 @@ def make_ocr_stage(
 
     When `gazetteer` is given, the stage also normalizes each recognized
     line (python twin of operators/normalize.normalize_expr — pinned equal
-    by tests) and appends entities/bio columns: media rows then cross the
-    Python boundary exactly ONCE (OCR+normalize+NER fused) instead of
-    OCR -> JVM normalize -> second python NER hop.
+    by tests), drops lines blank after normalizing and appends
+    entities/bio columns: media rows then cross the Python boundary
+    exactly ONCE (OCR+normalize+NER fused) instead of OCR -> JVM
+    normalize -> second python NER hop. Error rows are mode-invariant:
+    text, entities and bio stay NULL.
 
     When `pdf_rasterizer` is given, blobs sniffing as PDF (%PDF- magic)
     expand to pages IN-STAGE — each page OCRs with line_idx base
     page_idx * 100000 and `pdf_max_pages` truncates the page list
-    (reference max_num_imgs, /root/reference/src/pdf_processing.py:21-73).
+    (reference max_num_imgs, its src/pdf_processing.py:21-73).
     Fusing the 1:N expansion here (rather than a separate pdf branch with
     its own mapInPandas + posexplode, the round-2 design) keeps the plan at
     ONE source scan, ONE shuffle and ONE python crossing for mixed corpora,
@@ -114,139 +128,92 @@ def make_ocr_stage(
     from ner_ocr_spark.kernels.normalize import normalize_text
 
     resolver = blob_resolver or (lambda ref: corpus.render_media_blob(ref))
+    no_lines = {"score": 0.0}  # a page (or PDF) with no lines: one clean row
+
+    def page_lines(page) -> list[dict]:
+        """The line columns of one page, top to bottom."""
+        if isinstance(page, str):
+            # born-digital PDF page: the rasterizer hook (pdfio_page_source)
+            # extracted the text layer directly — its lines are exact,
+            # score 1.0, no OCR
+            return [{"text": t, "score": 1.0} for t in page.split("\n") if t]
+        lines = ocr.ocr_page(bytes(page), max_side_limit)
+        t_lines = None
+        if refine_below is not None and any(lr.score < refine_below for lr in lines):
+            # M2 analog: score-gated second pass, the same recipe on a finer
+            # deskew grid; results ride transformer_text/score per line
+            # (never overwrite the first pass)
+            try:
+                t_lines = ocr.ocr_page(bytes(page), max_side_limit,
+                                       step=ocr.REFINE_STEP)
+            except Exception:  # noqa: BLE001 — keep the first pass
+                t_lines = None
+            if t_lines is not None and len(t_lines) != len(lines):
+                # segmentation changed -> per-line alignment is undefined;
+                # keep whichever whole pass scored higher as the first
+                # pass, attach no transformer
+                s1 = sum(lr.score for lr in lines) / len(lines)
+                s2 = sum(lr.score for lr in t_lines) / max(len(t_lines), 1)
+                if s2 > s1:
+                    lines = t_lines
+                t_lines = None
+        out = [{"text": lr.text, "box": lr.box, "score": float(lr.score)}
+               for lr in lines]
+        for ln, tr in zip(out, t_lines or []):
+            ln["transformer_text"] = tr.text
+            ln["transformer_score"] = float(tr.score)
+        return out
+
+    def span_lines(row) -> list[tuple[int, dict]]:
+        """(line_idx, line columns) of every line of one media span."""
+        png = getattr(row, "image_png", None)
+        raw = bytes(png if png is not None else resolver(row.media_ref))
+        if pdf_rasterizer is not None and raw[:5] == b"%PDF-":
+            pages = pdf_rasterizer(raw, pdf_zoom)[:pdf_max_pages]
+            if not pages:
+                return [(0, no_lines)]
+        else:
+            pages = [raw]
+        out = []
+        for pi, page in enumerate(pages):
+            lines = page_lines(page) or [no_lines]
+            out.extend((pi * 100000 + li, ln) for li, ln in enumerate(lines))
+        return out
 
     def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         tagger = None
+        cols = list(OCR_SCHEMA.fieldNames())
         if gazetteer is not None:
             from ner_ocr_spark.kernels.ner import GazetteerTagger
 
             tagger = GazetteerTagger(gazetteer)
-        cols = list(OCR_SCHEMA.fieldNames())
-        if tagger is not None:
             cols += ["entities", "bio"]
-        for pdf in batches:
-            t0 = time.monotonic()
-            out: dict[str, list] = {k: [] for k in cols}
 
-            def emit(doc_id, span_idx, line_idx, text, media_ref, box, score,
-                     error, t_text=None, t_score=None, kind=None):
+        def span_key(row) -> dict:
+            return {"doc_id": row.doc_id, "span_idx": int(row.span_idx),
+                    "kind": row.kind, "media_ref": row.media_ref}
+
+        def rows_of(row) -> list[dict]:
+            key = span_key(row)
+            out = []
+            for li, ln in span_lines(row):
                 if tagger is not None:
-                    if error is not None:
-                        # error rows are mode-invariant: no normalization,
-                        # no tagging — text/entities/bio stay NULL exactly
-                        # as the non-fused path leaves them
-                        out["entities"].append(None)
-                        out["bio"].append(None)
-                    else:
-                        # P4 for real: the enhanced text wins when it
-                        # normalizes non-blank (python twin of
-                        # operators/normalize.refined_text_expr)
-                        text = normalize_text(t_text) or normalize_text(text)
-                        if not text:
-                            return  # blank-after-normalize filter (fused)
-                        ents, bio = tagger.tag(text)
-                        out["entities"].append(
-                            [{"entity_type": e.entity_type, "surface": e.surface,
-                              "start": e.start, "end": e.end} for e in ents]
-                        )
-                        out["bio"].append(bio)
-                out["doc_id"].append(doc_id)
-                out["span_idx"].append(span_idx)
-                out["line_idx"].append(line_idx)
-                out["kind"].append(kind)
-                out["text"].append(text)
-                out["media_ref"].append(media_ref)
-                out["box"].append(box)
-                out["score"].append(score)
-                out["transformer_text"].append(t_text)
-                out["transformer_score"].append(t_score)
-                out["error"].append(error)
+                    # P4 for real: the enhanced text wins when it normalizes
+                    # non-blank (python twin of
+                    # operators/normalize.refined_text_expr)
+                    text = (normalize_text(ln.get("transformer_text"))
+                            or normalize_text(ln.get("text")))
+                    if not text:
+                        continue  # blank-after-normalize filter (fused)
+                    ln = {**ln, "text": text, **tag_columns(tagger, text)}
+                out.append({**key, "line_idx": li, **ln})
+            return out
 
-            has_png = "image_png" in pdf.columns
-            for row in pdf.itertuples(index=False):
-                rk = row.kind
-                if time.monotonic() - t0 > batch_timeout_s:
-                    emit(row.doc_id, int(row.span_idx), 0, None, row.media_ref,
-                         None, None, "timeout: batch OCR budget exceeded", kind=rk)
-                    continue
-                try:
-                    raw = bytes(
-                        row.image_png
-                        if has_png and row.image_png is not None
-                        else resolver(row.media_ref)
-                    )
-                    if pdf_rasterizer is not None and raw[:5] == b"%PDF-":
-                        pages = pdf_rasterizer(raw, pdf_zoom)
-                        if pdf_max_pages is not None:
-                            pages = pages[: int(pdf_max_pages)]
-                        if not pages:
-                            # zero-page PDF: one clean no-lines row
-                            emit(row.doc_id, int(row.span_idx), 0, None,
-                                 row.media_ref, None, 0.0, None, kind=rk)
-                            continue
-                        page_imgs = [(pi * 100000, p) for pi, p in enumerate(pages)]
-                    else:
-                        page_imgs = [(0, raw)]
-                    for base, png in page_imgs:
-                        if isinstance(png, str):
-                            # born-digital PDF page: the rasterizer hook
-                            # (pdfio_page_source) extracted the text layer
-                            # directly — emit its lines EXACTLY, score 1.0,
-                            # no OCR (cheaper AND error-free vs the
-                            # reference's rasterize-then-OCR for these
-                            # pages). A text page with no lines mirrors
-                            # the no-lines OCR row.
-                            tlines = [l for l in png.split("\n") if l]
-                            if not tlines:
-                                emit(row.doc_id, int(row.span_idx), base, None,
-                                     row.media_ref, None, 0.0, None, kind=rk)
-                            for li, tline in enumerate(tlines):
-                                emit(row.doc_id, int(row.span_idx), base + li,
-                                     tline, row.media_ref, None, 1.0, None,
-                                     kind=rk)
-                            continue
-                        lines = ocr.ocr_page(bytes(png), max_side_limit)
-                        t_lines = None
-                        if refine_below is not None and any(
-                            lr.score < refine_below for lr in lines
-                        ):
-                            # M2 analog: score-gated second pass, the same
-                            # recipe on a finer deskew grid; results ride
-                            # transformer_text/score per line (never
-                            # overwrite the first pass)
-                            try:
-                                t_lines = ocr.ocr_page(bytes(png), max_side_limit,
-                                                       step=ocr.REFINE_STEP)
-                            except Exception:  # noqa: BLE001 — keep the first pass
-                                t_lines = None
-                            if t_lines is not None and len(t_lines) != len(lines):
-                                # segmentation changed -> per-line alignment is
-                                # undefined; keep whichever whole pass scored
-                                # higher as the first pass, attach no transformer
-                                s1 = sum(lr.score for lr in lines) / len(lines)
-                                s2 = sum(lr.score for lr in t_lines) / max(len(t_lines), 1)
-                                if s2 > s1:
-                                    lines = t_lines
-                                t_lines = None
-                        if not lines:
-                            emit(row.doc_id, int(row.span_idx), base, None,
-                                 row.media_ref, None, 0.0, None, kind=rk)
-                        for li, lr in enumerate(lines):
-                            tt = t_lines[li].text if t_lines is not None else None
-                            ts = float(t_lines[li].score) if t_lines is not None else None
-                            emit(row.doc_id, int(row.span_idx), base + li,
-                                 lr.text, row.media_ref, lr.box, float(lr.score),
-                                 None, tt, ts, kind=rk)
-                except Exception as e:  # noqa: BLE001 — M6 row-level absorption
-                    emit(row.doc_id, int(row.span_idx), 0, None, row.media_ref,
-                         None, None, f"{type(e).__name__}: {e}", kind=rk)
-            # object dtype per column: a batch whose rows were ALL dropped
-            # (blank-after-normalize, zero-page PDFs) otherwise yields empty
-            # float64 columns that Arrow cannot convert to list/struct types
-            # ("NumPyConverter doesn't implement list<double>")
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype=object) for k, v in out.items()}
-            )
+        def error_row(row, msg: str) -> dict:
+            return {**span_key(row), "line_idx": 0, "error": msg}
+
+        yield from absorb_rows(batches, cols, rows_of, error_row,
+                               budget_s=batch_timeout_s)
 
     return stage
 
@@ -281,13 +248,18 @@ def make_refine_stage(
     When an input batch carries an `image_png` column (the blobs= media
     path, where payloads ride the rows instead of resolving by ref), the
     group's first non-null payload IS the blob — the resolver is only the
-    fallback. When it carries an `n_lines` column (the page's TRUE
-    first-pass line count — workbench attaches it via a window), the
-    index-pairing fast path is judged against that instead of the
-    batch-local max line index, which an Arrow batch straddle can fool
-    (dense prefix + coincidental count match → wrong lines). Output:
-    OCR_SCHEMA rows (extras dropped). Failures — and rows already
-    carrying an error — keep the first-pass row (error absorption)."""
+    fallback.
+
+    Pairing is by geometry alone: both passes are one recipe with one box
+    frame (same resize scale, noise erase and ink-bbox crop; the angles
+    differ slightly), so a row takes the refined line whose box covers the
+    most of the row's height, and only when that covers at least half of
+    it. Line counts and line indexes never enter, so a page split across
+    Arrow batches, a low-score subset of its rows, or a fine pass that
+    finds a spurious extra line cannot shift the pairing. Output:
+    OCR_SCHEMA rows (extras dropped). Failures, rows without a box, and
+    rows already carrying an error keep the first-pass row (error
+    absorption)."""
     from ner_ocr_spark import corpus
     from ner_ocr_spark.kernels import ocr
 
@@ -353,90 +325,47 @@ def make_refine_stage(
 
         for pdf in batches:
             pdf = pdf.copy()
-            li_all = pdf["line_idx"].to_numpy().astype(int)
+            pg_all = pdf["line_idx"].to_numpy().astype(int) // 100000
             # error rows never refine (M6: they carry no geometry/text and
-            # must stay NULL through both transformer columns)
-            ok_all = pdf["error"].isna().to_numpy()
+            # must stay NULL through both transformer columns); rows
+            # without a box have nothing to pair by
+            ok_all = (pdf["error"].isna() & pdf["box"].notna()).to_numpy()
+            boxes = pdf["box"].to_numpy()
             has_payload = "image_png" in pdf.columns
-            nl_all = (
-                pdf["n_lines"].to_numpy() if "n_lines" in pdf.columns else None
-            )
-            # one decode per page, vectorized assignment per media_ref group
-            # (no per-row python loop, no .at writes — round-2 verdict #5)
+            # one decode per page, vectorized pairing per page (no per-row
+            # python loop, no .at writes — round-2 verdict #5)
             for ref, pos in pdf.groupby("media_ref", sort=False).indices.items():
                 payload = None
                 if has_payload:
-                    for v in pdf["image_png"].iloc[pos]:
-                        if v is not None:
-                            payload = v
-                            break
-                li = li_all[pos]
-                pg = li // 100000  # 0 for native media, page_idx for pdf rows
+                    payload = next(
+                        (v for v in pdf["image_png"].iloc[pos] if v is not None),
+                        None,
+                    )
+                pg = pg_all[pos]  # 0 for native media, page_idx for pdf rows
                 for page in np.unique(pg):
+                    rows = pos[(pg == page) & ok_all[pos]]
+                    if not len(rows):
+                        continue
                     lines = refined_lines(ref, int(page), payload)
                     if not lines:
                         continue
-                    on_page = pg == page
-                    lp = li[on_page] % 100000
-                    in_range = (lp < len(lines)) & ok_all[pos][on_page]
-                    # Pairing rows to refined lines. Fast path: when the
-                    # fine-deskew segmentation agrees with the first pass,
-                    # indices pair exactly. "Agrees" is judged against the
-                    # page's TRUE first-pass line count when the caller
-                    # carries it (optional `n_lines` column — workbench
-                    # attaches it via a window; a batch-local max is
-                    # fooled by a dense-prefix batch straddle whose count
-                    # coincidentally matches a changed segmentation).
-                    # Without n_lines, fall back to the batch-local
-                    # inference tightened to a dense-COMPLETE index set
-                    # (max+1 AND row count must both equal len(lines)).
-                    # Otherwise pair by LINE GEOMETRY — counts can
-                    # disagree legitimately (a partial batch, a low-score
-                    # SUBSET from the workbench, or a deskew artifact
-                    # adding a spurious line), and index pairing would
-                    # then attach the wrong line. Geometry works per row:
-                    # both passes are one recipe (same resize scale, noise
-                    # erase and ink-bbox crop), so their boxes share a
-                    # frame up to the small angle difference, and the
-                    # refined line with dominant vertical overlap IS the
-                    # row's line.
-                    if nl_all is not None:
-                        nlv = nl_all[pos[on_page]]
-                        agree = len(nlv) > 0 and not pd.isna(nlv[0]) \
-                            and int(nlv[0]) == len(lines)
-                    else:
-                        agree = (
-                            len(lines) == int(lp.max()) + 1
-                            and len(np.unique(lp)) == len(lines)
-                        )
-                    if agree:
-                        hit = lp[in_range]
-                    else:
-                        boxes = pdf["box"].iloc[pos[on_page]].to_numpy()
-                        ly = np.array(
-                            [(l.box[1], l.box[3]) if l.box is not None
-                             else (np.nan, np.nan) for l in lines]
-                        )
-                        hit_list, keep = [], []
-                        for row_i, box in enumerate(boxes):
-                            if not in_range[row_i] or box is None:
-                                continue
-                            y1, y2 = float(box[1]), float(box[3])
-                            ov = np.minimum(ly[:, 1], y2) - np.maximum(ly[:, 0], y1)
-                            j = int(np.nanargmax(ov)) if len(ov) else -1
-                            # dominant overlap: >= half the row's height
-                            if j >= 0 and ov[j] >= 0.5 * max(y2 - y1, 1e-9):
-                                hit_list.append(j)
-                                keep.append(row_i)
-                        if not keep:
-                            continue
-                        in_range = np.zeros_like(in_range)
-                        in_range[keep] = True
-                        hit = np.array(hit_list)
-                    sel = pdf.index[pos[on_page][in_range]]
-                    pdf.loc[sel, "transformer_text"] = [lines[i].text for i in hit]
+                    ry = np.array([(b[1], b[3]) for b in boxes[rows]], dtype=float)
+                    ly = np.array([(ln.box[1], ln.box[3]) for ln in lines],
+                                  dtype=float)
+                    # cover[r, j]: how much of row r's height line j covers
+                    cover = (np.minimum(ry[:, 1:], ly[:, 1])
+                             - np.maximum(ry[:, :1], ly[:, 0]))
+                    best = cover.argmax(axis=1)
+                    hit = (cover[np.arange(len(rows)), best]
+                           >= 0.5 * np.maximum(ry[:, 1] - ry[:, 0], 1e-9))
+                    if not hit.any():
+                        continue
+                    sel = pdf.index[rows[hit]]
+                    pdf.loc[sel, "transformer_text"] = [
+                        lines[j].text for j in best[hit]
+                    ]
                     pdf.loc[sel, "transformer_score"] = [
-                        float(lines[i].score) for i in hit
+                        float(lines[j].score) for j in best[hit]
                     ]
             # project to the declared output schema (the input batch may
             # carry an extra image_png payload column)
@@ -479,21 +408,16 @@ def make_ner_stage(
                     # ride the SAME crossing (a separate Arrow stage would
                     # re-scan the source — pipeline comment); blanks drop,
                     # failures absorb per row (M6: error set, text NULL)
-                    from ner_ocr_spark.htmlx import main_text
+                    from ner_ocr_spark.htmlx import main_text_or_error
                     from ner_ocr_spark.kernels.normalize import (
                         normalize_text,
                     )
 
-                    texts, errs = [], []
-                    for h in pdf.loc[mask, text_col]:
-                        try:
-                            texts.append(normalize_text(main_text(h)))
-                            errs.append(None)
-                        except Exception as e:  # noqa: BLE001
-                            texts.append(None)
-                            errs.append(f"html: {type(e).__name__}: {e}")
+                    texts, errs = main_text_or_error(pdf.loc[mask, text_col])
                     pdf = pdf.copy()
-                    pdf.loc[mask, text_col] = texts
+                    pdf.loc[mask, text_col] = [
+                        None if t is None else normalize_text(t) for t in texts
+                    ]
                     if "error" in pdf.columns:
                         pdf.loc[mask, "error"] = errs
                     keep = ~(
@@ -502,20 +426,11 @@ def make_ner_stage(
                                                      dtype=object)).isna()
                     )
                     pdf = pdf[keep]
-            ents_col, bio_col = [], []
-            for text in pdf[text_col]:
-                ents, bio = tagger.tag(text if isinstance(text, str) else "")
-                ents_col.append(
-                    [
-                        {"entity_type": e.entity_type, "surface": e.surface,
-                         "start": e.start, "end": e.end}
-                        for e in ents
-                    ]
-                )
-                bio_col.append(bio)
+            tagged = [tag_columns(tagger, t if isinstance(t, str) else "")
+                      for t in pdf[text_col]]
             pdf = pdf.copy()
-            pdf["entities"] = ents_col
-            pdf["bio"] = bio_col
+            pdf["entities"] = [t["entities"] for t in tagged]
+            pdf["bio"] = [t["bio"] for t in tagged]
             if "error" in pdf.columns:
                 # M6: error rows never gain tagging output
                 em = pdf["error"].notna()

@@ -39,20 +39,13 @@ def _main_text_udf(htmls: pd.Series) -> pd.Series:
 def _main_text_err_udf(htmls: pd.Series) -> pd.DataFrame:
     """Error-carrying twin of `_main_text_udf` for the pipeline's no-NER
     html branch: a failing page must become an ERROR ROW (text NULL,
-    error set — same "html: <Type>: <msg>" format the fused NER stage
-    writes), never a silently dropped row, so span sequences stay
+    error set — `htmlx.main_text_or_error`, the copy the fused NER stage
+    calls too), never a silently dropped row, so span sequences stay
     identical between NER modes for malformed HTML (M6 mode
     invariance)."""
-    from ner_ocr_spark.htmlx import main_text
+    from ner_ocr_spark.htmlx import main_text_or_error
 
-    texts, errs = [], []
-    for h in htmls:
-        try:
-            texts.append(main_text(h))
-            errs.append(None)
-        except Exception as e:  # noqa: BLE001 — per-row absorption (M6)
-            texts.append(None)
-            errs.append(f"html: {type(e).__name__}: {e}")
+    texts, errs = main_text_or_error(htmls)
     return pd.DataFrame({"text": texts, "error": errs})
 
 

@@ -46,26 +46,20 @@ def image_features_stage() -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.Dat
     def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ner_ocr_spark.imageio import decode_image_gray as decode_gray
         from ner_ocr_spark.kernels import ocr
+        from ner_ocr_spark.operators.rows import absorb_rows
 
-        for pdf in batches:
-            out = {k: [] for k in IMAGE_FEATURES_SCHEMA.fieldNames()}
-            for row in pdf.itertuples(index=False):
-                out["media_ref"].append(row.media_ref)
-                try:
-                    gray = decode_gray(bytes(row.payload))
-                    t = ocr.otsu_threshold(gray)
-                    out["height"].append(int(gray.shape[0]))
-                    out["width"].append(int(gray.shape[1]))
-                    out["ink_ratio"].append(float((gray <= t).mean()))
-                    out["otsu"].append(int(t))
-                    out["error"].append(None)
-                except Exception as e:  # noqa: BLE001
-                    out["height"].append(None)
-                    out["width"].append(None)
-                    out["ink_ratio"].append(None)
-                    out["otsu"].append(None)
-                    out["error"].append(f"{type(e).__name__}: {e}")
-            yield pd.DataFrame(out)
+        def rows_of(row) -> list[dict]:
+            gray = decode_gray(bytes(row.payload))
+            t = ocr.otsu_threshold(gray)
+            return [{"media_ref": row.media_ref,
+                     "height": int(gray.shape[0]), "width": int(gray.shape[1]),
+                     "ink_ratio": float((gray <= t).mean()), "otsu": int(t)}]
+
+        def error_row(row, msg: str) -> dict:
+            return {"media_ref": row.media_ref, "error": msg}
+
+        yield from absorb_rows(batches, IMAGE_FEATURES_SCHEMA.fieldNames(),
+                               rows_of, error_row)
 
     return stage
 

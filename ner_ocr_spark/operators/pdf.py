@@ -81,48 +81,31 @@ def pdf_report(
     mapInPandas — payload bytes never shuffle."""
 
     def stage(batches):
-        import pandas as pd
-
         from ner_ocr_spark import pdfio
+        from ner_ocr_spark.operators.rows import absorb_rows
 
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in PDF_REPORT_SCHEMA.fieldNames()}
+        def rows_of(row) -> list[dict]:
+            did = str(getattr(row, id_col))
+            blob = bytes(getattr(row, payload_col))
+            info = pdfio.pdf_info(blob)
+            doc = {"doc_id": did, "title": info.get("Title"),
+                   "author": info.get("Author"),
+                   "n_pages": int(info.get("n_pages", 0))}
+            pages = pdfio.extract_page_content(blob)
+            if not pages:
+                return [{**doc, "n_pages": 0}]
+            return [
+                {**doc, "page_idx": pi, "page_kind": kind,
+                 **({"page_text": "\n".join(v), "n_lines": len(v)}
+                    if kind == "text" else {})}
+                for pi, (kind, v) in enumerate(pages)
+            ]
 
-            def emit(did, page_idx=None, kind=None, text=None, n_lines=None,
-                     title=None, author=None, n_pages=None, error=None):
-                out["doc_id"].append(str(did))
-                out["page_idx"].append(page_idx)
-                out["page_kind"].append(kind)
-                out["page_text"].append(text)
-                out["n_lines"].append(n_lines)
-                out["title"].append(title)
-                out["author"].append(author)
-                out["n_pages"].append(n_pages)
-                out["error"].append(error)
+        def error_row(row, msg: str) -> dict:
+            return {"doc_id": str(getattr(row, id_col)), "error": msg}
 
-            for row in pdf.itertuples(index=False):
-                did = getattr(row, id_col)
-                try:
-                    blob = bytes(getattr(row, payload_col))
-                    info = pdfio.pdf_info(blob)
-                    title = info.get("Title")
-                    author = info.get("Author")
-                    n_pages = int(info.get("n_pages", 0))
-                    pages = pdfio.extract_page_content(blob)
-                    if not pages:
-                        emit(did, title=title, author=author, n_pages=0)
-                    for pi, (kind, v) in enumerate(pages):
-                        if kind == "text":
-                            emit(did, pi, "text", "\n".join(v), len(v),
-                                 title, author, n_pages)
-                        else:
-                            emit(did, pi, "image", None, None,
-                                 title, author, n_pages)
-                except Exception as e:  # noqa: BLE001 — M6 absorption
-                    emit(did, error=f"{type(e).__name__}: {e}")
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype=object) for k, v in out.items()}
-            )
+        yield from absorb_rows(batches, PDF_REPORT_SCHEMA.fieldNames(),
+                               rows_of, error_row)
 
     return df.select(id_col, payload_col).mapInPandas(
         stage, PDF_REPORT_SCHEMA

@@ -143,21 +143,10 @@ class Workbench:
         hit = media_rows.join(F.broadcast(hit_refs), "media_ref", "left_semi")
         rest = media_rows.join(F.broadcast(hit_refs), "media_ref", "left_anti")
         opts = self._extract_opts
-        # carry the page's TRUE first-pass line count into the stage: the
-        # in-batch index-pairing fast path must not be fooled by an Arrow
-        # batch holding a dense prefix of a page whose segmentation the
-        # fine pass changed (coincidental count match). The window's
-        # (media_ref, page) exchange also co-locates page rows, so batches
-        # rarely straddle a page at all.
-        from pyspark.sql import Window
-
-        page_w = Window.partitionBy(
-            "media_ref", F.floor(F.col("line_idx") / 100000)
-        )
-        refine_in = hit.select(*OCR_SCHEMA.fieldNames()).withColumn(
-            "n_lines",
-            (F.max(F.col("line_idx") % 100000).over(page_w) + 1).cast("int"),
-        )
+        # the refine stage pairs rows to refined lines by box geometry
+        # alone, so it needs no page-level line count and no co-location
+        # of a page's rows: a plain projection feeds it
+        refine_in = hit.select(*OCR_SCHEMA.fieldNames())
         if opts.get("blobs") is not None:
             # blobs= media path: payloads ride the rows (there may be no
             # resolver at all — and the default resolver FABRICATES a

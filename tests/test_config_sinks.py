@@ -11,6 +11,7 @@ REFERENCE_STYLE_YAML = """
 ocr:
   max_side_limit: 1200
   ocr_timeout: 300
+  deskew_step: 0.25                     # dropped engine knob: ignored
   use_doc_orientation_classify: false   # reference-only knob: ignored
   device: cpu                           # reference-only knob: ignored
 transformer_ocr:

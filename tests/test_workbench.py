@@ -110,17 +110,23 @@ def test_refine_stage_skips_error_rows(spark):
     first pass failed, e.g. timeout)."""
     import pandas as pd
 
+    from ner_ocr_spark import corpus
+    from ner_ocr_spark.kernels import ocr
     from ner_ocr_spark.operators.extract import make_refine_stage
 
     # any ref renders: corpus.render_media_blob is a pure function of the
-    # key; this one renders a straight 2-line page, so rows at line 0/1
-    # satisfy the refine alignment guard (len(lines) == max idx + 1)
+    # key; this one renders a straight 2-line page. Both rows carry their
+    # real first-pass boxes, so geometry would pair each of them — only
+    # the error keeps row 0 unrefined
     ref = "media/error-guard/0"
+    boxes = [[float(v) for v in lr.box]
+             for lr in ocr.ocr_page(corpus.render_media_blob(ref), 1500)]
+    assert len(boxes) == 2
     batch = pd.DataFrame({
         "doc_id": ["d", "d"], "span_idx": [0, 0], "line_idx": [0, 1],
         "kind": ["media", "media"], "text": [None, "SOME TEXT"],
         "media_ref": [ref, ref],
-        "box": [None, [0.0, 0.0, 1.0, 1.0]], "score": [None, 0.5],
+        "box": boxes, "score": [None, 0.5],
         "transformer_text": [None, None], "transformer_score": [None, None],
         "error": ["timeout: batch OCR budget exceeded", None],
     })
@@ -173,12 +179,12 @@ def test_enhancement_uses_blobs_payloads(spark):
 def test_refine_stage_n_lines_beats_coincidental_count_match(spark):
     """Batch-straddle coincidence (round-3 advice): a batch holding a dense
     PREFIX of a page's rows (lp 0..k) whose refined segmentation happens to
-    find k+1 lines passes the batch-local count check, but the page's TRUE
-    first-pass count can differ — index pairing would then attach the wrong
-    lines. With the caller-supplied `n_lines` (true count) the stage must
-    fall through to geometry pairing. Proof: the rows' boxes are SWAPPED
-    relative to their line_idx, so geometry and index pairing give
-    different answers."""
+    find k+1 lines would pass a batch-local count check, but the page's
+    TRUE first-pass count can differ — index pairing would then attach the
+    wrong lines. The stage pairs by geometry alone, whatever line count
+    the caller claims (the extra `n_lines` column here is ignored). Proof:
+    the rows' boxes are SWAPPED relative to their line_idx, so geometry
+    and index pairing give different answers."""
     import pandas as pd
 
     from ner_ocr_spark import corpus
