@@ -1,10 +1,10 @@
-"""Round-6 optimization harness: noop-sink isolation per stage/query
-(guide §1.4) — NOT the driver's bench (bench.py is frozen; this file only
-feeds OPTIMIZATION_r06.md evidence).
+"""Round-6 optimization harness: noop-sink timing of single queries and
+plan dumps — not bench.py (whose one-line JSON contract is fixed); this
+file only feeds OPTIMIZATION_r06.md evidence. Per-layer breakdowns of
+extraction and curation come from `perfbench/run.py --trace 1`, which
+reads them from Spark's plan metrics and timed stage replays.
 
 Usage:
-    python bench_extra.py e2e       # extraction pipeline stage breakdown
-    python bench_extra.py curation  # curation pipeline stage breakdown
     python bench_extra.py queries [name ...]   # individual bench queries
     python bench_extra.py plans [name ...]     # dump explain("formatted")
 
@@ -53,123 +53,6 @@ def best_of(spark, label, make_df, reps=REPS):
     return round(best, 3)
 
 
-def run_e2e():
-    import __spark_entry__ as entry
-    from ner_ocr_spark import pipeline
-    from ner_ocr_spark.operators.extract import (
-        make_ner_stage, make_ocr_stage, ocr_ner_schema,
-    )
-    from pyspark.sql import functions as F
-
-    spark = _spark()
-    docs = entry.interleaved_documents(spark, SF_DIR)
-    n = docs.count()
-    print(f"docs: {n}")
-    out = {}
-    out["docs_scan"] = best_of(spark, "docs_scan", lambda: docs)
-    out["explode"] = best_of(
-        spark, "explode", lambda: pipeline.explode_spans(docs)
-    )
-
-    def text_branch_only():
-        spans = pipeline.explode_spans(docs)
-        from ner_ocr_spark.operators.normalize import normalize_expr
-
-        return (
-            spans.filter(F.col("kind").isin(["text", "html"]))
-            .select(
-                "doc_id", "span_idx",
-                F.when(F.col("kind") == "text",
-                       normalize_expr(F.col("text")))
-                .otherwise(F.col("text")).alias("text"),
-            )
-            .filter(F.length("text") > 0)
-        )
-
-    out["text_branch_jvm"] = best_of(
-        spark, "text_branch_jvm", text_branch_only
-    )
-
-    def full_no_media():
-        # text+html spans through the NER python crossing (no media rows)
-        ex = pipeline.extract_spans(
-            docs.select(
-                "doc_id",
-                F.filter(
-                    F.col("spans"), lambda s: s["kind"].isin(["text", "html"])
-                ).alias("spans"),
-            )
-        )
-        return ex
-
-    out["extract_text_only"] = best_of(
-        spark, "extract_text_only", full_no_media
-    )
-
-    def media_only():
-        ex = pipeline.extract_spans(
-            docs.select(
-                "doc_id",
-                F.filter(
-                    F.col("spans"), lambda s: s["kind"].isin(["media", "pdf"])
-                ).alias("spans"),
-            )
-        )
-        return ex
-
-    out["extract_media_only"] = best_of(
-        spark, "extract_media_only", media_only
-    )
-    out["extract_full"] = best_of(
-        spark, "extract_full", lambda: pipeline.extract_spans(docs)
-    )
-    out["extract_assemble"] = best_of(
-        spark, "extract_assemble",
-        lambda: pipeline.assemble_documents(pipeline.extract_spans(docs)),
-    )
-    print(json.dumps({"sf_dir": SF_DIR, "stages": out}))
-    spark.stop()
-
-
-def run_curation():
-    import __spark_entry__ as entry
-    from ner_ocr_spark.curation import curate
-    from ner_ocr_spark.operators.packing import pack_sequences, shard_hash_md5
-    from ner_ocr_spark.operators.sampling import stratified_sample, unit_hash_md5
-    from ner_ocr_spark.operators.textstats import gopher_filter, repetition_stats
-    from pyspark.sql import functions as F
-
-    spark = _spark()
-    docs = entry._t(spark, SF_DIR, "documents")
-    print(f"docs: {docs.count()}")
-    out = {}
-    out["scan"] = best_of(spark, "scan", lambda: docs)
-    out["gopher"] = best_of(
-        spark, "gopher", lambda: gopher_filter(docs.select("doc_id", "lang", "text"))
-    )
-    out["repetition"] = best_of(
-        spark, "repetition",
-        lambda: repetition_stats(docs.select("doc_id", "lang", "text")),
-    )
-    out["pack_alone"] = best_of(
-        spark, "pack_alone",
-        lambda: pack_sequences(
-            docs.select("doc_id", "text"), budget=256, shards=8,
-            shard_hash=shard_hash_md5,
-        ),
-    )
-    out["curate_full"] = best_of(
-        spark, "curate_full",
-        lambda: curate(
-            docs, {"en": 0.6, "de": 0.3}, default_rate=0.2, budget=256,
-            shards=8, seed=7, unit_hash=unit_hash_md5,
-            shard_hash=shard_hash_md5,
-        ),
-    )
-    print(json.dumps({"sf_dir": SF_DIR, "stages": out}))
-    spark.stop()
-
-
 def run_queries(names):
     import __spark_entry__ as entry
 
@@ -206,12 +89,8 @@ def dump_plans(names, outdir="plans/r06", suffix="before"):
 
 
 if __name__ == "__main__":
-    mode = sys.argv[1] if len(sys.argv) > 1 else "e2e"
-    if mode == "e2e":
-        run_e2e()
-    elif mode == "curation":
-        run_curation()
-    elif mode == "queries":
+    mode = sys.argv[1] if len(sys.argv) > 1 else None
+    if mode == "queries":
         run_queries(sys.argv[2:])
     elif mode == "plans":
         names = sys.argv[2:]
@@ -221,4 +100,4 @@ if __name__ == "__main__":
             names = names[1:]
         dump_plans(names, suffix=suffix)
     else:
-        raise SystemExit(f"unknown mode {mode}")
+        raise SystemExit(__doc__)

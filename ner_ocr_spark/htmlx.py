@@ -339,11 +339,11 @@ def main_text(html: str | bytes | None) -> str:
 
 def main_text_or_error(htmls) -> tuple[list[str | None], list[str | None]]:
     """`main_text` per page, absorbing failures per row (M6): a failing
-    page reads text None and error "html: <Type>: <message>". The one
-    copy shared by the fused NER stage's html branch and the no-NER html
-    UDF, so both pipeline modes write the same error rows. It lives here,
-    not in operators/html.py: importing that module on a worker builds its
-    module-level pandas UDFs, which need an active session."""
+    page reads text None and error "html: <Type>: <message>". The NER
+    stage's html branch calls it; the pipeline routes html rows through
+    that stage in both NER modes. It lives here, not in operators/html.py:
+    importing that module on a worker builds its module-level pandas UDFs,
+    which need an active session."""
     texts, errs = [], []
     for h in htmls:
         try:

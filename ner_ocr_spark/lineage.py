@@ -76,9 +76,13 @@ def remaining_documents(
 
 def partition_metrics(extracted: DataFrame, run_id: str, chunk: int) -> DataFrame:
     """Per-partition metrics rows: doc/span/error counts keyed by the
-    physical partition that produced them."""
+    physical partition that produced them, plus one rollup total row
+    (partition_id NULL; its n_docs is the distinct doc count of the whole
+    input). The rollup groups a materialized partition_id column:
+    rollup(spark_partition_id()) itself fails analysis."""
     return (
-        extracted.groupBy(F.spark_partition_id().alias("partition_id"))
+        extracted.withColumn("partition_id", F.spark_partition_id())
+        .rollup("partition_id")
         .agg(
             F.countDistinct("doc_id").alias("n_docs"),
             F.count("*").alias("n_spans"),
@@ -93,6 +97,41 @@ def partition_metrics(extracted: DataFrame, run_id: str, chunk: int) -> DataFram
             "n_errors",
         )
     )
+
+
+def commit_chunk(
+    extracted: DataFrame,
+    out_dir: str,
+    run_id: str,
+    chunk: int,
+    table_format: str = "parquet",
+) -> int:
+    """Commit one chunk of extracted rows: append the data, then one
+    lineage row per partition with the chunk's wall time. Returns the
+    chunk's distinct doc count; an empty chunk writes nothing and
+    returns 0. One job over the cached chunk collects every count
+    before the data append and the lineage append."""
+    t0 = time.monotonic()
+    extracted = extracted.persist()
+    try:
+        # collect metrics BEFORE appending: extracted's plan anti-joins
+        # against the committed dir, so any post-append re-evaluation
+        # (cache eviction, new file index) would see the chunk's own rows
+        # as committed and silently compute over nothing
+        rows = partition_metrics(extracted, run_id, chunk).collect()
+        per_part = [r for r in rows if r["partition_id"] is not None]
+        if not per_part:  # a rollup over no rows has no total row either
+            return 0
+        _write_append(extracted, _data_dir(out_dir), table_format)
+        wall_ms = int((time.monotonic() - t0) * 1000)
+        _write_append(
+            extracted.sparkSession.createDataFrame(per_part)
+            .withColumn("wall_ms", F.lit(wall_ms)),
+            _lineage_dir(out_dir), table_format,
+        )
+        return next(r["n_docs"] for r in rows if r["partition_id"] is None)
+    finally:
+        extracted.unpersist()
 
 
 def run_checkpointed(
@@ -118,27 +157,11 @@ def run_checkpointed(
         if max_chunks is not None and stats["chunks_done"] >= max_chunks:
             break
         subset = todo.filter(F.pmod(F.xxhash64("doc_id"), F.lit(n_chunks)) == chunk)
-        t0 = time.monotonic()
-        extracted = pipeline.extract_spans(subset, **extract_kwargs).persist()
-        n_rows = extracted.count()
-        if n_rows == 0:
-            extracted.unpersist()
-            continue
-        # collect metrics BEFORE appending: extracted's plan anti-joins
-        # against the committed dir, so any post-append re-evaluation (cache
-        # eviction, new file index) would see the chunk's own rows as
-        # committed and silently compute over nothing
-        metric_rows = partition_metrics(extracted, run_id, chunk).collect()
-        n_docs = extracted.select("doc_id").distinct().count()
-        _write_append(extracted, _data_dir(out_dir), table_format)
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        _write_append(
-            spark.createDataFrame(metric_rows).withColumn("wall_ms", F.lit(wall_ms)),
-            _lineage_dir(out_dir), table_format,
-        )
-        extracted.unpersist()
-        stats["chunks_done"] += 1
-        stats["docs_done"] += n_docs
+        n_docs = commit_chunk(pipeline.extract_spans(subset, **extract_kwargs),
+                              out_dir, run_id, chunk, table_format)
+        if n_docs:
+            stats["chunks_done"] += 1
+            stats["docs_done"] += n_docs
     return stats
 
 

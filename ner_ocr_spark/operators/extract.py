@@ -78,7 +78,8 @@ def make_ocr_stage(
     batch_timeout_s: float = 400.0,
     max_side_limit: int = 1500,
     refine_below: float | None = None,
-    gazetteer: list[tuple[str, str]] | None = None,
+    *,
+    gazetteer: list[tuple[str, str]],
     pdf_rasterizer: Callable[[bytes, float], list[bytes]] | None = None,
     pdf_max_pages: int | None = None,
     pdf_zoom: float = 2.0,
@@ -92,25 +93,26 @@ def make_ocr_stage(
     into an object store and the fetch happens executor-side (no image
     bytes ever shuffle).
 
-    Output: OCR_SCHEMA, one row per recognized line, line_idx ordered
-    top-to-bottom. The stage runs on the `absorb_rows` skeleton
-    (operators/rows.py): a span fails as a unit, so a failed span — any
-    of its pages — degrades to a single (text=None, error=...) row and
-    reassembly still sees the span (M6); batch_timeout_s is the
-    reference's 400 s OCR budget, and once a batch breaches it the
-    remaining rows emit timeout-error rows instead of running (M5).
+    Output: `ocr_ner_schema()`, one row per recognized line that is
+    non-blank after normalizing, line_idx ordered top-to-bottom. The
+    stage runs on the `absorb_rows` skeleton (operators/rows.py): a span
+    fails as a unit, so a failed span — any of its pages — degrades to a
+    single (text=None, error=...) row and reassembly still sees the span
+    (M6); batch_timeout_s is the reference's 400 s OCR budget, and once a
+    batch breaches it the remaining rows emit timeout-error rows instead
+    of running (M5).
 
     When `refine_below` is given, a page with any line scoring below it is
     re-read by the same kernel recipe on the finer REFINE_STEP deskew grid
     (reference M2 analog); the result rides transformer_text/score.
 
-    When `gazetteer` is given, the stage also normalizes each recognized
-    line (python twin of operators/normalize.normalize_expr — pinned equal
-    by tests), drops lines blank after normalizing and appends
-    entities/bio columns: media rows then cross the Python boundary
-    exactly ONCE (OCR+normalize+NER fused) instead of OCR -> JVM
-    normalize -> second python NER hop. Error rows are mode-invariant:
-    text, entities and bio stay NULL.
+    Every recognized line is normalized in-stage (python twin of
+    operators/normalize.normalize_expr — pinned equal by tests; the P4
+    coalesce: the refined text wins when it normalizes non-blank), lines
+    blank after normalizing are dropped (so is a page with no lines), and
+    the `gazetteer` tagger appends entities/bio: media rows cross the
+    Python boundary exactly ONCE (OCR+normalize+NER fused) in both NER
+    modes of the pipeline. Error rows keep text, entities and bio NULL.
 
     When `pdf_rasterizer` is given, blobs sniffing as PDF (%PDF- magic)
     expand to pages IN-STAGE — each page OCRs with line_idx base
@@ -120,15 +122,14 @@ def make_ocr_stage(
     its own mapInPandas + posexplode, the round-2 design) keeps the plan at
     ONE source scan, ONE shuffle and ONE python crossing for mixed corpora,
     and page bitmaps never serialize through Arrow at all. A successfully
-    parsed zero-page PDF emits one clean no-lines row (never falls back to
-    decoding the PDF blob as an image — round-2 ADVICE).
+    parsed zero-page PDF emits no rows (it never falls back to decoding
+    the PDF blob as an image — round-2 ADVICE).
     """
     from ner_ocr_spark import corpus
     from ner_ocr_spark.kernels import ocr
     from ner_ocr_spark.kernels.normalize import normalize_text
 
     resolver = blob_resolver or (lambda ref: corpus.render_media_blob(ref))
-    no_lines = {"score": 0.0}  # a page (or PDF) with no lines: one clean row
 
     def page_lines(page) -> list[dict]:
         """The line columns of one page, top to bottom."""
@@ -170,24 +171,16 @@ def make_ocr_stage(
         raw = bytes(png if png is not None else resolver(row.media_ref))
         if pdf_rasterizer is not None and raw[:5] == b"%PDF-":
             pages = pdf_rasterizer(raw, pdf_zoom)[:pdf_max_pages]
-            if not pages:
-                return [(0, no_lines)]
         else:
             pages = [raw]
-        out = []
-        for pi, page in enumerate(pages):
-            lines = page_lines(page) or [no_lines]
-            out.extend((pi * 100000 + li, ln) for li, ln in enumerate(lines))
-        return out
+        return [(pi * 100000 + li, ln) for pi, page in enumerate(pages)
+                for li, ln in enumerate(page_lines(page))]
 
     def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tagger = None
-        cols = list(OCR_SCHEMA.fieldNames())
-        if gazetteer is not None:
-            from ner_ocr_spark.kernels.ner import GazetteerTagger
+        from ner_ocr_spark.kernels.ner import GazetteerTagger
 
-            tagger = GazetteerTagger(gazetteer)
-            cols += ["entities", "bio"]
+        tagger = GazetteerTagger(gazetteer)
+        cols = list(ocr_ner_schema().fieldNames())
 
         def span_key(row) -> dict:
             return {"doc_id": row.doc_id, "span_idx": int(row.span_idx),
@@ -197,16 +190,14 @@ def make_ocr_stage(
             key = span_key(row)
             out = []
             for li, ln in span_lines(row):
-                if tagger is not None:
-                    # P4 for real: the enhanced text wins when it normalizes
-                    # non-blank (python twin of
-                    # operators/normalize.refined_text_expr)
-                    text = (normalize_text(ln.get("transformer_text"))
-                            or normalize_text(ln.get("text")))
-                    if not text:
-                        continue  # blank-after-normalize filter (fused)
-                    ln = {**ln, "text": text, **tag_columns(tagger, text)}
-                out.append({**key, "line_idx": li, **ln})
+                # P4 for real: the enhanced text wins when it normalizes
+                # non-blank (python twin of
+                # operators/normalize.refined_text_expr)
+                text = (normalize_text(ln.get("transformer_text"))
+                        or normalize_text(ln.get("text")))
+                if text:  # blank-after-normalize filter
+                    out.append({**key, "line_idx": li, **ln, "text": text,
+                                **tag_columns(tagger, text)})
             return out
 
         def error_row(row, msg: str) -> dict:

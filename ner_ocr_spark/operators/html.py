@@ -35,20 +35,6 @@ def _main_text_udf(htmls: pd.Series) -> pd.Series:
     return htmls.map(one)
 
 
-@pandas_udf("text string, error string")
-def _main_text_err_udf(htmls: pd.Series) -> pd.DataFrame:
-    """Error-carrying twin of `_main_text_udf` for the pipeline's no-NER
-    html branch: a failing page must become an ERROR ROW (text NULL,
-    error set — `htmlx.main_text_or_error`, the copy the fused NER stage
-    calls too), never a silently dropped row, so span sequences stay
-    identical between NER modes for malformed HTML (M6 mode
-    invariance)."""
-    from ner_ocr_spark.htmlx import main_text_or_error
-
-    texts, errs = main_text_or_error(htmls)
-    return pd.DataFrame({"text": texts, "error": errs})
-
-
 def extract_main_content(
     df: DataFrame, html_col: str = "html", out_col: str = "main_text"
 ) -> DataFrame:

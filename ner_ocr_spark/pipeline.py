@@ -2,10 +2,17 @@
 
     documents(doc_id, spans array<struct<kind,text,media_ref,offset>>)
       -> posexplode (span_idx mints the order the invariant needs)
-      -> route kind: text -> JVM normalizer; media -> repartition(doc_id,
-         span_idx) [skew defusal] -> mapInPandas OCR -> same normalizer
-      -> unionByName -> mapInPandas NER (gazetteer+BIO)
+      -> route kind:
+         text/html -> JVM normalizer (text) -> mapInPandas NER (html main
+           content + python normalizer twin, then gazetteer+BIO)
+         media/pdf -> repartition(doc_id, span_idx) [skew defusal]
+           -> mapInPandas OCR (+ the same normalizer twin and NER, fused)
+      -> unionByName
       -> assemble: groupBy(doc_id) sort_array(collect_list(...))
+
+with_ner=False is the same plan, except that text rows skip the NER
+crossing (they never leave the JVM) and entities/bio are dropped; html
+and media rows take the same python stages as with NER.
 
 Two shuffles total: the media-branch repartition and the assembly groupBy.
 Span order is carried explicitly via (span_idx, line_idx) — never partition
@@ -28,12 +35,11 @@ from pyspark.sql import functions as F
 
 from ner_ocr_spark import corpus as corpus_mod
 from ner_ocr_spark.operators.extract import (
-    OCR_SCHEMA,
     make_ner_stage,
     make_ocr_stage,
     ocr_ner_schema,
 )
-from ner_ocr_spark.operators.normalize import normalize_expr, refined_text_expr
+from ner_ocr_spark.operators.normalize import normalize_expr
 
 SPAN_COLS = ["doc_id", "span_idx", "line_idx", "kind", "text", "media_ref",
              "box", "score", "transformer_text", "transformer_score", "error"]
@@ -66,7 +72,11 @@ def extract_spans(
     pdf_zoom: float = 2.0,
 ) -> DataFrame:
     """Full extraction: ordered (kind, text, media_ref) span rows per doc,
-    plus entities/bio when with_ner.
+    plus entities/bio when with_ner. The NER mode changes one thing: with
+    it, text rows cross the NER stage; without it they stay JVM-only and
+    the entities/bio columns are dropped (html and media rows are still
+    tagged in python — tagging costs ~0.03 ms per page against ~23 ms of
+    OCR — so both modes write the same span rows).
 
     blobs: optional media table (media_ref, image_png) joined executor-side;
     otherwise blob_resolver(media_ref) fetches bytes inside the OCR UDF
@@ -121,9 +131,8 @@ def extract_spans(
     # e2e wall for a corpus with zero html spans). text rows normalize
     # JVM-side (codegen); kind='html' rows carry their RAW markup through
     # this projection — main-content extraction (north rule: boilerplate
-    # strip / DOM heuristics) happens inside the NER stage's existing
-    # python crossing (with_ner) or in a dedicated Arrow branch (no-NER
-    # path below), never as an extra stage over text rows.
+    # strip / DOM heuristics) happens inside the NER stage's python
+    # crossing in both NER modes, never as an extra stage over text rows.
     # SLIM projection through the python boundary (guide §4.1: pass only
     # the columns the function needs): every other SPAN_COLS field is a
     # literal for text/html rows (line_idx 0, score 1.0, the rest NULL) —
@@ -185,78 +194,34 @@ def extract_spans(
         # (doc_id, span_idx) hash-spread = salted repartition: a
         # 1000-media-span doc lands on ~all partitions, not one straggler
         media = media.repartition(n_part, "doc_id", "span_idx")
-    # refinement AND (when with_ner) normalize+NER happen INSIDE the OCR
-    # stage: a filter-fork into a second mapInPandas would re-execute the
-    # whole OCR plan on both branches, and a separate NER stage would make
-    # media rows cross the Python boundary twice (§4.3.4; each page
-    # refined exactly once, each row tagged exactly once)
+    # refinement AND normalize+NER happen INSIDE the OCR stage: a
+    # filter-fork into a second mapInPandas would re-execute the whole OCR
+    # plan on both branches, and a separate NER stage would make media rows
+    # cross the Python boundary twice (§4.3.4; each page refined exactly
+    # once, each row tagged exactly once). The stage normalizes and drops
+    # blank lines itself, in both NER modes.
     gaz = gazetteer if gazetteer is not None else corpus_mod.GAZETTEER
-
-    def run_ocr(df, schema, fused_gaz):
-        return df.mapInPandas(
-            make_ocr_stage(blob_resolver, refine_below=refine_below,
-                           gazetteer=fused_gaz,
-                           pdf_rasterizer=pdf_rasterizer,
-                           pdf_max_pages=pdf_max_pages, pdf_zoom=pdf_zoom),
-            schema,
-        )
-
+    media_branch = media.mapInPandas(
+        make_ocr_stage(blob_resolver, refine_below=refine_below,
+                       gazetteer=gaz, pdf_rasterizer=pdf_rasterizer,
+                       pdf_max_pages=pdf_max_pages, pdf_zoom=pdf_zoom),
+        ocr_ner_schema(),
+    )
+    # the NER crossing: every text-branch row with NER, only the html rows
+    # without (their markup needs the python extractor either way; text
+    # rows then stay JVM-only). Without NER the kind filters fork
+    # text_branch, one more scan of the source on that path only.
+    crossing = (text_branch if with_ner
+                else text_branch.filter(F.col("kind") == "html"))
+    ner_fn, ner_schema = make_ner_stage(gaz, passthrough=text_branch.schema)
+    out = widen_text_rows(
+        crossing.mapInPandas(ner_fn, ner_schema), ["entities", "bio"]
+    ).unionByName(media_branch)
     if with_ner:
-        ocr_rows = run_ocr(media, ocr_ner_schema(), gaz)
-        # normalize + blank-filter already applied in-stage (python twin)
-        media_branch = ocr_rows.filter(
-            (F.length("text") > 0) | F.col("error").isNotNull()
-        )
-        ner_fn, ner_schema = make_ner_stage(gaz, passthrough=text_branch.schema)
-        text_tagged = widen_text_rows(
-            text_branch.mapInPandas(ner_fn, ner_schema), ["entities", "bio"]
-        )
-        return text_tagged.unionByName(media_branch).select(
-            *SPAN_COLS, "entities", "bio"
-        )
-    ocr_rows = run_ocr(media, OCR_SCHEMA, None)
-    # P4 coalesce (JVM-side): enhanced text wins only when it normalizes
-    # non-blank; error rows keep text untouched (mode-invariant with the
-    # fused path, which skips normalization on error)
-    media_branch = ocr_rows.withColumn(
-        "text",
-        F.when(F.col("error").isNotNull(), F.col("text")).otherwise(
-            refined_text_expr(F.col("transformer_text"), F.col("text"))
-        ),
-    ).filter((F.length("text") > 0) | F.col("error").isNotNull())
-    # no-NER path: html rows still carry raw markup — extract via a
-    # dedicated Arrow branch (asNondeterministic pins ONE evaluation: the
-    # blank filter would otherwise push below the projection and run the
-    # UDF twice, and field accesses on the struct would duplicate it).
-    # This forks text_branch (one extra scan) — only on this secondary
-    # path; the with_ner path extracts inside the NER stage. Failures
-    # become ERROR ROWS (text NULL, error set) exactly like the fused
-    # path — dropping them silently would make span sequences differ
-    # between NER modes for malformed HTML (M6 mode invariance).
-    from ner_ocr_spark.operators.html import _main_text_err_udf
-
-    _main_once = _main_text_err_udf.asNondeterministic()
-    texts_only = widen_text_rows(
+        return out.select(*SPAN_COLS, "entities", "bio")
+    return widen_text_rows(
         text_branch.filter(F.col("kind") == "text"), []
-    )
-    htmls = widen_text_rows(
-        text_branch.filter(F.col("kind") == "html")
-        .withColumn("_hx", _main_once(F.col("text")))
-        .withColumn("error", F.col("_hx.error"))
-        .withColumn(
-            "text",
-            F.when(F.col("_hx.error").isNotNull(),
-                   F.lit(None).cast("string"))
-            .otherwise(normalize_expr(F.col("_hx.text"))),
-        )
-        .drop("_hx")
-        .filter((F.length("text") > 0) | F.col("error").isNotNull()),
-        [],
-    )
-    return (
-        texts_only.unionByName(htmls).unionByName(media_branch)
-        .select(*SPAN_COLS)
-    )
+    ).unionByName(out.select(*SPAN_COLS))
 
 
 def assemble_documents(extracted: DataFrame) -> DataFrame:

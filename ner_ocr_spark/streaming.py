@@ -66,16 +66,8 @@ def stream_extract(
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         todo = lineage.remaining_documents(batch_df, out_dir)
-        extracted = pipeline.extract_spans(todo, **extract_kwargs).persist()
-        if extracted.count() > 0:
-            metric_rows = lineage.partition_metrics(
-                extracted, f"epoch{epoch_id}", 0
-            ).collect()
-            extracted.write.mode("append").parquet(f"{out_dir.rstrip('/')}/data")
-            batch_df.sparkSession.createDataFrame(metric_rows).withColumn(
-                "wall_ms", F.lit(None).cast("int")
-            ).write.mode("append").parquet(f"{out_dir.rstrip('/')}/lineage")
-        extracted.unpersist()
+        lineage.commit_chunk(pipeline.extract_spans(todo, **extract_kwargs),
+                             out_dir, f"epoch{epoch_id}", 0)
 
     writer = (
         docs.writeStream.foreachBatch(process_batch)

@@ -114,12 +114,13 @@ def test_spark_roundtrip_sample(spark):
         assert got[did] == want
 
 
-def test_html_span_kind_interleaved_end_to_end(spark):
+@pytest.mark.parametrize("with_ner", [True, False])
+def test_html_span_kind_interleaved_end_to_end(spark, with_ner):
     """kind='html' is a first-class span kind: raw markup spans extract
     their MAIN CONTENT (boilerplate stripped, entities decoded), feed the
     same normalizer as text spans, and keep their interleaved position
     under span-sequence equality — one document mixing text + html +
-    media."""
+    media, with and without NER."""
     from ner_ocr_spark import corpus, pipeline
     from ner_ocr_spark.kernels.normalize import normalize_text
     from tests.conftest import DOC_SCHEMA
@@ -149,7 +150,7 @@ def test_html_span_kind_interleaved_end_to_end(spark):
         }],
         DOC_SCHEMA,
     )
-    out = pipeline.run(spark, docs)
+    out = pipeline.run(spark, docs, with_ner=with_ner)
     spans = {r["doc_id"]: r["spans"] for r in out.collect()}["h0"]
     got = [(s["kind"], s["text"], s["media_ref"]) for s in spans]
     want = (

@@ -202,14 +202,13 @@ def test_real_pdf_bytes_max_pages_truncates(spark):
 
 def test_zero_page_pdf_clean_row_not_resolver_fallback(spark):
     """ADVICE guard: a parsed zero-page PDF must NOT fall back to decoding
-    the raw PDF blob as an image — it emits one clean no-lines row."""
+    the raw PDF blob as an image — it emits no rows."""
     out = pipeline.extract_spans(
         _docs(spark), blob_resolver=_resolver_for(pdfio.encode_image_pdf([])),
         with_ner=True,
     )
-    # the clean no-lines row is blank-filtered downstream; the BUG would
-    # surface as a kind='pdf' row with a non-null decode error surviving
-    # the filter (error rows always survive) — assert none exists
+    # the BUG would surface as a kind='pdf' row with a non-null decode
+    # error (error rows always survive) — assert none exists
     assert out.filter("kind = 'pdf'").count() == 0
     assert out.filter("error is not null").count() == 0
     assembled = pipeline.assemble_documents(out)

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.01"
@@ -73,6 +74,28 @@ def test_pipeline_shuffle_count(spark, documents_df):
     n_exchanges = plan.count("Exchange ")
     assert n_exchanges <= 3, f"unexpected extra shuffles:\n{plan}"
     assert plan.count("ArrowEvalPython") + plan.count("MapInPandas") <= 3
+
+
+@pytest.mark.parametrize("with_ner", [True, False])
+def test_extraction_plan_compiles_without_codegen_fallback(spark, with_ner):
+    """Every whole-stage-codegen subtree of the extraction plan fits the
+    JVM's 64 KB method limit: with the interpreted fallback off, an
+    oversized stage raises `Code grows beyond 64 KB` instead of silently
+    running interpreted. collect(), not count(): count() prunes `text` and
+    hides the overflow. Without NER, text rows stay in the JVM and html
+    rows ride the NER stage, so the plan has no ArrowEvalPython."""
+    from ner_ocr_spark import corpus, pipeline
+    from tests.conftest import DOC_SCHEMA
+
+    docs = spark.createDataFrame(corpus.build_documents(3), DOC_SCHEMA)
+    out = pipeline.extract_spans(docs, with_ner=with_ner)
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        assert out.collect()
+    finally:
+        spark.conf.unset("spark.sql.codegen.fallback")
+    if not with_ner:
+        assert "ArrowEvalPython" not in _executed(out)
 
 
 def test_minhash_uses_partial_aggregation(spark):

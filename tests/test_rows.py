@@ -1,6 +1,7 @@
 """The per-row skeleton of the python stages (operators/rows.absorb_rows):
 a row fails as a unit, and a batch past its wall budget emits timeout
-rows — driven through the OCR stage that runs on it, fused and plain."""
+rows — driven through the OCR stage that runs on it (which always
+normalizes and tags, in both NER modes of the pipeline)."""
 
 from __future__ import annotations
 
@@ -8,7 +9,7 @@ import pandas as pd
 import pytest
 
 from ner_ocr_spark import corpus
-from ner_ocr_spark.operators.extract import OCR_SCHEMA, make_ocr_stage
+from ner_ocr_spark.operators.extract import make_ocr_stage
 from ner_ocr_spark.operators.rows import TIMEOUT, absorb_rows, error_text
 
 
@@ -16,8 +17,7 @@ def _null(v) -> bool:
     return v is None or (not isinstance(v, list) and pd.isna(v))
 
 
-@pytest.mark.parametrize("gazetteer", [None, corpus.GAZETTEER],
-                         ids=["plain", "fused"])
+@pytest.mark.parametrize("gazetteer", [corpus.GAZETTEER], ids=["fused"])
 def test_ocr_stage_span_fails_as_a_unit(gazetteer):
     """A two-page PDF whose second page is not a valid PNG yields ONE error
     row for the span — never page 1's lines plus an error row under the
@@ -34,30 +34,24 @@ def test_ocr_stage_span_fails_as_a_unit(gazetteer):
     assert len(out) == 1
     (r,) = out.to_dict("records")
     assert r["error"] and (r["doc_id"], r["span_idx"], r["line_idx"]) == ("d", 3, 0)
-    assert _null(r["text"])
-    if gazetteer is not None:
-        assert _null(r["entities"]) and _null(r["bio"])
+    assert _null(r["text"]) and _null(r["entities"]) and _null(r["bio"])
 
 
 def test_ocr_stage_batch_budget_emits_timeout_rows():
     """Past the batch budget every remaining row is skipped and gets the
-    timeout row — text, entities and bio NULL, the same in both modes."""
+    timeout row — text, entities and bio NULL."""
     batch = pd.DataFrame({
         "doc_id": ["a", "a", "b"], "span_idx": [0, 1, 0],
         "kind": ["media"] * 3,
         "media_ref": ["doc00000001/m0", "doc00000002/m0", "doc00000003/m0"],
     })
-    outs = {}
-    for mode, gaz in (("plain", None), ("fused", corpus.GAZETTEER)):
-        stage = make_ocr_stage(None, batch_timeout_s=-1, gazetteer=gaz)
-        outs[mode] = pd.concat(list(stage(iter([batch])))).reset_index(drop=True)
-    fused = outs["fused"]
-    assert len(fused) == 3
-    assert list(fused["error"]) == [TIMEOUT] * 3
+    stage = make_ocr_stage(None, batch_timeout_s=-1, gazetteer=corpus.GAZETTEER)
+    out = pd.concat(list(stage(iter([batch])))).reset_index(drop=True)
+    assert len(out) == 3
+    assert list(out["error"]) == [TIMEOUT] * 3
+    assert list(out["doc_id"]) == ["a", "a", "b"]
     for col in ("text", "entities", "bio"):
-        assert all(_null(v) for v in fused[col]), col
-    cols = list(OCR_SCHEMA.fieldNames())
-    assert outs["plain"][cols].equals(fused[cols])
+        assert all(_null(v) for v in out[col]), col
 
 
 def test_absorb_rows_fills_missing_keys_and_keeps_order():

@@ -45,7 +45,12 @@ def test_stream_extract_incremental(spark, tmp_path):
     want = [(s["kind"], s["text"], s["media_ref"])
             for s in oracle.expected_spans(doc0)]
     assert [(r["kind"], r["text"], r["media_ref"]) for r in rows] == want
-    assert spark.read.parquet(f"{out}/lineage").count() > 0
+    lin = spark.read.parquet(f"{out}/lineage")
+    assert lin.count() > 0
+    # the streaming commit is the batch one: wall time recorded, and the
+    # lineage spans add up to the committed data
+    assert lin.filter("wall_ms is null").count() == 0
+    assert lin.agg({"n_spans": "sum"}).collect()[0][0] == data2.count()
 
 
 def test_stateful_sessionize_across_restarts(spark, tmp_path):
