@@ -1474,17 +1474,13 @@ def q_refine_coalesce(spark, sf):  # P4 over (transformer_text, text) for real
 
 def q_extraction_text_branch(spark, sf):
     """The engine's text branch, value-verified: interleave -> explode ->
-    normalize -> blank-filter, reproduced in ANSI SQL. (The media branch
+    normalize -> blank-filter, reproduced in ANSI SQL. (The python branch
     needs the OCR kernel -> covered by the rows-only extraction_e2e and the
     pytest span-equality oracle.)"""
     from ner_ocr_spark import pipeline
 
     docs = interleaved_documents(spark, sf)
-    return (
-        pipeline.extract_spans(docs, with_ner=False)
-        .filter(F.col("kind") == "text")
-        .select("doc_id", "span_idx", "text")
-    )
+    return pipeline.text_rows(pipeline.explode_spans(docs))
 
 
 def q_stream_metrics(spark, sf):  # Structured Streaming windowed agg

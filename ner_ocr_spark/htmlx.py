@@ -337,24 +337,6 @@ def main_text(html: str | bytes | None) -> str:
     return stripped if len(stripped) >= 0.25 * len(full) else full
 
 
-def main_text_or_error(htmls) -> tuple[list[str | None], list[str | None]]:
-    """`main_text` per page, absorbing failures per row (M6): a failing
-    page reads text None and error "html: <Type>: <message>". The NER
-    stage's html branch calls it; the pipeline routes html rows through
-    that stage in both NER modes. It lives here, not in operators/html.py:
-    importing that module on a worker builds its module-level pandas UDFs,
-    which need an active session."""
-    texts, errs = [], []
-    for h in htmls:
-        try:
-            texts.append(main_text(h))
-            errs.append(None)
-        except Exception as e:  # noqa: BLE001 — per-row absorption (M6)
-            texts.append(None)
-            errs.append(f"html: {type(e).__name__}: {e}")
-    return texts, errs
-
-
 def _all_nodes(node: Node):
     """Every node, INCLUDING dropped subtrees (head/script/...) — metadata
     like <title> lives inside <head>. Iterative (depth-safe)."""

@@ -1,4 +1,4 @@
-"""mapInPandas stages: vectorized OCR and batched NER.
+"""mapInPandas stages: vectorized OCR (+ html extraction) and batched NER.
 
 The engine's two Python-side operators (everything else is JVM-side SQL).
 Both follow the Spark ML-inference pattern (SURVEY.md §2.8 M1-M6): the
@@ -84,14 +84,16 @@ def make_ocr_stage(
     pdf_max_pages: int | None = None,
     pdf_zoom: float = 2.0,
 ) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
-    """Build the OCR mapInPandas function.
+    """Build the python-branch mapInPandas function (OCR and html).
 
-    Input batches: (doc_id, span_idx, kind, media_ref[, image_png]).
+    Input batches: (doc_id, span_idx, kind, media_ref[, text][, image_png]).
     If an `image_png` column is present (blobs joined upstream) it is used;
     a NULL image_png — and the column's absence — falls back to
     `blob_resolver(media_ref)`, the production shape where media_ref points
     into an object store and the fetch happens executor-side (no image
-    bytes ever shuffle).
+    bytes ever shuffle). A kind='html' row is not OCR'd: its `text` holds
+    raw markup, and `htmlx.main_text` makes its one line (line_idx 0,
+    score 1.0, no box); only html rows need the `text` column.
 
     Output: `ocr_ner_schema()`, one row per recognized line that is
     non-blank after normalizing, line_idx ordered top-to-bottom. The
@@ -110,9 +112,10 @@ def make_ocr_stage(
     operators/normalize.normalize_expr — pinned equal by tests; the P4
     coalesce: the refined text wins when it normalizes non-blank), lines
     blank after normalizing are dropped (so is a page with no lines), and
-    the `gazetteer` tagger appends entities/bio: media rows cross the
-    Python boundary exactly ONCE (OCR+normalize+NER fused) in both NER
-    modes of the pipeline. Error rows keep text, entities and bio NULL.
+    the `gazetteer` tagger appends entities/bio: media, pdf and html rows
+    cross the Python boundary exactly ONCE (extract+normalize+NER fused)
+    in both NER modes of the pipeline. Error rows keep text, entities and
+    bio NULL.
 
     When `pdf_rasterizer` is given, blobs sniffing as PDF (%PDF- magic)
     expand to pages IN-STAGE — each page OCRs with line_idx base
@@ -125,7 +128,7 @@ def make_ocr_stage(
     parsed zero-page PDF emits no rows (it never falls back to decoding
     the PDF blob as an image — round-2 ADVICE).
     """
-    from ner_ocr_spark import corpus
+    from ner_ocr_spark import corpus, htmlx
     from ner_ocr_spark.kernels import ocr
     from ner_ocr_spark.kernels.normalize import normalize_text
 
@@ -166,7 +169,10 @@ def make_ocr_stage(
         return out
 
     def span_lines(row) -> list[tuple[int, dict]]:
-        """(line_idx, line columns) of every line of one media span."""
+        """(line_idx, line columns) of every line of one span."""
+        if row.kind == "html":
+            # raw markup: main-content extraction stands in for OCR
+            return [(0, {"text": htmlx.main_text(row.text), "score": 1.0})]
         png = getattr(row, "image_png", None)
         raw = bytes(png if png is not None else resolver(row.media_ref))
         if pdf_rasterizer is not None and raw[:5] == b"%PDF-":
@@ -368,18 +374,18 @@ def make_refine_stage(
 def make_ner_stage(
     gazetteer: list[tuple[str, str]],
     text_col: str = "text",
-    passthrough: T.StructType | None = None,
+    *,
+    passthrough: T.StructType,
 ) -> tuple[Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]], T.StructType]:
     """Build the NER mapInPandas function + its output schema.
 
-    Appends `entities` (array<struct>) and `bio` (tag string) to every input
-    row. The gazetteer rides the closure (shipped with every task by
-    Spark's task serialization — it is small); the GazetteerTagger and its
-    token trie are built once per task, when `stage()` starts, and reused
-    for every Arrow batch of that task.
+    Appends `entities` (array<struct>) and `bio` (tag string) of
+    `text_col` to every input row (`passthrough` is the input schema). The
+    gazetteer rides the closure (shipped with every task by Spark's task
+    serialization — it is small); the GazetteerTagger and its token trie
+    are built once per task, when `stage()` starts, and reused for every
+    Arrow batch of that task.
     """
-    if passthrough is None:
-        raise ValueError("passthrough schema required (input schema of the stage)")
     schema = T.StructType(
         list(passthrough.fields)
         + [T.StructField("entities", ENTITY_TYPE, True),
@@ -391,43 +397,9 @@ def make_ner_stage(
 
         tagger = GazetteerTagger(gazetteer)
         for pdf in batches:
-            if "kind" in pdf.columns:
-                mask = (pdf["kind"] == "html").to_numpy()
-                if mask.any():
-                    # kind='html' rows reach this stage with RAW markup:
-                    # main-content extraction + the python normalizer twin
-                    # ride the SAME crossing (a separate Arrow stage would
-                    # re-scan the source — pipeline comment); blanks drop,
-                    # failures absorb per row (M6: error set, text NULL)
-                    from ner_ocr_spark.htmlx import main_text_or_error
-                    from ner_ocr_spark.kernels.normalize import (
-                        normalize_text,
-                    )
-
-                    texts, errs = main_text_or_error(pdf.loc[mask, text_col])
-                    pdf = pdf.copy()
-                    pdf.loc[mask, text_col] = [
-                        None if t is None else normalize_text(t) for t in texts
-                    ]
-                    if "error" in pdf.columns:
-                        pdf.loc[mask, "error"] = errs
-                    keep = ~(
-                        mask & (pdf[text_col].fillna("") == "")
-                        & pdf.get("error", pd.Series(index=pdf.index,
-                                                     dtype=object)).isna()
-                    )
-                    pdf = pdf[keep]
             tagged = [tag_columns(tagger, t if isinstance(t, str) else "")
                       for t in pdf[text_col]]
-            pdf = pdf.copy()
-            pdf["entities"] = [t["entities"] for t in tagged]
-            pdf["bio"] = [t["bio"] for t in tagged]
-            if "error" in pdf.columns:
-                # M6: error rows never gain tagging output
-                em = pdf["error"].notna()
-                if em.any():
-                    pdf.loc[em, "entities"] = None
-                    pdf.loc[em, "bio"] = None
-            yield pdf
+            yield pdf.assign(entities=[t["entities"] for t in tagged],
+                             bio=[t["bio"] for t in tagged])
 
     return stage, schema

@@ -3,18 +3,20 @@
     documents(doc_id, spans array<struct<kind,text,media_ref,offset>>)
       -> posexplode (span_idx mints the order the invariant needs)
       -> route kind:
-         text/html -> JVM normalizer (text) -> mapInPandas NER (html main
-           content + python normalizer twin, then gazetteer+BIO)
-         media/pdf -> repartition(doc_id, span_idx) [skew defusal]
-           -> mapInPandas OCR (+ the same normalizer twin and NER, fused)
+         text -> JVM normalizer (-> mapInPandas NER with NER: the slim
+           (doc_id, span_idx, text) rows only)
+         media/pdf/html -> repartition(doc_id, span_idx) [skew defusal]
+           -> mapInPandas python stage: OCR (pdf pages expand in-stage) or
+              html main-content extraction, + the python normalizer twin
+              and NER, fused
       -> unionByName
       -> assemble: groupBy(doc_id) sort_array(collect_list(...))
 
 with_ner=False is the same plan, except that text rows skip the NER
-crossing (they never leave the JVM) and entities/bio are dropped; html
-and media rows take the same python stages as with NER.
+crossing (they never leave the JVM) and entities/bio are dropped; the
+python branch is the same stage in both modes.
 
-Two shuffles total: the media-branch repartition and the assembly groupBy.
+Two shuffles total: the python-branch repartition and the assembly groupBy.
 Span order is carried explicitly via (span_idx, line_idx) — never partition
 order (SURVEY.md §7 hard part (a)).
 
@@ -59,6 +61,16 @@ def explode_spans(documents: DataFrame) -> DataFrame:
     )
 
 
+def text_rows(spans: DataFrame) -> DataFrame:
+    """The JVM text branch: (doc_id, span_idx, text) of every text span
+    that is non-blank after normalize_expr."""
+    return (
+        spans.filter(F.col("kind") == "text")
+        .select("doc_id", "span_idx", normalize_expr(F.col("text")).alias("text"))
+        .filter(F.length("text") > 0)
+    )
+
+
 def extract_spans(
     documents: DataFrame,
     blobs: DataFrame | None = None,
@@ -74,17 +86,18 @@ def extract_spans(
     """Full extraction: ordered (kind, text, media_ref) span rows per doc,
     plus entities/bio when with_ner. The NER mode changes one thing: with
     it, text rows cross the NER stage; without it they stay JVM-only and
-    the entities/bio columns are dropped (html and media rows are still
-    tagged in python — tagging costs ~0.03 ms per page against ~23 ms of
-    OCR — so both modes write the same span rows).
+    the entities/bio columns are dropped (media, pdf and html rows are
+    still tagged in python — tagging costs ~0.03 ms per page against
+    ~23 ms of OCR — so both modes write the same span rows).
 
     blobs: optional media table (media_ref, image_png) joined executor-side;
     otherwise blob_resolver(media_ref) fetches bytes inside the OCR UDF
     (default: the synthetic corpus renderer — models an object-store fetch).
-    media_partitions: width of the media-branch repartition; defaults to
-    spark.sql.shuffle.partitions. Partitioning key is (doc_id, span_idx) so
-    one media-heavy document spreads across the cluster (north-rule skew
-    clause) — reassembly restores order via span_idx, never partition order.
+    media_partitions: width of the python-branch repartition (media, pdf
+    and html spans); defaults to spark.sql.shuffle.partitions. Partitioning
+    key is (doc_id, span_idx) so one media-heavy document spreads across
+    the cluster (north-rule skew clause) — reassembly restores order via
+    span_idx, never partition order.
 
     PDF spans (kind='pdf'): pdf_rasterizer is any callable
     (bytes, zoom) -> list of page payloads, each either png bytes (OCR'd)
@@ -103,8 +116,8 @@ def extract_spans(
     max_num_imgs truncation (/root/reference/src/pdf_processing.py:21-73;
     dispatch /root/reference/src/bounding_box.py:300-303). Out-of-subset
     files degrade to per-row error absorption, never a crash; pass
-    pdf_rasterizer=None to disable PDF handling (pdf spans then ride the
-    media branch and the image sniff rejects them per row).
+    pdf_rasterizer=None to disable PDF handling (pdf spans then OCR as
+    images and the image sniff rejects them per row).
     """
     spark = documents.sparkSession
     if pdf_rasterizer == "auto":
@@ -113,10 +126,11 @@ def extract_spans(
         pdf_rasterizer = default_page_source()
     spans = explode_spans(documents)
 
-    # media-branch width: defaults to spark.sql.shuffle.partitions. At
-    # corpus scale that is set far above the core count, so the OCR stage
-    # schedules in many fine waves; when partitions ≈ cores (small local
-    # runs), pass media_partitions explicitly — one wave per core lets the
+    # python-branch width (media, pdf and html rows): defaults to
+    # spark.sql.shuffle.partitions. At corpus scale that is set far above
+    # the core count, so the OCR stage schedules in many fine waves; when
+    # partitions ≈ cores (small local runs), pass media_partitions
+    # explicitly — one wave per core lets the
     # slowest task stretch the whole stage (measured +8% at 16 cores going
     # from 2 to 8 waves), while over-splitting a tiny input paid ~20% in
     # per-task overhead — measured before _pyworker removed the per-task
@@ -126,102 +140,71 @@ def extract_spans(
         spark.conf.get("spark.sql.shuffle.partitions")
     )
 
-    # -- text + html branch (ONE source consumer: a third filter-fork of
-    # `spans` re-scans and re-explodes the source — measured +16% on the
-    # e2e wall for a corpus with zero html spans). text rows normalize
-    # JVM-side (codegen); kind='html' rows carry their RAW markup through
-    # this projection — main-content extraction (north rule: boilerplate
-    # strip / DOM heuristics) happens inside the NER stage's python
-    # crossing in both NER modes, never as an extra stage over text rows.
-    # SLIM projection through the python boundary (guide §4.1: pass only
-    # the columns the function needs): every other SPAN_COLS field is a
-    # literal for text/html rows (line_idx 0, score 1.0, the rest NULL) —
-    # round 6 re-attaches them JVM-side after the NER crossing instead of
-    # serializing half a million NULL/object cells each way (the
-    # passthrough round-trip alone measured 1.5 s at sf1). `error` stays:
-    # the NER stage SETS it for failed html rows.
-    text_branch = (
-        spans.filter(F.col("kind").isin(["text", "html"]))
-        .select(
-            "doc_id",
-            "span_idx",
-            "kind",
-            F.when(F.col("kind") == "text", normalize_expr(F.col("text")))
-            .otherwise(F.col("text"))
-            .alias("text"),
-            F.lit(None).cast("string").alias("error"),
-        )
-        .filter((F.col("kind") == "html") | (F.length("text") > 0))
-    )
-
-    def widen_text_rows(df: DataFrame, extra: list[str]) -> DataFrame:
-        """Re-attach the literal span columns the slim text branch left
-        out, restoring SPAN_COLS order (+ NER extras when present)."""
-        return df.select(
-            "doc_id",
-            "span_idx",
-            F.lit(0).alias("line_idx"),
-            "kind",
-            "text",
-            F.lit(None).cast("string").alias("media_ref"),
-            F.lit(None).cast("array<double>").alias("box"),
-            F.lit(1.0).alias("score"),
-            F.lit(None).cast("string").alias("transformer_text"),
-            F.lit(None).cast("double").alias("transformer_score"),
-            "error",
-            *extra,
-        )
-
-    # -- media branch: spread heavy docs, then batched OCR ----------------
-    # pdf spans ride the SAME branch: the OCR stage sniffs %PDF- blobs and
-    # expands pages in-stage (without a rasterizer the image sniff rejects
-    # the bytes into a per-row error)
-    media = spans.filter(F.col("kind").isin(["media", "pdf"])).select(
-        "doc_id", "span_idx", "kind", "media_ref"
+    # -- python branch: every span kind whose work is python -------------
+    # media/pdf spans OCR (pdf pages expand in-stage; without a rasterizer
+    # the image sniff rejects the bytes into a per-row error) and html spans
+    # carry their raw markup in `text` for main-content extraction (north
+    # rule: boilerplate strip / DOM heuristics). One spread, one crossing.
+    py = spans.filter(F.col("kind").isin(["media", "pdf", "html"])).select(
+        "doc_id", "span_idx", "kind", "text", "media_ref"
     )
     if blobs is not None:
-        media = media.join(blobs, "media_ref", "left")
+        py = py.join(blobs, "media_ref", "left")
         # size-aware balancing (§4.3.2): payload bytes ~ decoded pixel count
         # ~ OCR cost; LPT round-robin beats count-equal hash spread when row
-        # costs vary by orders of magnitude
+        # costs vary by orders of magnitude. html rows have no payload:
+        # their markup length stands in.
         from ner_ocr_spark.operators.balance import balance_by_cost
 
-        media = balance_by_cost(
-            media.withColumn("_cost", F.length("image_png")),
+        py = balance_by_cost(
+            py.withColumn("_cost", F.coalesce(F.length("image_png"),
+                                              F.length("text"))),
             "_cost", n_part, approximate=True,
         ).drop("_cost")
     else:
         # (doc_id, span_idx) hash-spread = salted repartition: a
         # 1000-media-span doc lands on ~all partitions, not one straggler
-        media = media.repartition(n_part, "doc_id", "span_idx")
+        py = py.repartition(n_part, "doc_id", "span_idx")
     # refinement AND normalize+NER happen INSIDE the OCR stage: a
     # filter-fork into a second mapInPandas would re-execute the whole OCR
-    # plan on both branches, and a separate NER stage would make media rows
+    # plan on both branches, and a separate NER stage would make these rows
     # cross the Python boundary twice (§4.3.4; each page refined exactly
     # once, each row tagged exactly once). The stage normalizes and drops
     # blank lines itself, in both NER modes.
     gaz = gazetteer if gazetteer is not None else corpus_mod.GAZETTEER
-    media_branch = media.mapInPandas(
+    py_branch = py.mapInPandas(
         make_ocr_stage(blob_resolver, refine_below=refine_below,
                        gazetteer=gaz, pdf_rasterizer=pdf_rasterizer,
                        pdf_max_pages=pdf_max_pages, pdf_zoom=pdf_zoom),
         ocr_ner_schema(),
     )
-    # the NER crossing: every text-branch row with NER, only the html rows
-    # without (their markup needs the python extractor either way; text
-    # rows then stay JVM-only). Without NER the kind filters fork
-    # text_branch, one more scan of the source on that path only.
-    crossing = (text_branch if with_ner
-                else text_branch.filter(F.col("kind") == "html"))
-    ner_fn, ner_schema = make_ner_stage(gaz, passthrough=text_branch.schema)
-    out = widen_text_rows(
-        crossing.mapInPandas(ner_fn, ner_schema), ["entities", "bio"]
-    ).unionByName(media_branch)
+
+    # -- text branch: JVM normalizer; with NER, the NER crossing ----------
+    # SLIM projection through the python boundary (guide §4.1: pass only
+    # the columns the function needs): every other SPAN_COLS field is a
+    # literal for text rows (line_idx 0, score 1.0, the rest NULL) and is
+    # attached JVM-side after the crossing instead of serializing half a
+    # million NULL/object cells each way (round 6: the passthrough
+    # round-trip alone measured 1.5 s at sf1).
+    text = text_rows(spans)
+    extra = ["entities", "bio"] if with_ner else []
     if with_ner:
-        return out.select(*SPAN_COLS, "entities", "bio")
-    return widen_text_rows(
-        text_branch.filter(F.col("kind") == "text"), []
-    ).unionByName(out.select(*SPAN_COLS))
+        ner_fn, ner_schema = make_ner_stage(gaz, passthrough=text.schema)
+        text = text.mapInPandas(ner_fn, ner_schema)
+    return text.select(
+        "doc_id",
+        "span_idx",
+        F.lit(0).alias("line_idx"),
+        F.lit("text").alias("kind"),
+        "text",
+        F.lit(None).cast("string").alias("media_ref"),
+        F.lit(None).cast("array<double>").alias("box"),
+        F.lit(1.0).alias("score"),
+        F.lit(None).cast("string").alias("transformer_text"),
+        F.lit(None).cast("double").alias("transformer_score"),
+        F.lit(None).cast("string").alias("error"),
+        *extra,
+    ).unionByName(py_branch.select(*SPAN_COLS, *extra))
 
 
 def assemble_documents(extracted: DataFrame) -> DataFrame:

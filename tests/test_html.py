@@ -114,13 +114,16 @@ def test_spark_roundtrip_sample(spark):
         assert got[did] == want
 
 
-@pytest.mark.parametrize("with_ner", [True, False])
-def test_html_span_kind_interleaved_end_to_end(spark, with_ner):
+@pytest.mark.parametrize("with_ner, use_blobs",
+                         [(True, False), (False, False), (True, True)],
+                         ids=["True", "False", "blobs"])
+def test_html_span_kind_interleaved_end_to_end(spark, with_ner, use_blobs):
     """kind='html' is a first-class span kind: raw markup spans extract
     their MAIN CONTENT (boilerplate stripped, entities decoded), feed the
     same normalizer as text spans, and keep their interleaved position
     under span-sequence equality — one document mixing text + html +
-    media, with and without NER."""
+    media, with and without NER, and with media bytes from a blobs table
+    (the cost-balanced spread, where an html row has no payload)."""
     from ner_ocr_spark import corpus, pipeline
     from ner_ocr_spark.kernels.normalize import normalize_text
     from tests.conftest import DOC_SCHEMA
@@ -150,7 +153,15 @@ def test_html_span_kind_interleaved_end_to_end(spark, with_ner):
         }],
         DOC_SCHEMA,
     )
-    out = pipeline.run(spark, docs, with_ner=with_ner)
+    kw = {}
+    if use_blobs:
+        kw["blobs"] = spark.createDataFrame(
+            [(ref, bytearray(corpus.render_media_blob(ref)))],
+            "media_ref string, image_png binary",
+        )
+        kw["blob_resolver"] = lambda r: (_ for _ in ()).throw(
+            RuntimeError("resolver must not be called"))
+    out = pipeline.run(spark, docs, with_ner=with_ner, **kw)
     spans = {r["doc_id"]: r["spans"] for r in out.collect()}["h0"]
     got = [(s["kind"], s["text"], s["media_ref"]) for s in spans]
     want = (
@@ -207,38 +218,39 @@ def test_unquoted_href_trailing_slash_keeps_anchor_open():
     assert stats[a][1] == stats[a][0] > 0  # all of it counted as link text
 
 
-def test_ner_stage_absorbs_html_kernel_failure(spark, monkeypatch):
-    """A per-row kernel failure in the fused html extraction absorbs to an
-    error row (M6): error set, text/entities/bio NULL, row survives."""
+def test_ocr_stage_absorbs_html_kernel_failure(monkeypatch):
+    """html rows ride the python branch's stage: a main-content failure on
+    one row absorbs to that row's error row (M6: error set, text/entities/
+    bio NULL); the other html row of the batch extracts and is tagged."""
     import pandas as pd
 
     from ner_ocr_spark import htmlx as hx
-    from ner_ocr_spark.operators.extract import make_ner_stage
-    from pyspark.sql import types as T
+    from ner_ocr_spark.kernels.normalize import normalize_text
+    from ner_ocr_spark.operators.extract import make_ocr_stage
 
-    def boom(h):
-        raise ValueError("synthetic kernel failure")
+    real = hx.main_text
 
-    monkeypatch.setattr(hx, "main_text", boom)
-    schema = T.StructType([
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("error", T.StringType()),
-    ])
-    fn, _ = make_ner_stage([("alice", "PER")], passthrough=schema)
+    def flaky(h):
+        if "boom" in h:
+            raise ValueError("synthetic kernel failure")
+        return real(h)
+
+    monkeypatch.setattr(hx, "main_text", flaky)
+    stage = make_ocr_stage(None, gazetteer=[("alice", "PER")])
     batch = pd.DataFrame({
-        "doc_id": ["d", "d"], "kind": ["text", "html"],
-        "text": ["alice spoke", "<p>x</p>"], "error": [None, None],
+        "doc_id": ["d", "d"], "span_idx": [0, 1], "kind": ["html", "html"],
+        "text": ["<p>boom</p>", "<p>alice spoke</p>"], "media_ref": [None, None],
     })
-    out = pd.concat(list(fn(iter([batch]))))
+    out = pd.concat(list(stage(iter([batch])))).reset_index(drop=True)
     assert len(out) == 2
-    html_row = out[out["kind"] == "html"].iloc[0]
-    assert "synthetic kernel failure" in html_row["error"]
-    assert html_row["text"] is None or pd.isna(html_row["text"])
-    assert html_row["entities"] is None and html_row["bio"] is None
-    text_row = out[out["kind"] == "text"].iloc[0]
-    assert text_row["error"] is None and len(text_row["entities"]) == 1
+    bad, good = out.to_dict("records")
+    assert bad["span_idx"] == 0 and "synthetic kernel failure" in bad["error"]
+    for col in ("text", "entities", "bio"):
+        assert bad[col] is None or (not isinstance(bad[col], list)
+                                    and pd.isna(bad[col])), col
+    assert good["span_idx"] == 1 and good["error"] is None
+    assert good["text"] == normalize_text("alice spoke")
+    assert good["score"] == 1.0 and len(good["entities"]) == 1
 
 
 def test_cli_html_mode(spark, tmp_path, monkeypatch):

@@ -82,8 +82,13 @@ def test_extraction_plan_compiles_without_codegen_fallback(spark, with_ner):
     JVM's 64 KB method limit: with the interpreted fallback off, an
     oversized stage raises `Code grows beyond 64 KB` instead of silently
     running interpreted. collect(), not count(): count() prunes `text` and
-    hides the overflow. Without NER, text rows stay in the JVM and html
-    rows ride the NER stage, so the plan has no ArrowEvalPython."""
+    hides the overflow.
+
+    The plan has two branches in both NER modes: the source explodes
+    twice (text branch + python branch), one python stage serves media,
+    pdf and html spans, and the NER stage — with NER only — sees the slim
+    (doc_id, span_idx, text) text rows. Without NER, text rows stay in
+    the JVM, so the plan has no ArrowEvalPython."""
     from ner_ocr_spark import corpus, pipeline
     from tests.conftest import DOC_SCHEMA
 
@@ -94,6 +99,14 @@ def test_extraction_plan_compiles_without_codegen_fallback(spark, with_ner):
         assert out.collect()
     finally:
         spark.conf.unset("spark.sql.codegen.fallback")
+    # AQE prints the final and the initial plan: count in the final one
+    plan = _executed(out).split("== Initial Plan ==")[0]
+    assert plan.count("Generate posexplode") == 2, plan
+    stages = re.findall(r"MapInPandas stage\(([^)]*)\)#\d+, \[([^\]]*)\]", plan)
+    assert len(stages) == (2 if with_ner else 1), plan
+    ner_inputs = [re.sub(r"#\d+", "", args).split(", ")
+                  for args, outs in stages if "transformer_text" not in outs]
+    assert ner_inputs == ([["doc_id", "span_idx", "text"]] if with_ner else [])
     if not with_ner:
         assert "ArrowEvalPython" not in _executed(out)
 

@@ -6,7 +6,6 @@ normalizes and tags, in both NER modes of the pipeline)."""
 from __future__ import annotations
 
 import pandas as pd
-import pytest
 
 from ner_ocr_spark import corpus
 from ner_ocr_spark.operators.extract import make_ocr_stage
@@ -17,14 +16,13 @@ def _null(v) -> bool:
     return v is None or (not isinstance(v, list) and pd.isna(v))
 
 
-@pytest.mark.parametrize("gazetteer", [corpus.GAZETTEER], ids=["fused"])
-def test_ocr_stage_span_fails_as_a_unit(gazetteer):
+def test_ocr_stage_span_fails_as_a_unit():
     """A two-page PDF whose second page is not a valid PNG yields ONE error
     row for the span — never page 1's lines plus an error row under the
     same (span_idx, line_idx=0) key."""
     pages = [corpus.render_media_blob("doc00000011/m0"),
              b"\x89PNG\r\n\x1a\nGARBAGE"]
-    stage = make_ocr_stage(None, gazetteer=gazetteer,
+    stage = make_ocr_stage(None, gazetteer=corpus.GAZETTEER,
                            pdf_rasterizer=lambda blob, zoom: pages)
     batch = pd.DataFrame({
         "doc_id": ["d"], "span_idx": [3], "kind": ["pdf"],
