@@ -46,8 +46,6 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
                    help="checkpoint commit granularity (doc_id hash chunks)")
     p.add_argument("--refine-below", type=float, default=None,
                    help="second-pass OCR refinement threshold (M2 analog)")
-    p.add_argument("--entities-yaml", default=None,
-                   help="dynamic entity schema YAML (entity_builder parity)")
     p.add_argument("--gazetteer", default=None,
                    help="CSV of surface,entity_type (default: built-in)")
     p.add_argument("--master", default=None)
@@ -200,29 +198,11 @@ def main(argv: list[str] | None = None) -> int:
         )
         print(json.dumps(stats))
     else:  # entity: stage-2 over stage-1 span rows
-        from pyspark.sql import functions as F
+        from ner_ocr_spark.workbench import entity_pages
 
-        from ner_ocr_spark import corpus as corpus_mod
-        from ner_ocr_spark.operators.extract import make_ner_stage
-        from ner_ocr_spark.operators.layout import to_markdown
-
-        rows = spark.read.parquet(args.input)
-        regions = rows.filter(
-            # OCR-derived regions: native media spans AND rasterized pdf pages
-            F.col("kind").isin("media", "pdf") & F.col("error").isNull()
-            & (F.size(F.coalesce("box", F.array())) == 4)
-        ).select(
-            "doc_id",
-            F.element_at("box", 2).alias("y"),
-            F.element_at("box", 1).alias("x"),
-            "text",
-        )
-        pages = to_markdown(regions, args.line_threshold, args.gap_threshold)
-        ner_fn, schema = make_ner_stage(
-            gaz if gaz is not None else corpus_mod.GAZETTEER,
-            text_col="page_text", passthrough=pages.schema,
-        )
-        pages.mapInPandas(ner_fn, schema).write.mode("overwrite").parquet(args.output)
+        pages = entity_pages(spark.read.parquet(args.input), gaz,
+                             args.line_threshold, args.gap_threshold)
+        pages.write.mode("overwrite").parquet(args.output)
         print(json.dumps({"mode": "entity", "output": args.output}))
     spark.stop()
     return 0

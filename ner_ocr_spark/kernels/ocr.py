@@ -8,8 +8,9 @@ with a testable classical pipeline (SURVEY.md §2.8 M1/M2):
     projection-profile deskew -> line segmentation (horizontal projection) ->
     cell segmentation (vertical projection) -> glyph template classification.
 
-Every stage is a pure function; the Spark side wraps `ocr_page` /
-`recognize_batch` in `mapInPandas` (see operators/extract.py). Emits the
+Every stage is a pure function; the Spark side wraps `ocr_page` in
+`mapInPandas` (see operators/extract.py), and the region crops cut boxes
+from `page_frame`'s gray page (operators/crops.py). Emits the
 reference's OCRResult shape per line: (poly, box, text, score)
 (/root/reference/src/custom_types/data.py:12-22).
 """
@@ -452,10 +453,13 @@ def recognize_mask(mask: np.ndarray) -> list[LineResult]:
     return results
 
 
-def ocr_page(
+def page_frame(
     png_bytes: bytes, max_side_limit: int = MAX_SIDE_LIMIT, step: float = 0.25
-) -> list[LineResult]:
-    """Full kernel: decode -> resize -> Otsu -> despeckle -> deskew -> recognize.
+) -> tuple[np.ndarray, np.ndarray]:
+    """decode -> resize -> Otsu -> despeckle -> deskew: the (gray, ink mask)
+    pair in the frame `recognize_mask` reads — the deskewed, ink-cropped
+    page every LineResult.box is measured in (the resized page itself when
+    no rotation is needed).
 
     `step` is the deskew angle grid: the first pass runs the default, the
     refine pass (operators/extract) runs REFINE_STEP — one recipe, so both
@@ -483,7 +487,14 @@ def ocr_page(
             gray = gray[y0:y1, x0:x1]
         gray = rotate_gray(gray, angle, bg)
         mask = despeckle(binarize(gray))
-    return recognize_mask(mask)
+    return gray, mask
+
+
+def ocr_page(
+    png_bytes: bytes, max_side_limit: int = MAX_SIDE_LIMIT, step: float = 0.25
+) -> list[LineResult]:
+    """Full kernel: `page_frame` then `recognize_mask`."""
+    return recognize_mask(page_frame(png_bytes, max_side_limit, step)[1])
 
 
 def ocr_text(png_bytes: bytes, max_side_limit: int = MAX_SIDE_LIMIT) -> tuple[str, float]:

@@ -6,10 +6,12 @@ path (/root/reference/src/bounding_box.py:21-79,166-180); the JSON sink
 strips it before serialization (/root/reference/src/utils.py:131-135 — our
 sinks.PAYLOAD_COLS already lists bbox_image).
 
-Spark shape: one map-only mapInPandas over OCR rows — the page is decoded
-once per media_ref within a batch (rows for one page co-locate because the
-OCR stage emitted them together), each region's box is cropped with `pad`
-context, and the crop is re-encoded as PNG bytes in a BinaryType column.
+Spark shape: one map-only mapInPandas over OCR rows — the page's OCR
+frame (kernels/ocr.page_frame: the deskewed, ink-cropped page the boxes
+are measured in) is built once per media_ref within a batch (rows for one
+page co-locate because the OCR stage emitted them together), each region's
+box is cropped from it with `pad` context, and the crop is re-encoded as
+PNG bytes in a BinaryType column.
 Crops never shuffle unless the caller moves them (sinks strip them first).
 """
 
@@ -27,21 +29,24 @@ def make_crop_stage(
     blob_resolver: Callable[[str], bytes] | None = None,
     pad: int = 0,
     rgba: bool = False,
-    max_side_limit: int = 1500,
 ) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
     """Input: OCR_SCHEMA-shaped rows (media_ref + box required). Output:
     same rows + bbox_image (PNG bytes; None for text rows / error rows /
     missing boxes). rgba=True emits the reference's RGBA shape (gray
     replicated, alpha 255 inside the box); default grayscale PNG is 4x
-    smaller and OCR-equivalent."""
+    smaller and OCR-equivalent.
+
+    A box is cut from the frame it was measured in: the first pass's
+    deskewed, ink-cropped gray page (kernels/ocr.page_frame), not the
+    decoded page — on a skewed page the two differ by the ink-bbox offset
+    and the rotation."""
     from ner_ocr_spark import corpus
 
-    resolver = blob_resolver or (lambda ref: corpus.render_media_blob(ref))
+    resolver = blob_resolver or corpus.render_media_blob
 
     def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
-        from ner_ocr_spark.imageio import decode_image_gray
         from ner_ocr_spark.kernels import ocr
         from ner_ocr_spark.png import encode_gray, encode_rgb
 
@@ -51,9 +56,7 @@ def make_crop_stage(
             def page_for(ref: str):
                 if ref not in cache:
                     try:
-                        cache[ref] = ocr.bounded_resize(
-                            decode_image_gray(resolver(ref)), max_side_limit
-                        )
+                        cache[ref] = ocr.page_frame(resolver(ref))[0]
                     except Exception:  # noqa: BLE001 — absorb, crop stays None
                         cache[ref] = None
                 return cache[ref]

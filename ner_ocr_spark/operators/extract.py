@@ -9,16 +9,24 @@ per-row error absorption into an `error` column (failures never kill the job,
 /root/reference/src/pipelines/base.py:44-57 semantics), and an in-batch
 wall-clock guard replacing the reference's thread-pool timeout
 (/root/reference/src/utils.py:21-46).
+
+The OCR second pass has one form: the OCR stage's `refine_below` branch
+and the workbench's `make_refine_stage` re-read a page with one recipe,
+get its pages from one `operators/pdf.blob_pages` step and pair refined
+lines to first-pass rows by one geometry rule, `pair_lines` — a plain
+function that can be checked outside Spark.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterator, Sequence
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import types as T
 
+from ner_ocr_spark.operators.pdf import Rasterizer, blob_pages
 from ner_ocr_spark.operators.rows import absorb_rows
 
 # one row per recognized OCR line (reference OCRResult analog, long form).
@@ -73,27 +81,49 @@ def tag_columns(tagger, text: str) -> dict:
     }
 
 
+def pair_lines(row_boxes: Sequence, lines: Sequence) -> np.ndarray:
+    """The second pass's one pairing rule: for each first-pass row box
+    ([x0, y0, x1, y1]), the index into the refined `lines` of the line
+    whose box covers the most of the row's height — only when it covers at
+    least half of it — else -1.
+
+    Both passes are one recipe with one box frame (same resize scale, noise
+    erase and ink-bbox crop; the deskew angles differ slightly), so line
+    counts and line indexes never enter: a fine pass that finds a spurious
+    extra line, a page split across Arrow batches or a low-score subset of
+    its rows cannot shift the pairing."""
+    ry = np.array([(b[1], b[3]) for b in row_boxes], dtype=float).reshape(-1, 2)
+    if not len(lines):
+        return np.full(len(ry), -1)
+    ly = np.array([(ln.box[1], ln.box[3]) for ln in lines], dtype=float)
+    # cover[r, j]: how much of row r's height line j covers
+    cover = np.minimum(ry[:, 1:], ly[:, 1]) - np.maximum(ry[:, :1], ly[:, 0])
+    best = cover.argmax(axis=1)
+    hit = (cover[np.arange(len(ry)), best]
+           >= 0.5 * np.maximum(ry[:, 1] - ry[:, 0], 1e-9))
+    return np.where(hit, best, -1)
+
+
 def make_ocr_stage(
     blob_resolver: Callable[[str], bytes] | None = None,
     batch_timeout_s: float = 400.0,
-    max_side_limit: int = 1500,
     refine_below: float | None = None,
     *,
     gazetteer: list[tuple[str, str]],
-    pdf_rasterizer: Callable[[bytes, float], list[bytes]] | None = None,
+    pdf_rasterizer: Rasterizer | str | None = None,
     pdf_max_pages: int | None = None,
-    pdf_zoom: float = 2.0,
 ) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
     """Build the python-branch mapInPandas function (OCR and html).
 
     Input batches: (doc_id, span_idx, kind, media_ref[, text][, image_png]).
     If an `image_png` column is present (blobs joined upstream) it is used;
     a NULL image_png — and the column's absence — falls back to
-    `blob_resolver(media_ref)`, the production shape where media_ref points
-    into an object store and the fetch happens executor-side (no image
-    bytes ever shuffle). A kind='html' row is not OCR'd: its `text` holds
-    raw markup, and `htmlx.main_text` makes its one line (line_idx 0,
-    score 1.0, no box); only html rows need the `text` column.
+    `blob_resolver(media_ref)` (default: the synthetic corpus renderer),
+    the production shape where media_ref points into an object store and
+    the fetch happens executor-side (no image bytes ever shuffle). A
+    kind='html' row is not OCR'd: its `text` holds raw markup, and
+    `htmlx.main_text` makes its one line (line_idx 0, score 1.0, no box);
+    only html rows need the `text` column.
 
     Output: `ocr_ner_schema()`, one row per recognized line that is
     non-blank after normalizing, line_idx ordered top-to-bottom. The
@@ -106,7 +136,10 @@ def make_ocr_stage(
 
     When `refine_below` is given, a page with any line scoring below it is
     re-read by the same kernel recipe on the finer REFINE_STEP deskew grid
-    (reference M2 analog); the result rides transformer_text/score.
+    (reference M2 analog). The first pass always stays: each row takes
+    the refined line `pair_lines` pairs it with (the workbench refine
+    stage's rule) in transformer_text/score, a row without one keeps them
+    NULL, and a failed second pass refines nothing.
 
     Every recognized line is normalized in-stage (python twin of
     operators/normalize.normalize_expr — pinned equal by tests; the P4
@@ -117,22 +150,21 @@ def make_ocr_stage(
     in both NER modes of the pipeline. Error rows keep text, entities and
     bio NULL.
 
-    When `pdf_rasterizer` is given, blobs sniffing as PDF (%PDF- magic)
-    expand to pages IN-STAGE — each page OCRs with line_idx base
-    page_idx * 100000 and `pdf_max_pages` truncates the page list
-    (reference max_num_imgs, its src/pdf_processing.py:21-73).
-    Fusing the 1:N expansion here (rather than a separate pdf branch with
-    its own mapInPandas + posexplode, the round-2 design) keeps the plan at
-    ONE source scan, ONE shuffle and ONE python crossing for mixed corpora,
-    and page bitmaps never serialize through Arrow at all. A successfully
-    parsed zero-page PDF emits no rows (it never falls back to decoding
-    the PDF blob as an image — round-2 ADVICE).
+    When `pdf_rasterizer` is given, a blob expands to its pages IN-STAGE
+    through `operators/pdf.blob_pages` (PDF sniff, rasterize at PDF_ZOOM,
+    truncate to `pdf_max_pages` — the reference's max_num_imgs, its
+    src/pdf_processing.py:21-73); each page OCRs with line_idx base
+    page_idx * 100000. Fusing the 1:N expansion here (rather than a
+    separate pdf branch with its own mapInPandas + posexplode, the round-2
+    design) keeps the plan at ONE source scan, ONE shuffle and ONE python
+    crossing for mixed corpora, and page bitmaps never serialize through
+    Arrow at all.
     """
     from ner_ocr_spark import corpus, htmlx
     from ner_ocr_spark.kernels import ocr
     from ner_ocr_spark.kernels.normalize import normalize_text
 
-    resolver = blob_resolver or (lambda ref: corpus.render_media_blob(ref))
+    resolver = blob_resolver or corpus.render_media_blob
 
     def page_lines(page) -> list[dict]:
         """The line columns of one page, top to bottom."""
@@ -141,31 +173,20 @@ def make_ocr_stage(
             # extracted the text layer directly — its lines are exact,
             # score 1.0, no OCR
             return [{"text": t, "score": 1.0} for t in page.split("\n") if t]
-        lines = ocr.ocr_page(bytes(page), max_side_limit)
-        t_lines = None
-        if refine_below is not None and any(lr.score < refine_below for lr in lines):
-            # M2 analog: score-gated second pass, the same recipe on a finer
-            # deskew grid; results ride transformer_text/score per line
-            # (never overwrite the first pass)
-            try:
-                t_lines = ocr.ocr_page(bytes(page), max_side_limit,
-                                       step=ocr.REFINE_STEP)
-            except Exception:  # noqa: BLE001 — keep the first pass
-                t_lines = None
-            if t_lines is not None and len(t_lines) != len(lines):
-                # segmentation changed -> per-line alignment is undefined;
-                # keep whichever whole pass scored higher as the first
-                # pass, attach no transformer
-                s1 = sum(lr.score for lr in lines) / len(lines)
-                s2 = sum(lr.score for lr in t_lines) / max(len(t_lines), 1)
-                if s2 > s1:
-                    lines = t_lines
-                t_lines = None
+        lines = ocr.ocr_page(page)
         out = [{"text": lr.text, "box": lr.box, "score": float(lr.score)}
                for lr in lines]
-        for ln, tr in zip(out, t_lines or []):
-            ln["transformer_text"] = tr.text
-            ln["transformer_score"] = float(tr.score)
+        if refine_below is not None and any(lr.score < refine_below for lr in lines):
+            # M2 analog: score-gated second pass, the same recipe on a finer
+            # deskew grid
+            try:
+                refined = ocr.ocr_page(page, step=ocr.REFINE_STEP)
+            except Exception:  # noqa: BLE001 — keep the first pass
+                refined = []
+            for ln, j in zip(out, pair_lines([lr.box for lr in lines], refined)):
+                if j >= 0:
+                    ln["transformer_text"] = refined[j].text
+                    ln["transformer_score"] = float(refined[j].score)
         return out
 
     def span_lines(row) -> list[tuple[int, dict]]:
@@ -175,10 +196,7 @@ def make_ocr_stage(
             return [(0, {"text": htmlx.main_text(row.text), "score": 1.0})]
         png = getattr(row, "image_png", None)
         raw = bytes(png if png is not None else resolver(row.media_ref))
-        if pdf_rasterizer is not None and raw[:5] == b"%PDF-":
-            pages = pdf_rasterizer(raw, pdf_zoom)[:pdf_max_pages]
-        else:
-            pages = [raw]
+        pages = blob_pages(raw, pdf_rasterizer, pdf_max_pages)
         return [(pi * 100000 + li, ln) for pi, page in enumerate(pages)
                 for li, ln in enumerate(page_lines(page))]
 
@@ -217,85 +235,62 @@ def make_ocr_stage(
 
 def make_refine_stage(
     blob_resolver: Callable[[str], bytes] | None = None,
-    max_side_limit: int = 1500,
-    pdf_rasterizer: Callable[[bytes, float], list[bytes]] | str | None = "auto",
-    pdf_zoom: float = 2.0,
+    pdf_rasterizer: Rasterizer | str | None = "auto",
     pdf_max_pages: int | None = None,
 ) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
     """Second-pass refinement (reference M2 / TrOCR analog,
-    /root/reference/src/transformer_ocr.py:189-283): re-recognize a page
-    with the first-pass recipe on the finer REFINE_STEP deskew grid
-    (kernels/ocr.ocr_page) and record the result in transformer_text /
-    transformer_score (never overwriting the first pass — OCRResult carries
-    both, /root/reference/src/custom_types/data.py:20-21; downstream P4
-    coalesce picks the winner). The caller filters to low-score rows first
-    (two-pass enhancement pruning, SURVEY.md §4.3.4 — each region enhanced
-    exactly ONCE, unlike the reference CLI's accidental O(k^2) loop).
+    the reference's src/transformer_ocr.py:189-283) over OCR_SCHEMA rows
+    that already exist: the workbench's enhance stage. It re-reads a page
+    exactly as `make_ocr_stage(refine_below=)` does — the first-pass
+    recipe on the finer REFINE_STEP deskew grid — and pairs by the same
+    `pair_lines` rule, recording the result in transformer_text /
+    transformer_score (never overwriting the first pass — OCRResult
+    carries both, the reference's src/custom_types/data.py:20-21;
+    downstream P4 coalesce picks the winner). The caller filters to
+    low-score rows first (two-pass enhancement pruning, SURVEY.md §4.3.4 —
+    each region enhanced exactly ONCE, unlike the reference CLI's
+    accidental O(k^2) loop).
 
-    PDF-derived rows refine too: a resolved blob sniffing %PDF- is
-    rasterized (pdf_rasterizer: "auto" = pypdfium2 else the from-scratch
-    pdfio extractor, mirroring pipeline.extract_spans) and each row's page
-    comes from its line_idx base (page_idx * 100000 + line — the pdf branch
-    ordering invariant), so workbench enhancement covers pdf pages with the
+    Pages come from the OCR stage's own `operators/pdf.blob_pages` step:
+    an input batch's `image_png` column (the blobs= media path, where
+    payloads ride the rows) is the blob when non-null, else
+    `blob_resolver(media_ref)` (default: the synthetic corpus renderer);
+    a PDF blob is rasterized once per document ("auto" = pypdfium2 else
+    the from-scratch pdfio reader) and each row's page comes from its
+    line_idx base (page_idx * 100000 + line), so pdf pages refine with the
     same semantics as native media. pdf_rasterizer=None keeps pdf rows
-    untouched (their rasterization attempt fails closed to []);
-    pdf_max_pages truncates rasterization the same way the first pass did
-    (rows past it cannot exist, so rasterizing those pages is pure waste).
+    untouched (their page fails to decode and refines nothing); born-digital
+    text pages are exact already and never refine.
 
-    When an input batch carries an `image_png` column (the blobs= media
-    path, where payloads ride the rows instead of resolving by ref), the
-    group's first non-null payload IS the blob — the resolver is only the
-    fallback.
-
-    Pairing is by geometry alone: both passes are one recipe with one box
-    frame (same resize scale, noise erase and ink-bbox crop; the angles
-    differ slightly), so a row takes the refined line whose box covers the
-    most of the row's height, and only when that covers at least half of
-    it. Line counts and line indexes never enter, so a page split across
-    Arrow batches, a low-score subset of its rows, or a fine pass that
-    finds a spurious extra line cannot shift the pairing. Output:
-    OCR_SCHEMA rows (extras dropped). Failures, rows without a box, and
-    rows already carrying an error keep the first-pass row (error
+    Line counts and line indexes never enter the pairing, so a page split
+    across Arrow batches or a low-score subset of its rows pairs the same.
+    Output: OCR_SCHEMA rows (extras dropped). Failures, rows without a
+    box, and rows already carrying an error keep the first-pass row (error
     absorption)."""
     from ner_ocr_spark import corpus
     from ner_ocr_spark.kernels import ocr
 
-    resolver = blob_resolver or (lambda ref: corpus.render_media_blob(ref))
-    if pdf_rasterizer == "auto":
-        from ner_ocr_spark.operators.pdf import default_page_source
-
-        pdf_rasterizer = default_page_source()
+    resolver = blob_resolver or corpus.render_media_blob
 
     def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from collections import OrderedDict
 
-        import numpy as np
-
         # bounded LRUs that SURVIVE batch boundaries: round 2 cleared the
         # cache per batch, so a page whose rows straddled two Arrow batches
-        # decoded twice (round-2 verdict #5). page_cache holds the resolved
-        # blob as a page list ([blob] for native images, rasterized pages
-        # for PDFs — rasterize once per document, not once per page);
-        # line_cache holds recognized lines per (ref, page).
-        page_cache: OrderedDict[str, list[bytes]] = OrderedDict()
+        # decoded twice (round-2 verdict #5). page_cache holds the blob's
+        # page list ([blob] for native images, rasterized pages for PDFs —
+        # rasterize once per document, not once per page); line_cache
+        # holds recognized lines per (ref, page).
+        page_cache: OrderedDict[str, list] = OrderedDict()
         line_cache: OrderedDict[tuple[str, int], list] = OrderedDict()
         page_cap, line_cap = 8, 64
 
-        def page_list(ref: str, payload: bytes | None) -> list[bytes]:
+        def page_list(ref: str, payload: bytes | None) -> list:
             if ref in page_cache:
                 page_cache.move_to_end(ref)
                 return page_cache[ref]
-            raw = bytes(payload) if payload is not None else bytes(resolver(ref))
-            if pdf_rasterizer is not None and raw[:5] == b"%PDF-":
-                # text pages (str from pdfio_page_source) ride through as
-                # str — refined_lines skips them (their first-pass rows are
-                # exact, score 1.0; nothing to refine)
-                pages = [p if isinstance(p, str) else bytes(p)
-                         for p in pdf_rasterizer(raw, pdf_zoom)]
-                if pdf_max_pages is not None:
-                    pages = pages[: int(pdf_max_pages)]
-            else:
-                pages = [raw]
+            raw = bytes(payload if payload is not None else resolver(ref))
+            pages = blob_pages(raw, pdf_rasterizer, pdf_max_pages)
             page_cache[ref] = pages
             if len(page_cache) > page_cap:
                 page_cache.popitem(last=False)
@@ -311,8 +306,7 @@ def make_refine_stage(
                 if page >= len(pages) or isinstance(pages[page], str):
                     lines = []
                 else:
-                    lines = ocr.ocr_page(pages[page], max_side_limit,
-                                         step=ocr.REFINE_STEP)
+                    lines = ocr.ocr_page(pages[page], step=ocr.REFINE_STEP)
             except Exception:  # noqa: BLE001
                 lines = []
             line_cache[key] = lines
@@ -344,25 +338,16 @@ def make_refine_stage(
                     if not len(rows):
                         continue
                     lines = refined_lines(ref, int(page), payload)
-                    if not lines:
-                        continue
-                    ry = np.array([(b[1], b[3]) for b in boxes[rows]], dtype=float)
-                    ly = np.array([(ln.box[1], ln.box[3]) for ln in lines],
-                                  dtype=float)
-                    # cover[r, j]: how much of row r's height line j covers
-                    cover = (np.minimum(ry[:, 1:], ly[:, 1])
-                             - np.maximum(ry[:, :1], ly[:, 0]))
-                    best = cover.argmax(axis=1)
-                    hit = (cover[np.arange(len(rows)), best]
-                           >= 0.5 * np.maximum(ry[:, 1] - ry[:, 0], 1e-9))
+                    pair = pair_lines(boxes[rows], lines)
+                    hit = pair >= 0
                     if not hit.any():
                         continue
                     sel = pdf.index[rows[hit]]
                     pdf.loc[sel, "transformer_text"] = [
-                        lines[j].text for j in best[hit]
+                        lines[j].text for j in pair[hit]
                     ]
                     pdf.loc[sel, "transformer_score"] = [
-                        float(lines[j].score) for j in best[hit]
+                        float(lines[j].score) for j in pair[hit]
                     ]
             # project to the declared output schema (the input batch may
             # carry an extra image_png payload column)

@@ -1,13 +1,15 @@
-"""PDF operators: the pipeline's page-source hook and the per-page census.
+"""PDF operators: the pipeline's page source and the per-page census.
 
-`default_page_source` is the pdf hook extract_spans and the workbench
-refine stage resolve by default: the OCR mapInPandas stage
-(operators/extract.py) sniffs %PDF- blobs and expands them to pages
-in-stage, so mixed corpora keep one scan, one shuffle and one python
-crossing, and page bitmaps never serialize through Arrow. It mirrors the
-reference's primary input path (its src/pdf_processing.py:21-73 —
-pypdfium2 render at zoom=2.0, truncated to `max_num_imgs` pages;
-dispatched for '.pdf' at src/bounding_box.py:300-303).
+`blob_pages` is the one blob -> pages step of the OCR stage and the
+workbench refine stage (operators/extract.py): a blob sniffing as PDF
+(%PDF- magic) is rasterized at PDF_ZOOM and truncated to `max_pages`,
+anything else is one page. "auto" resolves to `default_page_source` here
+and nowhere else. Expanding pages in-stage keeps mixed corpora at one
+scan, one shuffle and one python crossing, and page bitmaps never
+serialize through Arrow. It mirrors the reference's primary input path
+(its src/pdf_processing.py:21-73 — pypdfium2 render at zoom=2.0,
+truncated to `max_num_imgs` pages; dispatched for '.pdf' at
+src/bounding_box.py:300-303).
 
 `pdf_report` is the map-only per-page census (page kind, text-layer
 lines, /Info metadata) over a table of PDF bytes.
@@ -22,14 +24,16 @@ from pyspark.sql import types as T
 
 Rasterizer = Callable[[bytes, float], list[bytes]]
 
+PDF_ZOOM = 2.0  # render scale of PDF pages, the reference's zoom
+
 
 def default_page_source() -> Rasterizer:
-    """The pipeline's default pdf hook (extract_spans / make_refine_stage
-    "auto"): pypdfium2 rasterization when installed (the reference's
-    backend — renders every page, born-digital ones included, at `zoom`
-    scale to encoded image bytes), else pdfio.pdfio_page_source, which
-    returns image pages as PNG bytes AND born-digital text pages as str
-    (the OCR stage emits those lines directly, skipping OCR)."""
+    """The page source "auto" names: pypdfium2 rasterization when
+    installed (the reference's backend — renders every page, born-digital
+    ones included, at `zoom` scale to encoded image bytes), else
+    pdfio.pdfio_page_source, which returns image pages as PNG bytes AND
+    born-digital text pages as str (the OCR stage emits those lines
+    directly, skipping OCR)."""
     try:
         import pypdfium2  # noqa: F401 — optional dependency
     except ImportError:
@@ -52,6 +56,23 @@ def default_page_source() -> Rasterizer:
         return out
 
     return rasterize
+
+
+def blob_pages(
+    raw: bytes, page_source: Rasterizer | str | None, max_pages: int | None
+) -> list[bytes | str]:
+    """The pages of one media blob: `page_source(raw, PDF_ZOOM)[:max_pages]`
+    when the blob sniffs as PDF and a page source is given ("auto" =
+    `default_page_source()`), else `[raw]`. A page is image bytes, or a
+    str of newline-joined lines for a born-digital page; a successfully
+    parsed zero-page PDF has no pages (it never falls back to decoding
+    the PDF as an image)."""
+    if page_source is None or raw[:5] != b"%PDF-":
+        return [raw]
+    if page_source == "auto":
+        page_source = default_page_source()
+    return [p if isinstance(p, str) else bytes(p)
+            for p in page_source(raw, PDF_ZOOM)[:max_pages]]
 
 
 PDF_REPORT_SCHEMA = T.StructType(

@@ -42,6 +42,7 @@ from ner_ocr_spark.operators.extract import (
     ocr_ner_schema,
 )
 from ner_ocr_spark.operators.normalize import normalize_expr
+from ner_ocr_spark.operators.pdf import Rasterizer
 
 SPAN_COLS = ["doc_id", "span_idx", "line_idx", "kind", "text", "media_ref",
              "box", "score", "transformer_text", "transformer_score", "error"]
@@ -79,9 +80,8 @@ def extract_spans(
     gazetteer: list[tuple[str, str]] | None = None,
     with_ner: bool = True,
     refine_below: float | None = None,
-    pdf_rasterizer: Callable[[bytes, float], list[bytes]] | str | None = "auto",
+    pdf_rasterizer: Rasterizer | str | None = "auto",
     pdf_max_pages: int | None = None,
-    pdf_zoom: float = 2.0,
 ) -> DataFrame:
     """Full extraction: ordered (kind, text, media_ref) span rows per doc,
     plus entities/bio when with_ner. The NER mode changes one thing: with
@@ -100,14 +100,14 @@ def extract_spans(
     span_idx, never partition order.
 
     PDF spans (kind='pdf'): pdf_rasterizer is any callable
-    (bytes, zoom) -> list of page payloads, each either png bytes (OCR'd)
-    or a str of newline-joined text lines (emitted directly, score 1.0 —
-    the born-digital path). The default "auto" resolves via
-    operators/pdf.default_page_source — pypdfium2 when installed, else the
-    from-scratch pdfio reader (raster pages composited; born-digital pages
-    extracted as positioned Tj/TJ text, skipping OCR entirely), so real
-    PDF bytes work out of the box. PDF
-    blobs are sniffed (%PDF- magic) and expanded to pages INSIDE the same
+    (bytes, zoom) -> list of page payloads, called at operators/pdf.PDF_ZOOM;
+    each payload is either png bytes (OCR'd) or a str of newline-joined
+    text lines (emitted directly, score 1.0 — the born-digital path). The
+    default "auto" resolves (in operators/pdf.blob_pages) to
+    default_page_source — pypdfium2 when installed, else the from-scratch
+    pdfio reader (raster pages composited; born-digital pages extracted as
+    positioned Tj/TJ text, skipping OCR entirely), so real PDF bytes work
+    out of the box. PDF blobs are sniffed (%PDF- magic) and expanded to pages INSIDE the same
     OCR mapInPandas stage with line_idx base page_idx * 100000, so
     per-document order stays exact and mixed corpora keep ONE source scan /
     ONE shuffle / ONE python crossing (a separate rasterize branch — the
@@ -120,10 +120,6 @@ def extract_spans(
     images and the image sniff rejects them per row).
     """
     spark = documents.sparkSession
-    if pdf_rasterizer == "auto":
-        from ner_ocr_spark.operators.pdf import default_page_source
-
-        pdf_rasterizer = default_page_source()
     spans = explode_spans(documents)
 
     # python-branch width (media, pdf and html rows): defaults to
@@ -175,7 +171,7 @@ def extract_spans(
     py_branch = py.mapInPandas(
         make_ocr_stage(blob_resolver, refine_below=refine_below,
                        gazetteer=gaz, pdf_rasterizer=pdf_rasterizer,
-                       pdf_max_pages=pdf_max_pages, pdf_zoom=pdf_zoom),
+                       pdf_max_pages=pdf_max_pages),
         ocr_ner_schema(),
     )
 

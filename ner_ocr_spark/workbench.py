@@ -82,8 +82,8 @@ class Workbench:
         extract_kwargs.setdefault("with_ner", False)
         self._extract_opts = {
             k: extract_kwargs[k]
-            for k in ("blob_resolver", "pdf_rasterizer", "pdf_zoom",
-                      "pdf_max_pages", "blobs")
+            for k in ("blob_resolver", "pdf_rasterizer", "pdf_max_pages",
+                      "blobs")
             if k in extract_kwargs
         }
         return self._set("ocr", pipeline.extract_spans(docs, **extract_kwargs))
@@ -108,7 +108,7 @@ class Workbench:
         )
         return self._set("search", search_op(regions, search_type, task=task, **query))
 
-    def run_enhancement(self, refine_below: float = 1.01) -> DataFrame:
+    def run_enhancement(self) -> DataFrame:
         """Stage 4: refine ONLY searched regions (UI semantics: enhance
         after search, once, P6 guard). Re-runs the fine-deskew second pass
         for the matched pages, recording results in transformer_text/score
@@ -161,7 +161,6 @@ class Workbench:
             make_refine_stage(
                 blob_resolver=opts.get("blob_resolver"),
                 pdf_rasterizer=opts.get("pdf_rasterizer", "auto"),
-                pdf_zoom=opts.get("pdf_zoom", 2.0),
                 pdf_max_pages=opts.get("pdf_max_pages"),
             ),
             OCR_SCHEMA,
@@ -179,29 +178,45 @@ class Workbench:
         line_threshold: float = 10.0,
         gap_threshold: float = 50.0,
     ) -> DataFrame:
-        """Stage 5: page-text assembly (W1-W4/A3-A5) + batched NER over the
-        assembled text — mirrors the reference entity pipeline's
-        _to_markdown -> extract_entities flow
-        (/root/reference/src/pipelines/entity.py:45-73)."""
-        from ner_ocr_spark.operators.normalize import refined_text_expr
-
+        """Stage 5: `entity_pages` over the enhanced rows (the OCR rows
+        when enhancement has not run)."""
         base = self._results["enhance"] or self._require("ocr")
-        # P4: enhanced text (from run_enhancement's transformer columns)
-        # wins when non-blank, else the first-pass text
-        final_text = refined_text_expr(F.col("transformer_text"), F.col("text"))
-        regions = base.filter(
-            # OCR-derived regions: native media spans AND rasterized pdf pages
-            F.col("kind").isin("media", "pdf") & F.col("error").isNull()
-            & (F.size(F.coalesce("box", F.array())) == 4)
-            & (F.length(final_text) > 0)
-        ).select(
-            "doc_id",
-            F.element_at("box", 2).alias("y"),
-            F.element_at("box", 1).alias("x"),
-            final_text.alias("text"),
+        return self._set(
+            "entities",
+            entity_pages(base, gazetteer, line_threshold, gap_threshold),
         )
-        pages = to_markdown(regions, line_threshold, gap_threshold)
-        gaz = gazetteer if gazetteer is not None else corpus_mod.GAZETTEER
-        ner_fn, schema = make_ner_stage(gaz, text_col="page_text",
-                                        passthrough=pages.schema)
-        return self._set("entities", pages.mapInPandas(ner_fn, schema))
+
+
+def entity_pages(
+    rows: DataFrame,
+    gazetteer: list[tuple[str, str]] | None,
+    line_threshold: float,
+    gap_threshold: float,
+) -> DataFrame:
+    """Page-text assembly (W1-W4/A3-A5) + batched NER over OCR span rows
+    (SPAN_COLS-shaped: the workbench's stage rows, or a stage-1 table for
+    the CLI's entity mode) — the reference entity pipeline's
+    _to_markdown -> extract_entities flow
+    (the reference's src/pipelines/entity.py:45-73). A region's text is
+    the P4 pick: the enhanced transformer_text when it normalizes
+    non-blank, else the first-pass text (pipeline output is coalesced
+    already, so there it is `text`)."""
+    from ner_ocr_spark.operators.normalize import refined_text_expr
+
+    final_text = refined_text_expr(F.col("transformer_text"), F.col("text"))
+    regions = rows.filter(
+        # OCR-derived regions: native media spans AND rasterized pdf pages
+        F.col("kind").isin("media", "pdf") & F.col("error").isNull()
+        & (F.size(F.coalesce("box", F.array())) == 4)
+        & (F.length(final_text) > 0)
+    ).select(
+        "doc_id",
+        F.element_at("box", 2).alias("y"),
+        F.element_at("box", 1).alias("x"),
+        final_text.alias("text"),
+    )
+    pages = to_markdown(regions, line_threshold, gap_threshold)
+    gaz = gazetteer if gazetteer is not None else corpus_mod.GAZETTEER
+    ner_fn, schema = make_ner_stage(gaz, text_col="page_text",
+                                    passthrough=pages.schema)
+    return pages.mapInPandas(ner_fn, schema)

@@ -1,18 +1,28 @@
-"""300-page OCR digest: a bit-identity check for the OCR kernel.
+"""300-page OCR digests: bit-identity checks for the OCR kernel and for the
+OCR stage's second pass.
 
 Renders the corpus pages doc{i:08d}/m0 for i < 300, each at the normal and
-the oversize scale (600 pages), runs `kernels.ocr.ocr_page` at its default
-deskew step on every page, and hashes every recognized line's
-(text, box, score):
+the oversize scale (600 pages), and hashes two things:
 
-    sha256(repr(sorted({(ref, oversize): [(text, tuple(box), score), ...]}.items())))[:16]
+  * `digest`: `kernels.ocr.ocr_page` at its default deskew step on every
+    page, every recognized line's (text, box, score):
 
-A kernel refactor that claims bit-identical output must leave the digest
-unchanged. Pages are rendered by the deterministic corpus renderer, so the
-digest depends only on the kernel (and numpy's float arithmetic).
+        sha256(repr(sorted({(ref, oversize): [(text, tuple(box), score), ...]}.items())))[:16]
 
-Usage: python scripts/ocr_digest.py      # ~1 min on one core
-Prints one JSON line: {"digest", "pages", "lines", "seconds"}.
+  * `refined_digest`: the OCR stage with the second pass forced on every
+    page (`make_ocr_stage(refine_below=1.01)`, the page bytes riding the
+    rows), every output row's (text, box, score, transformer_text,
+    transformer_score) hashed the same way — the first pass, the refine
+    recipe, the pairing of refined lines to first-pass rows, the P4
+    coalesce and the normalizer in one number.
+
+A refactor that claims bit-identical output must leave both unchanged.
+Pages are rendered by the deterministic corpus renderer, so the digests
+depend only on the engine (and numpy's float arithmetic).
+
+Usage: python scripts/ocr_digest.py      # ~3 min on one core
+Prints one JSON line: {"digest", "pages", "lines", "refined_digest",
+"refined_rows", "seconds"}.
 """
 
 from __future__ import annotations
@@ -23,21 +33,42 @@ import sys
 import time
 from pathlib import Path
 
+import pandas as pd
+
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from ner_ocr_spark import corpus
 from ner_ocr_spark.kernels import ocr
+from ner_ocr_spark.operators.extract import make_ocr_stage
 
 N_PAGES = 300
+REFINED_COLS = ["text", "box", "score", "transformer_text", "transformer_score"]
 
 
-def page_lines() -> dict[tuple[str, bool], list[tuple[str, tuple, float]]]:
-    out = {}
+def pages():
     for i in range(N_PAGES):
         ref = f"doc{i:08d}/m0"
         for oversize in (False, True):
-            lines = ocr.ocr_page(corpus.render_media_blob(ref, oversize=oversize))
-            out[(ref, oversize)] = [(l.text, tuple(l.box), l.score) for l in lines]
+            yield (ref, oversize), corpus.render_media_blob(ref, oversize=oversize)
+
+
+def page_lines() -> dict[tuple[str, bool], list[tuple[str, tuple, float]]]:
+    return {key: [(l.text, tuple(l.box), l.score) for l in ocr.ocr_page(png)]
+            for key, png in pages()}
+
+
+def refined_rows() -> dict[tuple[str, bool], list[tuple]]:
+    batches = (pd.DataFrame({
+        "doc_id": [ref], "span_idx": [int(oversize)], "kind": ["media"],
+        "media_ref": [ref], "image_png": [png],
+    }) for (ref, oversize), png in pages())
+    stage = make_ocr_stage(None, refine_below=1.01, gazetteer=corpus.GAZETTEER)
+    out: dict[tuple[str, bool], list[tuple]] = {}
+    for batch in stage(batches):
+        for row in batch.itertuples(index=False):
+            out.setdefault((row.doc_id, bool(row.span_idx)), []).append(tuple(
+                tuple(v) if isinstance(v, list) else (None if pd.isna(v) else v)
+                for v in (getattr(row, c) for c in REFINED_COLS)))
     return out
 
 
@@ -47,11 +78,13 @@ def digest(pages: dict) -> str:
 
 def main() -> None:
     t0 = time.perf_counter()
-    pages = page_lines()
+    first, refined = page_lines(), refined_rows()
     print(json.dumps({
-        "digest": digest(pages),
-        "pages": len(pages),
-        "lines": sum(len(v) for v in pages.values()),
+        "digest": digest(first),
+        "pages": len(first),
+        "lines": sum(len(v) for v in first.values()),
+        "refined_digest": digest(refined),
+        "refined_rows": sum(len(v) for v in refined.values()),
         "seconds": round(time.perf_counter() - t0, 1),
     }))
 

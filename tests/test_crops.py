@@ -7,6 +7,7 @@ import numpy as np
 
 from ner_ocr_spark import corpus, pipeline
 from ner_ocr_spark.imageio import decode_image_gray
+from ner_ocr_spark.kernels import ocr
 from ner_ocr_spark.operators.crops import region_crops
 from ner_ocr_spark.png import decode
 
@@ -18,6 +19,9 @@ def _ocr_rows(spark, documents_df):
 
 
 def test_crops_match_page_pixels(spark, documents_df):
+    """A crop is the box cut from the frame the box was measured in: the
+    first pass's deskewed, ink-cropped page (every corpus page is skewed,
+    so the decoded page would put every crop in the wrong place)."""
     rows = region_crops(_ocr_rows(spark, documents_df)).collect()
     assert rows, "no media regions in fixture"
     pages = {}
@@ -26,7 +30,7 @@ def test_crops_match_page_pixels(spark, documents_df):
         crop = decode_image_gray(bytes(r["bbox_image"]))
         ref = r["media_ref"]
         if ref not in pages:
-            pages[ref] = decode_image_gray(corpus.render_media_blob(ref))
+            pages[ref] = ocr.page_frame(corpus.render_media_blob(ref))[0]
         x1, y1, x2, y2 = r["box"]
         want = pages[ref][int(y1): int(np.ceil(y2)), int(x1): int(np.ceil(x2))]
         assert crop.shape == want.shape

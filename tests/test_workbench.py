@@ -335,3 +335,30 @@ def test_enhancement_mixed_text_and_raster_pdf(spark):
     assert tr["text"] == normalize_text("digital page line")
     assert tr["score"] == 1.0
     assert tr["transformer_text"] is None and tr["transformer_score"] is None
+
+
+def test_cli_entity_mode_matches_workbench_entities(spark, documents_df,
+                                                   tmp_path, monkeypatch):
+    """`python -m ner_ocr_spark entity` over a stage-1 table (extraction
+    without NER, second pass forced so transformer_text is set) writes the
+    same page rows as Workbench.run_entities over the same rows: both are
+    `entity_pages`."""
+    from ner_ocr_spark.__main__ import main
+
+    # main() stops its session on exit; the fixture session is shared
+    monkeypatch.setattr(type(spark), "stop", lambda self: None)
+    w = Workbench()
+    w.load(documents_df.limit(6))
+    stage1 = w.run_ocr(refine_below=1.01)
+    assert stage1.filter("transformer_text is not null").count() > 0
+    inp, out = str(tmp_path / "stage1"), str(tmp_path / "entities")
+    stage1.write.parquet(inp)
+    assert main(["entity", "-i", inp, "-o", out]) == 0
+
+    def rows(df):
+        return sorted((r.asDict(recursive=True) for r in df.collect()),
+                      key=lambda r: r["doc_id"])
+
+    cli = rows(spark.read.parquet(out))
+    assert cli and any(r["entities"] for r in cli)
+    assert cli == rows(w.run_entities())
