@@ -10,11 +10,14 @@ per-row error absorption into an `error` column (failures never kill the job,
 wall-clock guard replacing the reference's thread-pool timeout
 (/root/reference/src/utils.py:21-46).
 
-The OCR second pass has one form: the OCR stage's `refine_below` branch
-and the workbench's `make_refine_stage` re-read a page with one recipe,
-get its pages from one `operators/pdf.blob_pages` step and pair refined
-lines to first-pass rows by one geometry rule, `pair_lines` — a plain
-function that can be checked outside Spark.
+Which bytes and which page a row reads is decided in `operators/pdf`:
+the OCR stage expands a span through `span_pages` and numbers its lines
+with `line_idx_of`, and `make_refine_stage` (like the region crops)
+revisits rows through `page_groups`. The OCR second pass has one form:
+the OCR stage's `refine_below` branch and `make_refine_stage` re-read a
+page with one recipe and pair refined lines to first-pass rows by one
+geometry rule, `pair_lines` — a plain function that can be checked
+outside Spark.
 """
 
 from __future__ import annotations
@@ -26,7 +29,8 @@ import pandas as pd
 
 from pyspark.sql import types as T
 
-from ner_ocr_spark.operators.pdf import Rasterizer, blob_pages
+from ner_ocr_spark.operators.pdf import (Rasterizer, line_idx_of,
+                                         page_groups, span_pages)
 from ner_ocr_spark.operators.rows import absorb_rows
 
 # one row per recognized OCR line (reference OCRResult analog, long form).
@@ -151,20 +155,18 @@ def make_ocr_stage(
     bio NULL.
 
     When `pdf_rasterizer` is given, a blob expands to its pages IN-STAGE
-    through `operators/pdf.blob_pages` (PDF sniff, rasterize at PDF_ZOOM,
+    through `operators/pdf.span_pages` (PDF sniff, rasterize at PDF_ZOOM,
     truncate to `pdf_max_pages` — the reference's max_num_imgs, its
-    src/pdf_processing.py:21-73); each page OCRs with line_idx base
-    page_idx * 100000. Fusing the 1:N expansion here (rather than a
-    separate pdf branch with its own mapInPandas + posexplode, the round-2
-    design) keeps the plan at ONE source scan, ONE shuffle and ONE python
-    crossing for mixed corpora, and page bitmaps never serialize through
-    Arrow at all.
+    src/pdf_processing.py:21-73); each page OCRs with line_idx
+    `pdf.line_idx_of(page_idx, line)`. Fusing the 1:N expansion here
+    (rather than a separate pdf branch with its own mapInPandas +
+    posexplode, the round-2 design) keeps the plan at ONE source scan,
+    ONE shuffle and ONE python crossing for mixed corpora, and page
+    bitmaps never serialize through Arrow at all.
     """
-    from ner_ocr_spark import corpus, htmlx
+    from ner_ocr_spark import htmlx
     from ner_ocr_spark.kernels import ocr
     from ner_ocr_spark.kernels.normalize import normalize_text
-
-    resolver = blob_resolver or corpus.render_media_blob
 
     def page_lines(page) -> list[dict]:
         """The line columns of one page, top to bottom."""
@@ -194,10 +196,9 @@ def make_ocr_stage(
         if row.kind == "html":
             # raw markup: main-content extraction stands in for OCR
             return [(0, {"text": htmlx.main_text(row.text), "score": 1.0})]
-        png = getattr(row, "image_png", None)
-        raw = bytes(png if png is not None else resolver(row.media_ref))
-        pages = blob_pages(raw, pdf_rasterizer, pdf_max_pages)
-        return [(pi * 100000 + li, ln) for pi, page in enumerate(pages)
+        pages = span_pages(row.media_ref, getattr(row, "image_png", None),
+                           pdf_rasterizer, pdf_max_pages, blob_resolver)
+        return [(line_idx_of(pi, li), ln) for pi, page in enumerate(pages)
                 for li, ln in enumerate(page_lines(page))]
 
     def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -236,7 +237,6 @@ def make_ocr_stage(
 def make_refine_stage(
     blob_resolver: Callable[[str], bytes] | None = None,
     pdf_rasterizer: Rasterizer | str | None = "auto",
-    pdf_max_pages: int | None = None,
 ) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
     """Second-pass refinement (reference M2 / TrOCR analog,
     the reference's src/transformer_ocr.py:189-283) over OCR_SCHEMA rows
@@ -251,104 +251,45 @@ def make_refine_stage(
     each region enhanced exactly ONCE, unlike the reference CLI's
     accidental O(k^2) loop).
 
-    Pages come from the OCR stage's own `operators/pdf.blob_pages` step:
-    an input batch's `image_png` column (the blobs= media path, where
-    payloads ride the rows) is the blob when non-null, else
-    `blob_resolver(media_ref)` (default: the synthetic corpus renderer);
-    a PDF blob is rasterized once per document ("auto" = pypdfium2 else
-    the from-scratch pdfio reader) and each row's page comes from its
-    line_idx base (page_idx * 100000 + line), so pdf pages refine with the
-    same semantics as native media. pdf_rasterizer=None keeps pdf rows
-    untouched (their page fails to decode and refines nothing); born-digital
-    text pages are exact already and never refine.
+    Rows reach their page through `operators/pdf.page_groups`, the loop
+    the region crops share: an `image_png` column riding the batch (the
+    blobs= media path) is the blob when non-null, else
+    `blob_resolver(media_ref)`; a PDF blob rasterizes once per run of its
+    rows and each row's page comes from its line_idx (`pdf.page_of`), so
+    pdf pages refine with the same semantics as native media.
+    pdf_rasterizer=None keeps pdf rows untouched (their page fails to
+    decode and refines nothing); born-digital text pages are exact already
+    and never refine.
 
     Line counts and line indexes never enter the pairing, so a page split
     across Arrow batches or a low-score subset of its rows pairs the same.
     Output: OCR_SCHEMA rows (extras dropped). Failures, rows without a
     box, and rows already carrying an error keep the first-pass row (error
     absorption)."""
-    from ner_ocr_spark import corpus
     from ner_ocr_spark.kernels import ocr
 
-    resolver = blob_resolver or corpus.render_media_blob
+    def refined(page: bytes):
+        return ocr.ocr_page(page, step=ocr.REFINE_STEP)
 
     def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from collections import OrderedDict
-
-        # bounded LRUs that SURVIVE batch boundaries: round 2 cleared the
-        # cache per batch, so a page whose rows straddled two Arrow batches
-        # decoded twice (round-2 verdict #5). page_cache holds the blob's
-        # page list ([blob] for native images, rasterized pages for PDFs —
-        # rasterize once per document, not once per page); line_cache
-        # holds recognized lines per (ref, page).
-        page_cache: OrderedDict[str, list] = OrderedDict()
-        line_cache: OrderedDict[tuple[str, int], list] = OrderedDict()
-        page_cap, line_cap = 8, 64
-
-        def page_list(ref: str, payload: bytes | None) -> list:
-            if ref in page_cache:
-                page_cache.move_to_end(ref)
-                return page_cache[ref]
-            raw = bytes(payload if payload is not None else resolver(ref))
-            pages = blob_pages(raw, pdf_rasterizer, pdf_max_pages)
-            page_cache[ref] = pages
-            if len(page_cache) > page_cap:
-                page_cache.popitem(last=False)
-            return pages
-
-        def refined_lines(ref: str, page: int, payload: bytes | None):
-            key = (ref, page)
-            if key in line_cache:
-                line_cache.move_to_end(key)
-                return line_cache[key]
-            try:
-                pages = page_list(ref, payload)
-                if page >= len(pages) or isinstance(pages[page], str):
-                    lines = []
-                else:
-                    lines = ocr.ocr_page(pages[page], step=ocr.REFINE_STEP)
-            except Exception:  # noqa: BLE001
-                lines = []
-            line_cache[key] = lines
-            if len(line_cache) > line_cap:
-                line_cache.popitem(last=False)
-            return lines
-
-        for pdf in batches:
+        for pdf, groups in page_groups(batches, refined, pdf_rasterizer,
+                                       blob_resolver):
             pdf = pdf.copy()
-            pg_all = pdf["line_idx"].to_numpy().astype(int) // 100000
-            # error rows never refine (M6: they carry no geometry/text and
-            # must stay NULL through both transformer columns); rows
-            # without a box have nothing to pair by
-            ok_all = (pdf["error"].isna() & pdf["box"].notna()).to_numpy()
             boxes = pdf["box"].to_numpy()
-            has_payload = "image_png" in pdf.columns
-            # one decode per page, vectorized pairing per page (no per-row
-            # python loop, no .at writes — round-2 verdict #5)
-            for ref, pos in pdf.groupby("media_ref", sort=False).indices.items():
-                payload = None
-                if has_payload:
-                    payload = next(
-                        (v for v in pdf["image_png"].iloc[pos] if v is not None),
-                        None,
-                    )
-                pg = pg_all[pos]  # 0 for native media, page_idx for pdf rows
-                for page in np.unique(pg):
-                    rows = pos[(pg == page) & ok_all[pos]]
-                    if not len(rows):
-                        continue
-                    lines = refined_lines(ref, int(page), payload)
-                    pair = pair_lines(boxes[rows], lines)
-                    hit = pair >= 0
-                    if not hit.any():
-                        continue
-                    sel = pdf.index[rows[hit]]
-                    pdf.loc[sel, "transformer_text"] = [
-                        lines[j].text for j in pair[hit]
-                    ]
-                    pdf.loc[sel, "transformer_score"] = [
-                        float(lines[j].score) for j in pair[hit]
-                    ]
+            for rows, lines in groups:
+                if not lines:
+                    continue
+                pair = pair_lines(boxes[rows], lines)
+                hit = pair >= 0
+                if not hit.any():
+                    continue
+                sel = pdf.index[rows[hit]]
+                pdf.loc[sel, "transformer_text"] = [
+                    lines[j].text for j in pair[hit]
+                ]
+                pdf.loc[sel, "transformer_score"] = [
+                    float(lines[j].score) for j in pair[hit]
+                ]
             # project to the declared output schema (the input batch may
             # carry an extra image_png payload column)
             yield pdf[list(OCR_SCHEMA.fieldNames())]

@@ -103,12 +103,13 @@ def extract_spans(
     (bytes, zoom) -> list of page payloads, called at operators/pdf.PDF_ZOOM;
     each payload is either png bytes (OCR'd) or a str of newline-joined
     text lines (emitted directly, score 1.0 — the born-digital path). The
-    default "auto" resolves (in operators/pdf.blob_pages) to
+    default "auto" resolves (in operators/pdf.span_pages) to
     default_page_source — pypdfium2 when installed, else the from-scratch
     pdfio reader (raster pages composited; born-digital pages extracted as
     positioned Tj/TJ text, skipping OCR entirely), so real PDF bytes work
     out of the box. PDF blobs are sniffed (%PDF- magic) and expanded to pages INSIDE the same
-    OCR mapInPandas stage with line_idx base page_idx * 100000, so
+    OCR mapInPandas stage with line_idx `operators/pdf.line_idx_of(page_idx,
+    line)` (page_idx * PAGE_STRIDE + line), so
     per-document order stays exact and mixed corpora keep ONE source scan /
     ONE shuffle / ONE python crossing (a separate rasterize branch — the
     round-2 design — scanned the source an extra time and shipped page

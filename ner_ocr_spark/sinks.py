@@ -7,8 +7,8 @@ under Arrow). Output: one JSON object per doc, `{stem}_ocr_results.json`
 shape — here a Spark json write of the assembled table (distributed, not a
 driver loop).
 
-S7 — results export: one denormalized bundle row per run (doc results +
-config + run metadata), the reference UI's export_results
+S7 — results export: the doc results with the run's metadata (its run id)
+on every row, the reference UI's export_results
 (/root/reference/src/ui/app.py:882-925) as a table write.
 """
 
@@ -18,8 +18,6 @@ import json
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ner_ocr_spark.config import AppConfig, compile_config
 
 # payload columns never serialized (reference strip list,
 # /root/reference/src/utils.py:131-135)
@@ -41,16 +39,13 @@ def write_json_results(assembled: DataFrame, path: str, mode: str = "overwrite")
 def export_results(
     assembled: DataFrame,
     path: str,
-    config: AppConfig | None = None,
     run_id: str | None = None,
     mode: str = "overwrite",
 ) -> None:
-    """S7: bundle document results with the run's config (as a JSON string
-    column — config is metadata, not data-plane schema)."""
-    cfg_json = json.dumps(
-        {"config_yaml": compile_config(config or AppConfig()), "run_id": run_id}
-    )
-    out = strip_payload(assembled).withColumn("run_meta", F.lit(cfg_json))
+    """S7: bundle document results with the run's metadata (a JSON string
+    column — metadata, not data-plane schema)."""
+    meta = json.dumps({"run_id": run_id})
+    out = strip_payload(assembled).withColumn("run_meta", F.lit(meta))
     out.write.mode(mode).json(path)
 
 

@@ -82,8 +82,7 @@ class Workbench:
         extract_kwargs.setdefault("with_ner", False)
         self._extract_opts = {
             k: extract_kwargs[k]
-            for k in ("blob_resolver", "pdf_rasterizer", "pdf_max_pages",
-                      "blobs")
+            for k in ("blob_resolver", "pdf_rasterizer", "blobs")
             if k in extract_kwargs
         }
         return self._set("ocr", pipeline.extract_spans(docs, **extract_kwargs))
@@ -134,19 +133,19 @@ class Workbench:
             )
             .select("media_ref").distinct()
         )
-        # media AND pdf rows refine: the stage re-resolves media_ref, sniffs
-        # %PDF-, rasterizes once per document (pdfio/pypdfium2), and maps each
-        # row's line_idx base (page_idx*100000 + line) back to its page —
-        # text spans pass through untouched
-        media_rows = ocr_rows.filter(F.col("kind").isin("media", "pdf"))
-        other_rows = ocr_rows.filter(~F.col("kind").isin("media", "pdf"))
-        hit = media_rows.join(F.broadcast(hit_refs), "media_ref", "left_semi")
-        rest = media_rows.join(F.broadcast(hit_refs), "media_ref", "left_anti")
+        # rows of a hit media_ref (media AND pdf) refine: the stage
+        # re-resolves media_ref, sniffs %PDF-, rasterizes once per document
+        # and reads each row's page off its line_idx (operators/pdf). Every
+        # other row passes through: text and html rows have a NULL
+        # media_ref, which the anti join keeps
+        rest = ocr_rows.join(F.broadcast(hit_refs), "media_ref", "left_anti")
         opts = self._extract_opts
         # the refine stage pairs rows to refined lines by box geometry
         # alone, so it needs no page-level line count and no co-location
         # of a page's rows: a plain projection feeds it
-        refine_in = hit.select(*OCR_SCHEMA.fieldNames())
+        refine_in = ocr_rows.join(
+            F.broadcast(hit_refs), "media_ref", "left_semi"
+        ).select(*OCR_SCHEMA.fieldNames())
         if opts.get("blobs") is not None:
             # blobs= media path: payloads ride the rows (there may be no
             # resolver at all — and the default resolver FABRICATES a
@@ -161,14 +160,11 @@ class Workbench:
             make_refine_stage(
                 blob_resolver=opts.get("blob_resolver"),
                 pdf_rasterizer=opts.get("pdf_rasterizer", "auto"),
-                pdf_max_pages=opts.get("pdf_max_pages"),
             ),
             OCR_SCHEMA,
         )
-        merged = (
-            rest.select(*ocr_rows.columns)
-            .unionByName(other_rows.select(*ocr_rows.columns))
-            .unionByName(refined.select(*ocr_rows.columns))
+        merged = rest.select(*ocr_rows.columns).unionByName(
+            refined.select(*ocr_rows.columns)
         )
         return self._set("enhance", merged)
 
