@@ -1,107 +1,58 @@
-"""Size-aware work balancing (SURVEY.md §4.3.2; north rule: "OCR-heavy
-partitions are split via size-aware range partitioning").
+"""Size-aware placement of the python branch (SURVEY.md §4.3.2 and the
+§4.4 sketch's "shuffle 1"; north rule: "OCR-heavy partitions are split
+via size-aware range partitioning").
 
 Hash-spreading on (doc_id, span_idx) equalizes row COUNTS; when per-row
-cost varies by orders of magnitude (pixel count of the decoded media), a
-partition can still draw several giant rows. `balance_by_cost` assigns rows
-to bins by descending-cost round-robin (the classic LPT greedy — every bin
-within one max-row of optimal) and then places each bin on its own
-partition EXACTLY:
+cost varies by orders of magnitude (payload bytes ~ decoded pixels ~ OCR
+time), a partition can still draw several giant rows. `balance_by_cost`
+deals each upstream partition's rows, heaviest first, round-robin over the
+n target partitions and places them with ONE `repartitionById` exchange:
 
-    rank = row_number() over (order by cost desc)   [or monotonic id in
-                                                     approximate mode]
-    bin  = rank % n
-    repartition(n, token[bin])
+    sortWithinPartitions(cost desc, doc_id, span_idx)   [no shuffle]
+    rank = monotonically_increasing_id() - (pid << 33)  [row # in pid]
+    bin  = pmod(rank + floor(vdc(pid) * n), n)
+    repartitionById(n, bin)
 
-`repartition(n, col)` hash-partitions, which for raw bin values stacks
-several bins on one partition and leaves others empty (repartitionByRange
-is no better: its reservoir sample can merge adjacent bins). The fix: a
-one-time driver-side probe finds n integer TOKENS such that
-pmod(hash(token_i), n) == i — a bijection — so hash partitioning becomes
-exact value placement with zero runtime overhead (the token lookup folds
-into the plan as an array literal).
+pid is spark_partition_id() and vdc(pid) its van der Corput fraction (the
+bits of pid reversed behind the binary point), so the upstream
+partitions start their deals at offsets spread evenly over the n bins for
+any number of upstream partitions; a plain `rank + pid` offset stacks the
+giants of neighbouring partitions. No driver-side job and no sample job
+run at plan build.
 
-Exact mode costs one global order-by of (key, cost) pairs; at 100 TB use
-approximate=True: range-partition on cost first (bounded sample sort), then
-per-partition round-robin — no global window, same +-1-giant balance within
-each cost tier.
+The bound it gives: inside one upstream partition the deal is LPT
+round-robin over rows sorted by cost, so any two target partitions' shares
+of it differ by at most its largest row. Summed over the upstream
+partitions, the heaviest target partition holds at most the mean plus the
+sum of every upstream partition's largest row. The offsets decide how
+close to that it gets: media_skew's python rows at n=4 give max/mean 1.02,
+but two upstream partitions whose offsets fall on the same bin stack their
+giants there (a 6-way round-robin upstream at n=16: 2.69).
+
+The tie-break on (doc_id, span_idx) makes the deal a pure function of the
+partition's rows, so a retried map task places every row where its first
+attempt did. Span order never rides partition order (span_idx/line_idx).
 """
 
 from __future__ import annotations
 
-import warnings
-
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# no longer filled; perfbench's set-up still clears it before every run
 _token_cache: dict[int, list[int]] = {}
 
-# exact mode funnels EVERY row through one partition for the global
-# row_number window; above this many rows it is a self-inflicted straggler
-EXACT_MODE_ROW_LIMIT = 10_000_000
+_VDC_BITS = 20
 
 
-def _partition_tokens(spark, n: int) -> list[int]:
-    """n ints whose Murmur3 hash mod n hits each class exactly once."""
-    if n in _token_cache:
-        return _token_cache[n]
-    probe = 32 * n
-    while True:
-        rows = (
-            spark.range(probe)
-            .select("id", F.pmod(F.hash("id"), F.lit(n)).alias("cls"))
-            .groupBy("cls").agg(F.min("id").alias("tok"))
-            .collect()
-        )
-        if len(rows) == n:
-            toks = [0] * n
-            for r in rows:
-                toks[r["cls"]] = int(r["tok"])
-            _token_cache[n] = toks
-            return toks
-        probe *= 4  # astronomically unlikely to loop more than once
-
-
-def balance_by_cost(
-    df: DataFrame,
-    cost_col: str,
-    n_partitions: int,
-    approximate: bool = False,
-    bin_col: str = "_cost_bin",
-) -> DataFrame:
-    """Repartition so each of n_partitions has ~equal total `cost_col`."""
-    tokens = _partition_tokens(df.sparkSession, n_partitions)
-    if approximate:
-        # scale path: cost-tiered range partition, then round-robin inside
-        # each tier (monotonic ids are contiguous per partition, so
-        # consecutive similar-cost rows alternate bins)
-        # local (shuffle-free) sort so monotonic ids follow cost rank
-        # inside each tier — without it, giants land on random bins and
-        # collide; with it they round-robin like the exact mode
-        ranged = df.repartitionByRange(
-            n_partitions, F.desc(cost_col)
-        ).sortWithinPartitions(F.desc(cost_col))
-        rank = F.monotonically_increasing_id()
-    else:
-        # LOUD guard (round-2): the global no-partition window serializes
-        # the whole input through one task. Fine for interactive/small
-        # inputs; at corpus scale callers must pass approximate=True (the
-        # pipeline default). The check is plan-free (cheap count only when
-        # the input is already materialized is NOT worth a job — warn
-        # unconditionally instead so the trade is visible in logs).
-        warnings.warn(
-            "balance_by_cost(approximate=False) sorts ALL rows through a "
-            "single-partition window; use approximate=True beyond "
-            f"~{EXACT_MODE_ROW_LIMIT:,} rows",
-            stacklevel=2,
-        )
-        ranged = df
-        rank = F.row_number().over(Window.orderBy(F.desc(cost_col)))
-    # tokens were probed as LONGs; Murmur3 of int32 differs from int64,
-    # so the literals must stay long for the bijection to hold
-    tok_arr = F.array(*[F.lit(t).cast("long") for t in tokens])
-    binned = ranged.withColumn(
-        bin_col,
-        F.element_at(tok_arr, (F.pmod(rank, F.lit(n_partitions)) + 1).cast("int")),
-    )
-    return binned.repartition(n_partitions, bin_col).drop(bin_col)
+def balance_by_cost(df: DataFrame, cost: Column, n_partitions: int) -> DataFrame:
+    """Place df's (doc_id, span_idx) rows on n_partitions so each holds
+    ~equal total `cost`, through one repartitionById exchange."""
+    pid = F.spark_partition_id()
+    rank = F.monotonically_increasing_id() - F.shiftleft(pid.cast("long"), 33)
+    vdc = F.conv(F.reverse(F.lpad(F.bin(pid), _VDC_BITS, "0")), 2, 10).cast(
+        "double") / (1 << _VDC_BITS)
+    n = F.lit(n_partitions)
+    target = F.pmod(rank + F.floor(vdc * n), n).cast("int")
+    return df.sortWithinPartitions(cost.desc(), "doc_id", "span_idx").repartitionById(
+        n_partitions, target)

@@ -246,10 +246,11 @@ def make_refine_stage(
     `pair_lines` rule, recording the result in transformer_text /
     transformer_score (never overwriting the first pass — OCRResult
     carries both, the reference's src/custom_types/data.py:20-21;
-    downstream P4 coalesce picks the winner). The caller filters to
-    low-score rows first (two-pass enhancement pruning, SURVEY.md §4.3.4 —
-    each region enhanced exactly ONCE, unlike the reference CLI's
-    accidental O(k^2) loop).
+    downstream P4 coalesce picks the winner). It refines every row it is
+    given, whatever its first-pass score: the workbench hands it every row
+    of every page that holds a search hit, and only the fused stage's
+    refine_below gates on score. Each region is enhanced exactly ONCE
+    (SURVEY.md §4.3.4), unlike the reference CLI's accidental O(k^2) loop.
 
     Rows reach their page through `operators/pdf.page_groups`, the loop
     the region crops share: an `image_png` column riding the batch (the
@@ -262,7 +263,7 @@ def make_refine_stage(
     and never refine.
 
     Line counts and line indexes never enter the pairing, so a page split
-    across Arrow batches or a low-score subset of its rows pairs the same.
+    across Arrow batches or any subset of its rows pairs the same.
     Output: OCR_SCHEMA rows (extras dropped). Failures, rows without a
     box, and rows already carrying an error keep the first-pass row (error
     absorption)."""

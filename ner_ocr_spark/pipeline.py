@@ -5,7 +5,8 @@
       -> route kind:
          text -> JVM normalizer (-> mapInPandas NER with NER: the slim
            (doc_id, span_idx, text) rows only)
-         media/pdf/html -> repartition(doc_id, span_idx) [skew defusal]
+         media/pdf/html -> balance_by_cost: one repartitionById exchange
+           [size-aware skew defusal]
            -> mapInPandas python stage: OCR (pdf pages expand in-stage) or
               html main-content extraction, + the python normalizer twin
               and NER, fused
@@ -16,7 +17,8 @@ with_ner=False is the same plan, except that text rows skip the NER
 crossing (they never leave the JVM) and entities/bio are dropped; the
 python branch is the same stage in both modes.
 
-Two shuffles total: the python-branch repartition and the assembly groupBy.
+Two shuffles total, with or without blobs=: the python-branch placement and
+the assembly groupBy (a blobs= table small enough to broadcast adds none).
 Span order is carried explicitly via (span_idx, line_idx) — never partition
 order (SURVEY.md §7 hard part (a)).
 
@@ -36,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ner_ocr_spark import corpus as corpus_mod
+from ner_ocr_spark.operators.balance import balance_by_cost
 from ner_ocr_spark.operators.extract import (
     make_ner_stage,
     make_ocr_stage,
@@ -93,11 +96,14 @@ def extract_spans(
     blobs: optional media table (media_ref, image_png) joined executor-side;
     otherwise blob_resolver(media_ref) fetches bytes inside the OCR UDF
     (default: the synthetic corpus renderer — models an object-store fetch).
-    media_partitions: width of the python-branch repartition (media, pdf
-    and html spans); defaults to spark.sql.shuffle.partitions. Partitioning
-    key is (doc_id, span_idx) so one media-heavy document spreads across
-    the cluster (north-rule skew clause) — reassembly restores order via
-    span_idx, never partition order.
+    media_partitions: width of the python-branch placement (media, pdf
+    and html spans); defaults to spark.sql.shuffle.partitions. Rows are
+    dealt heaviest first (payload bytes, else html markup length) over the
+    partitions by operators/balance.balance_by_cost, so one media-heavy
+    document spreads across the cluster (north-rule skew clause) —
+    reassembly restores order via span_idx, never partition order. Two
+    shuffles total in both blobs modes: that placement and the assembly
+    groupBy (plus the blobs join's own when that table does not broadcast).
 
     PDF spans (kind='pdf'): pdf_rasterizer is any callable
     (bytes, zoom) -> list of page payloads, called at operators/pdf.PDF_ZOOM;
@@ -145,23 +151,15 @@ def extract_spans(
     py = spans.filter(F.col("kind").isin(["media", "pdf", "html"])).select(
         "doc_id", "span_idx", "kind", "text", "media_ref"
     )
+    # size-aware placement (§4.3.2): payload bytes ~ decoded pixel count
+    # ~ OCR cost; html rows' markup length stands in, and rows with neither
+    # cost 0, so without blobs the deal is a count round-robin. A
+    # 1000-media-span doc lands on ~all partitions, not one straggler.
+    cost = F.length("text")
     if blobs is not None:
         py = py.join(blobs, "media_ref", "left")
-        # size-aware balancing (§4.3.2): payload bytes ~ decoded pixel count
-        # ~ OCR cost; LPT round-robin beats count-equal hash spread when row
-        # costs vary by orders of magnitude. html rows have no payload:
-        # their markup length stands in.
-        from ner_ocr_spark.operators.balance import balance_by_cost
-
-        py = balance_by_cost(
-            py.withColumn("_cost", F.coalesce(F.length("image_png"),
-                                              F.length("text"))),
-            "_cost", n_part, approximate=True,
-        ).drop("_cost")
-    else:
-        # (doc_id, span_idx) hash-spread = salted repartition: a
-        # 1000-media-span doc lands on ~all partitions, not one straggler
-        py = py.repartition(n_part, "doc_id", "span_idx")
+        cost = F.coalesce(F.length("image_png"), cost)
+    py = balance_by_cost(py, cost, n_part)
     # refinement AND normalize+NER happen INSIDE the OCR stage: a
     # filter-fork into a second mapInPandas would re-execute the whole OCR
     # plan on both branches, and a separate NER stage would make these rows

@@ -108,10 +108,11 @@ class Workbench:
         return self._set("search", search_op(regions, search_type, task=task, **query))
 
     def run_enhancement(self) -> DataFrame:
-        """Stage 4: refine ONLY searched regions (UI semantics: enhance
-        after search, once, P6 guard). Re-runs the fine-deskew second pass
-        for the matched pages, recording results in transformer_text/score
-        (P4 coalesce downstream picks the winner).
+        """Stage 4: refine every row of every page (media_ref) that holds a
+        search hit, whatever its first-pass score — there is no score gate
+        (UI semantics: enhance after search, once, P6 guard). Re-runs the
+        fine-deskew second pass for those pages, recording results in
+        transformer_text/score (P4 coalesce downstream picks the winner).
 
         Scale-safe: matched media_refs are selected with broadcast
         semi/anti joins — no collect()/isin() driver round-trip (the

@@ -64,16 +64,70 @@ def test_semi_join_broadcast_hash(spark):
     assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
 
 
-def test_pipeline_shuffle_count(spark, documents_df):
-    """The extraction plan has exactly the two designed shuffles (media
-    repartition + reassembly groupBy) and no more."""
-    from ner_ocr_spark import pipeline
+def _subtree(plan: str, marker: str) -> list[str]:
+    """The plan lines below the first node line matching `marker`."""
+    lines = plan.splitlines()
+    at = next(i for i, ln in enumerate(lines) if re.search(marker, ln))
+    depth = re.search(r"[+:]- ", lines[at]).start()
+    below = []
+    for ln in lines[at + 1:]:
+        child = re.search(r"[+:]- ", ln)
+        if child and child.start() <= depth:
+            break
+        below.append(ln)
+    return below
 
-    out = pipeline.run(spark, documents_df)
+
+@pytest.mark.parametrize("with_blobs", [False, True], ids=["no_blobs", "blobs"])
+def test_pipeline_shuffle_count(spark, documents_df, tmp_path, with_blobs):
+    """The extraction plan has exactly the two designed shuffles (the
+    python-branch placement + reassembly groupBy) in both blobs modes: one
+    repartitionById exchange feeds the OCR stage, no range exchange (whose
+    bound sample re-ran scan + explode + join) and no Spark job runs while
+    the plan is built."""
+    from ner_ocr_spark import corpus, pipeline
+
+    blobs = None
+    if with_blobs:
+        refs = [s["media_ref"] for r in corpus.build_documents(40)
+                for s in r["spans"] if s["kind"] == "media"][:4]
+        spark.createDataFrame(
+            [(r, corpus.render_media_blob(r)) for r in refs],
+            "media_ref string, image_png binary",
+        ).write.parquet(str(tmp_path / "blobs"))
+        blobs = spark.read.parquet(str(tmp_path / "blobs"))
+    sc = spark.sparkContext
+    sc.setJobGroup("plan-build", "plan-build")
+    try:
+        out = pipeline.run(spark, documents_df, blobs=blobs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("plan-build")) == []
     plan = _executed(out)
+    assert "rangepartitioning" not in plan, plan
     n_exchanges = plan.count("Exchange ")
     assert n_exchanges <= 3, f"unexpected extra shuffles:\n{plan}"
     assert plan.count("ArrowEvalPython") + plan.count("MapInPandas") <= 3
+    below_ocr = _subtree(plan, r"MapInPandas stage.*transformer_text")
+    shuffles = [ln for ln in below_ocr if re.search(r"(?<!Broadcast)Exchange ", ln)]
+    assert len(shuffles) == 1, plan
+    assert "shufflepartitionidpassthrough" in shuffles[0], plan
+
+
+def test_curate_dedup_window_limit_is_partial_and_final(spark):
+    """curate()'s dedup keeps row_number() == 1 per key; Spark 4.1 plans it
+    as a Partial WindowGroupLimit before the exchange and a Final one after
+    it, so a one-key straggler ships one row per map task, not every
+    duplicate. A Spark upgrade that loses the partial limit fails here."""
+    from ner_ocr_spark.curation import curate
+
+    docs = spark.createDataFrame(
+        [(i, "en", "the cat sat on the mat and the dog ran") for i in range(6)],
+        "doc_id long, lang string, text string",
+    )
+    plan = _executed(curate(docs, {"en": 1.0}))
+    assert re.search(r"WindowGroupLimit .*Partial", plan), plan
+    assert re.search(r"WindowGroupLimit .*Final", plan), plan
 
 
 @pytest.mark.parametrize("with_ner", [True, False])
