@@ -200,8 +200,9 @@ def pdf_report(
     extracted text for text pages, plus the document's /Info metadata
     (title/author, decrypted when the file is encrypted) repeated per
     page. A zero-page document yields one metadata-only row; a file
-    outside the subset yields one error row (M6 absorption). Map-only
-    mapInPandas — payload bytes never shuffle."""
+    outside the subset yields one error row (M6 absorption). Each file is
+    opened once (`pdfio.read_pdf`). Map-only mapInPandas — payload bytes
+    never shuffle."""
 
     def stage(batches):
         from ner_ocr_spark import pdfio
@@ -210,13 +211,11 @@ def pdf_report(
         def rows_of(row) -> list[dict]:
             did = str(getattr(row, id_col))
             blob = bytes(getattr(row, payload_col))
-            info = pdfio.pdf_info(blob)
+            info, pages = pdfio.read_pdf(blob)
             doc = {"doc_id": did, "title": info.get("Title"),
-                   "author": info.get("Author"),
-                   "n_pages": int(info.get("n_pages", 0))}
-            pages = pdfio.extract_page_content(blob)
+                   "author": info.get("Author"), "n_pages": len(pages)}
             if not pages:
-                return [{**doc, "n_pages": 0}]
+                return [doc]
             return [
                 {**doc, "page_idx": pi, "page_kind": kind,
                  **({"page_text": "\n".join(v), "n_lines": len(v)}

@@ -1,43 +1,45 @@
-"""Minimal from-scratch PDF reader/writer for the image-per-page subset.
+"""Minimal from-scratch PDF reader/writer for scanned and born-digital pages.
 
 The reference ingests PDFs by rasterizing each page with pypdfium2
 (/root/reference/src/pdf_processing.py:21-73); this container has no
-rasterizer, so round 2 shipped the Spark branch complete but only ever fed
-it FAKE rasterizer output. This module closes that gap (round-2 verdict #2)
-with a real, self-contained implementation of the *easy and common* PDF
-shape — one image XObject per page, Flate- or DCT-encoded — which covers
-scanned-document PDFs (the corpus this OCR engine targets):
+rasterizer, so this module reads the common page shapes itself:
 
-  * `encode_image_pdf(pages)` writes a standards-conformant PDF (classic
-    xref table, page tree, per-page content stream drawing one /Im0) —
-    the test-fixture generator, and a useful sink in its own right;
-  * `extract_page_images(blob)` parses any PDF in the subset back into
-    grayscale page bitmaps: brute-force object scan (no xref trust — works
-    on linearized/appended files too), a real tokenizer for dicts/arrays/
-    names/strings/refs, page-tree walk in /Kids order, FlateDecode via
-    zlib + DCTDecode via the repo's own jpeg codec;
+  * `extract_page_content(blob)` is the reader the pipeline uses: one
+    ("image", 2-D uint8 array) or ("text", [line, ...]) per page, in
+    page-tree order. `extract_page_images` is its raster-only form,
+    `pdf_info` reads the /Info metadata, and `read_pdf` returns both
+    from one open;
+  * `encode_image_pdf(pages)` / `encode_text_pdf(pages)` write the same
+    shapes — the test-fixture generators, so the fixtures are
+    self-verifying round trips;
   * `pdfio_page_source` adapts the reader to the operators.pdf
-    `Rasterizer` contract so the PDF branch is executable in-container
-    WITHOUT pypdfium2 (operators/pdf.default_page_source falls back here).
+    `Rasterizer` contract, so the PDF branch runs WITHOUT pypdfium2
+    installed (operators/pdf.default_page_source falls back here).
 
-Round 4 widens the subset to the default output of PDF >= 1.5 writers
-(round-3 verdict #2): object streams (/ObjStm — compressed containers for
-the catalog/page-tree dictionaries), cross-reference STREAMS standing in
-for the classic trailer (the /Root and /Encrypt checks read the /XRef
-dict; object discovery stays brute-scan), and predictor-compressed Flate
-images (TIFF Predictor 2 and PNG Predictors 10-15, sharing png._unfilter).
-A second round-4 wave adds the fax-era scanned-document shapes: 1/2/4-bit
-gray samples, /Decode sample remaps (inverted bilevel), /ImageMask
-stencils, RunLengthDecode, and CCITTFaxDecode Group 4 via the from-scratch
-T.6 codec in `ner_ocr_spark/ccitt.py`. `encode_image_pdf(objstm=True,
-predictor=..., rle=..., ccitt=...)` writes these same shapes, so the
-fixtures are self-verifying round-trips, as the progressive-JPEG
-encoder's are.
+The reader has one path through a file:
 
-Out-of-subset constructs fail with a distinct, actionable error that the
-pipeline absorbs per row (M6): encrypted files, exotic colorspaces
-(ICC/Indexed/Separation), CCITT K>=0 (G3), JBIG2/JPX, and pages whose
-content is vector text rather than a scanned image (those genuinely need a
+  * one open (`_open_pdf`): a brute-force object scan (no xref trust —
+    works on linearized, appended and xref-damaged files), /ObjStm
+    expansion, the newest trailer dictionary for /Root, /Encrypt + /ID
+    and /Info (classic trailers and cross-reference streams alike), the
+    standard security handler with an empty user password (RC4 40/128,
+    AES-128, AES-256), and the page-tree walk in /Kids order;
+  * one byte-level filter chain (`_decode_stream`): ASCIIHex, Flate and
+    RunLength, with the TIFF (2) and PNG (10-15) predictors. DCT (the
+    repo's own jpeg codec) and CCITT G3/G4 (`ner_ocr_spark/ccitt.py`) are
+    the pixel decoders after it; samples may be 1/2/4/8-bit gray, RGB,
+    /Indexed palettes, /ImageMask stencils or /Decode remaps;
+  * one content-stream walk (`_walk_content`): it tracks the graphics
+    state, follows `Do` into Form XObjects, and reports image draws
+    (XObject and BI..ID..EI inline) and text runs. Image pages composite
+    their draws (multi-strip scans, /Rotate); pages with no raster
+    content lay out their text runs (simple fonts, /Differences,
+    /ToUnicode CMaps, TJ kerning).
+
+Out-of-subset constructs fail with a distinct PdfError that the pipeline
+absorbs per row (M6): non-Standard security handlers or user passwords,
+ICC/Separation colorspaces, JBIG2/JPX, Type0 fonts without /ToUnicode,
+and pages of vector graphics with no text (those genuinely need a
 rasterizer — plug pypdfium2 or any callable via `rasterizer=`).
 """
 
@@ -46,6 +48,7 @@ from __future__ import annotations
 import re
 import zlib
 from dataclasses import dataclass
+from typing import NamedTuple
 
 import numpy as np
 
@@ -227,9 +230,16 @@ _OBJ_RE = re.compile(rb"(?<![0-9])(\d+)\s+(\d+)\s+obj\b")
 
 
 def _scan_objects(blob: bytes):
-    """Pass 1 of _parse_objects: the direct brute scan, WITHOUT /ObjStm
-    expansion. Returns (objs, pos_of) so the encryption layer can decrypt
-    container streams before expansion."""
+    """All direct indirect objects as ({num: (value, stream_bytes|None)},
+    {num: byte position}), WITHOUT /ObjStm expansion, so the encryption
+    layer can decrypt container streams before `_expand_objstms`.
+
+    Brute-force scan instead of xref-table walking: immune to broken or
+    appended xrefs. Later definitions of the same object number win
+    (incremental-update semantics) — with "later" judged by byte position,
+    and matches whose `N G obj` happens to fall INSIDE an established
+    stream payload skipped (compressed bytes can fake the token and would
+    otherwise shadow a real object)."""
     if blob[:5] != b"%PDF-":
         raise PdfError("not a PDF (missing %PDF- header)")
     # pass 1: direct scan, skipping matches inside known stream extents.
@@ -321,29 +331,9 @@ def _scan_objects(blob: bytes):
     return out, pos_of
 
 
-def _parse_objects(blob: bytes) -> dict[int, tuple[object, bytes | None]]:
-    """All indirect objects as {num: (value, stream_bytes|None)}.
-
-    Brute-force scan instead of xref-table walking: immune to broken or
-    appended xrefs. Later definitions of the same object number win
-    (incremental-update semantics) — with "later" judged by byte position,
-    and matches whose `N G obj` happens to fall INSIDE an established
-    stream payload skipped (round-3 advice: compressed bytes can fake the
-    token and would otherwise shadow a real object). `/Type /ObjStm`
-    containers are expanded after the direct scan: their member objects
-    join the map at the container's byte position."""
-    out, pos_of = _scan_objects(blob)
-    _expand_objstms(out, pos_of)
-    if not out:
-        raise PdfError("no indirect objects found")
-    return out
-
-
 def _expand_objstms(out: dict, pos_of: dict[int, int]) -> None:
     """Pass 2: expand /ObjStm containers (PDF 1.5+) in place. Members
-    carry the container's byte position for later-definition-wins. Split
-    from _parse_objects so encrypted files can decrypt the container
-    stream BETWEEN the direct scan and this expansion."""
+    carry the container's byte position for later-definition-wins."""
     for num, (value, stream) in list(out.items()):
         if not (isinstance(value, dict) and value.get("Type") == "ObjStm"):
             continue
@@ -362,27 +352,55 @@ def _expand_objstms(out: dict, pos_of: dict[int, int]) -> None:
                 pos_of[mnum] = base
 
 
-def _decode_stream(objs_or_none, sdict: dict, stream: bytes) -> bytes:
-    """Apply /Filter (+ /DecodeParms predictor) to a non-image stream.
-    Supports the subset's filters: none or FlateDecode (with optional
-    TIFF/PNG predictor)."""
+def _filters(sdict: dict) -> list[str]:
+    f = sdict.get("Filter")
+    if f is None:
+        return []
+    if isinstance(f, list):
+        return [str(x) for x in f]
+    return [str(f)]
+
+
+def _filter_parms(objs, sdict: dict, i: int) -> dict:
+    """The /DecodeParms of filter `i` of a stream's chain: array-form
+    parms hold one slot per filter (null placeholders allowed), a single
+    dictionary serves every filter."""
+    p = _deref(objs, sdict.get("DecodeParms"))
+    if isinstance(p, list):
+        p = _deref(objs, p[i]) if i < len(p) else None
+    return p if isinstance(p, dict) else {}
+
+
+def _decode_stream(objs, sdict: dict, stream: bytes) -> bytes:
+    """Apply a stream's byte-level /Filter chain in order — ASCIIHex,
+    Flate (with its /DecodeParms predictor) and RunLength — for every
+    stream the reader decodes: content, form, /ObjStm, /ToUnicode,
+    palette and image data. The one inflate call site. Image decoding
+    peels a trailing DCT or CCITT pixel filter before calling this."""
     filters = _filters(sdict)
-    if filters == []:
-        return bytes(stream)
-    if filters != ["FlateDecode"]:
-        raise PdfError(f"stream filter chain {filters} unsupported")
-    data = zlib.decompress(stream)
-    parms = sdict.get("DecodeParms") or {}
-    if isinstance(parms, list):
-        parms = parms[0] if parms else {}
-    if objs_or_none is not None:
-        parms = _deref(objs_or_none, parms) or {}
-    pred = parms.get("Predictor", 1)
-    if pred != 1:
-        data = _predictor_undo(
-            data, pred, parms.get("Columns", 1),
-            parms.get("Colors", 1), parms.get("BitsPerComponent", 8),
-        )
+    data = bytes(stream)
+    for i, name in enumerate(filters):
+        if name == "ASCIIHexDecode":
+            data = _ahx_decode(data)
+        elif name == "RunLengthDecode":
+            data = _rle_decode(data)
+        elif name == "FlateDecode":
+            try:
+                data = zlib.decompress(data)
+            except zlib.error as e:
+                raise PdfError(f"bad Flate stream: {e}") from e
+            parms = _filter_parms(objs, sdict, i)
+            pred = _deref(objs, parms.get("Predictor", 1))
+            if pred != 1:
+                rgb = _deref(objs, sdict.get("ColorSpace")) == "DeviceRGB"
+                data = _predictor_undo(
+                    data, pred,
+                    _deref(objs, parms.get("Columns", 1)),
+                    _deref(objs, parms.get("Colors", 3 if rgb else 1)),
+                    _deref(objs, parms.get("BitsPerComponent", 8)),
+                )
+        else:
+            raise PdfError(f"stream filter chain {filters} unsupported")
     return data
 
 
@@ -409,47 +427,28 @@ def _expand_objstm(objs, sdict: dict, stream: bytes) -> dict[int, object]:
     return members
 
 
-def _trailer_root(blob: bytes, objs) -> int:
-    """Object number of the /Root catalog: classic trailer dict when
-    present, else the cross-reference STREAM's dict (PDF 1.5+ files have
-    no `trailer` keyword — the /XRef object carries /Root and /Encrypt),
-    else the first /Type /Catalog object (brute-scan fallback)."""
-    m = None
+def _trailer(blob: bytes, objs, pos_of: dict[int, int]) -> dict:
+    """The newest trailer dictionary, read for /Root, /Encrypt + /ID and
+    /Info: every classic `trailer` dict and every cross-reference STREAM
+    dict (PDF 1.5+ files have no `trailer` keyword; the /XRef object
+    carries the same keys), merged in file order so each incremental
+    update's entries override the ones before it. Trailers and /XRef
+    streams are never encrypted, so this runs on the raw scan."""
+    found: list[tuple[int, dict]] = []
     for m in re.finditer(rb"trailer", blob):
-        pass  # keep the LAST trailer (incremental updates append)
-    if m is not None:
         try:
             tr = _Scanner(blob, m.end()).parse()
-            if isinstance(tr, dict):
-                root = tr.get("Root")
-                if isinstance(root, Ref):
-                    return root.num
-        except PdfError:
-            pass
-    # PDF 1.5+: the LAST startxref points at the newest cross-reference
-    # STREAM — resolve through it first (object-number order is not
-    # update order when an incremental writer reuses freed numbers)
-    xref_candidates: list[tuple[int, dict]] = []
-    for sm in re.finditer(rb"startxref\s+(\d+)", blob):
-        om = _OBJ_RE.match(blob, int(sm.group(1)))
-        if om is None:
+        except (PdfError, IndexError, ValueError):
             continue
-        value = objs.get(int(om.group(1)), (None, None))[0]
+        if isinstance(tr, dict):
+            found.append((m.start(), tr))
+    for num, (value, _) in objs.items():
         if isinstance(value, dict) and value.get("Type") == "XRef":
-            xref_candidates.append((sm.start(), value))
-    if not xref_candidates:
-        xref_candidates = [
-            (num, value) for num, (value, _) in sorted(objs.items())
-            if isinstance(value, dict) and value.get("Type") == "XRef"
-        ]
-    for _, value in sorted(xref_candidates, key=lambda t: -t[0]):
-        root = value.get("Root")
-        if isinstance(root, Ref):
-            return root.num
-    for num, (value, _) in sorted(objs.items()):
-        if isinstance(value, dict) and value.get("Type") == "Catalog":
-            return num
-    raise PdfError("no /Root catalog found")
+            found.append((pos_of[num], value))
+    merged: dict = {}
+    for _, tr in sorted(found, key=lambda t: t[0]):
+        merged.update(tr)
+    return merged
 
 
 def _deref(objs, v):
@@ -458,53 +457,6 @@ def _deref(objs, v):
             raise PdfError(f"dangling reference to object {v.num}")
         v = objs[v.num][0]
     return v
-
-
-def _find_encrypt(blob: bytes, objs) -> tuple[dict, bytes] | None:
-    """(/Encrypt dict, first file /ID) when the document is encrypted,
-    else None — read from the last classic trailer, falling back to
-    cross-reference stream dicts (PDF 1.5+). The /Encrypt dict and the
-    trailer itself are never encrypted, so this runs on the raw scan."""
-    def from_dict(tr: dict):
-        enc = tr.get("Encrypt")
-        if enc is None:
-            return None
-        try:
-            enc = _deref(objs, enc)
-        except PdfError:
-            enc = None
-        if not isinstance(enc, dict):
-            # the trailer CLAIMS encryption but the dict is missing or
-            # malformed: fail closed — if the claim were true, every
-            # stream would decode as garbage
-            raise PdfError("encrypted PDF: malformed /Encrypt dictionary")
-        id0 = b""
-        ids = tr.get("ID")
-        if isinstance(ids, list) and ids:
-            first = ids[0]
-            if isinstance(first, (bytes, bytearray)):
-                id0 = bytes(first)
-        return enc, id0
-
-    m = None
-    for m in re.finditer(rb"trailer", blob):
-        pass
-    if m is not None:
-        tr = None
-        try:
-            tr = _Scanner(blob, m.end()).parse()
-        except PdfError:
-            pass
-        if isinstance(tr, dict):
-            got = from_dict(tr)  # raises on a claimed-but-malformed dict
-            if got is not None:
-                return got
-    for _, (value, _s) in sorted(objs.items()):
-        if isinstance(value, dict) and value.get("Type") == "XRef":
-            got = from_dict(value)
-            if got is not None:
-                return got
-    return None
 
 
 class _CryptContext:
@@ -648,46 +600,19 @@ def _walk_pages(objs, node, acc: list[dict], inherited: dict | None = None) -> N
         raise PdfError(f"unexpected page-tree node /Type /{t}")
 
 
-def _filters(image_dict) -> list[str]:
-    f = image_dict.get("Filter")
-    if f is None:
-        return []
-    if isinstance(f, list):
-        return [str(x) for x in f]
-    return [str(f)]
-
-
 def _predictor_undo(
     data: bytes, predictor: int, columns: int, colors: int, bpc: int
 ) -> bytes:
     """Reverse a Flate /DecodeParms predictor (ISO 32000 §7.4.4.4):
-    Predictor 2 = TIFF horizontal differencing; 10-15 = the PNG row
-    filters (the tag byte leading each row names the actual filter, so
-    one decoder covers all six values) — shared with png._unfilter."""
-    if predictor == 1:
-        return data
+    Predictor 2 = TIFF horizontal differencing of 8-bit samples; 10-15 =
+    the PNG row filters (the tag byte leading each row names the actual
+    filter, so one decoder covers all six values) — shared with
+    png._unfilter. Sub-byte samples filter whole BYTES at stride 1 (PNG
+    spec rule, same as png.py's sub-byte depths)."""
     if colors < 1:
         raise PdfError("predictor /Colors must be >= 1")
-    if 10 <= predictor <= 15 and bpc in (1, 2, 4):
-        # sub-byte PNG predictors filter whole BYTES at stride 1 (PNG
-        # spec rule, same as png.py's sub-byte depths)
-        rowlen = (columns * colors * bpc + 7) // 8
-        stride = rowlen + 1
-        h = len(data) // stride
-        if h == 0:
-            raise PdfError("predictor stream shorter than one row")
-        raw = np.frombuffer(data[: h * stride], dtype=np.uint8).reshape(
-            h, stride
-        )
-        try:
-            return png._unfilter(raw, h, rowlen, 1).tobytes()
-        except ValueError as e:
-            raise PdfError(f"bad PNG-predictor row: {e}") from e
-    if bpc != 8:
-        raise PdfError(f"predictor {predictor} with {bpc}-bit samples "
-                       "unsupported")
-    rowlen = columns * colors
-    if predictor == 2:
+    if predictor == 2 and bpc == 8:
+        rowlen = columns * colors
         h = len(data) // rowlen
         if h == 0:
             raise PdfError("predictor stream shorter than one row")
@@ -699,7 +624,8 @@ def _predictor_undo(
         return (
             np.cumsum(arr, axis=1, dtype=np.int64) & 0xFF
         ).astype(np.uint8).tobytes()
-    if 10 <= predictor <= 15:
+    if 10 <= predictor <= 15 and bpc in (1, 2, 4, 8):
+        rowlen = (columns * colors * bpc + 7) // 8
         stride = rowlen + 1
         h = len(data) // stride
         if h == 0:
@@ -709,7 +635,7 @@ def _predictor_undo(
             return png._unfilter(raw, h, rowlen, max(colors * bpc // 8, 1)).tobytes()
         except ValueError as e:
             raise PdfError(f"bad PNG-predictor row: {e}") from e
-    raise PdfError(f"predictor {predictor} unsupported")
+    raise PdfError(f"predictor {predictor} with {bpc}-bit samples unsupported")
 
 
 def _ahx_decode(data: bytes) -> bytes:
@@ -798,6 +724,9 @@ def _gray_from_samples(
     return np.clip(np.rint(gray), 0, 255).astype(np.uint8)
 
 
+_PIXEL_FILTERS = ("DCTDecode", "CCITTFaxDecode")
+
+
 def _decode_image_xobject(objs, image_dict: dict, stream: bytes) -> np.ndarray:
     imagemask = _deref(objs, image_dict.get("ImageMask", False)) is True
     # /ImageMask images are 1-bit by definition (sample 0 paints the fill
@@ -809,29 +738,18 @@ def _decode_image_xobject(objs, image_dict: dict, stream: bytes) -> np.ndarray:
     h = _deref(objs, image_dict.get("Height"))
     if not isinstance(w, int) or not isinstance(h, int):
         raise PdfError("image missing /Width or /Height")
+    # byte-level filters first (e.g. ASCIIHex before DCT, how editors keep
+    # inline images printable), then the pixel decoder, if any
     filters = _filters(image_dict)
-    parms_all = _deref(objs, image_dict.get("DecodeParms"))
-    if filters and filters[0] == "ASCIIHexDecode":
-        # AHx chains BEFORE the binary filter (how editors keep inline
-        # images printable); peel it AND its /DecodeParms slot, then
-        # dispatch on the rest
-        stream = _ahx_decode(bytes(stream))
-        filters = filters[1:]
-        if isinstance(parms_all, list):
-            parms_all = parms_all[1:]
-
-    def _parms() -> dict:
-        """The (remaining) first filter's parameter dict; array-form
-        /DecodeParms may carry null placeholders."""
-        p = parms_all
-        if isinstance(p, list):
-            p = _deref(objs, p[0]) if p else None
-        return p if isinstance(p, dict) else {}
-
-    if filters == ["DCTDecode"]:
-        return png.to_gray(jpeg.decode(bytes(stream)))
-    if filters == ["CCITTFaxDecode"]:
-        parms = _parms()
+    pixel = filters[-1] if filters and filters[-1] in _PIXEL_FILTERS else None
+    data = _decode_stream(
+        objs, {**image_dict, "Filter": filters[:-1]} if pixel else image_dict,
+        stream,
+    )
+    if pixel == "DCTDecode":
+        return png.to_gray(jpeg.decode(data))
+    if pixel == "CCITTFaxDecode":
+        parms = _filter_parms(objs, image_dict, len(filters) - 1)
         k = _deref(objs, parms.get("K", 0))
         if not isinstance(k, int):
             raise PdfError(f"CCITT K={k!r} is not an integer")
@@ -847,9 +765,9 @@ def _decode_image_xobject(objs, image_dict: dict, stream: bytes) -> np.ndarray:
             )
         try:
             if k < 0:
-                bits = ccitt.decode_g4(bytes(stream), cols, h)
+                bits = ccitt.decode_g4(data, cols, h)
             else:
-                bits = ccitt.decode_g3(bytes(stream), cols, h, k=k,
+                bits = ccitt.decode_g3(data, cols, h, k=k,
                                        byte_align=byte_align)
         except ccitt.CcittError as e:
             raise PdfError(f"bad CCITT stream (K={k}): {e}") from e
@@ -863,126 +781,45 @@ def _decode_image_xobject(objs, image_dict: dict, stream: bytes) -> np.ndarray:
         d0, d1 = float(decode[0]), float(decode[1])
         gray = np.where(sample, d1, d0) * 255.0
         return np.clip(np.rint(gray), 0, 255).astype(np.uint8)
-    if filters in ([], ["FlateDecode"], ["RunLengthDecode"]):
-        parms = _parms()
-        if filters == ["FlateDecode"]:
-            data = zlib.decompress(stream)
-        elif filters == ["RunLengthDecode"]:
-            data = _rle_decode(bytes(stream))
-        else:
-            data = bytes(stream)
-        cs = _deref(objs, image_dict.get("ColorSpace", "DeviceGray"))
-        pred = _deref(objs, parms.get("Predictor", 1))
-        if pred != 1:
-            ncomp = 3 if cs == "DeviceRGB" else 1
-            data = _predictor_undo(
-                data, pred,
-                _deref(objs, parms.get("Columns", 1)),
-                _deref(objs, parms.get("Colors", ncomp)),
-                _deref(objs, parms.get("BitsPerComponent", 8)),
+    cs = _deref(objs, image_dict.get("ColorSpace", "DeviceGray"))
+    decode = _deref(objs, image_dict.get("Decode"))
+    if imagemask or cs == "DeviceGray":
+        return _gray_from_samples(data, w, h, bpc, decode)
+    if isinstance(cs, list) and cs and str(cs[0]) == "Indexed":
+        # [/Indexed base hival lookup]: samples are palette indices
+        base = _deref(objs, cs[1])
+        hival = _deref(objs, cs[2])
+        lk = cs[3]
+        if isinstance(lk, Ref):
+            lval, lstream = objs.get(lk.num, (None, None))
+            if lstream is None:
+                raise PdfError("Indexed lookup stream missing")
+            lookup = _decode_stream(
+                objs, lval if isinstance(lval, dict) else {}, lstream
             )
-        decode = _deref(objs, image_dict.get("Decode"))
-        if imagemask or cs == "DeviceGray":
-            return _gray_from_samples(data, w, h, bpc, decode)
-        if isinstance(cs, list) and cs and str(cs[0]) == "Indexed":
-            # [/Indexed base hival lookup]: samples are palette indices
-            base = _deref(objs, cs[1])
-            hival = _deref(objs, cs[2])
-            lk = cs[3]
-            if isinstance(lk, Ref):
-                lval, lstream = objs.get(lk.num, (None, None))
-                if lstream is None:
-                    raise PdfError("Indexed lookup stream missing")
-                lookup = _decode_stream(
-                    objs, lval if isinstance(lval, dict) else {}, lstream
-                )
-            elif isinstance(lk, (bytes, bytearray)):
-                lookup = bytes(lk)
-            else:
-                raise PdfError("Indexed lookup must be a string or stream")
-            ncomp = {"DeviceRGB": 3, "DeviceGray": 1}.get(str(base))
-            if ncomp is None:
-                raise PdfError(f"Indexed base {base} unsupported")
-            if len(lookup) < (hival + 1) * ncomp:
-                raise PdfError("Indexed lookup shorter than (hival+1)*ncomp")
-            idx = np.minimum(_samples_from_rows(data, w, h, bpc), hival)
-            pal = np.frombuffer(
-                lookup[: (hival + 1) * ncomp], dtype=np.uint8
-            ).reshape(hival + 1, ncomp)
-            px = pal[idx]
-            return px[..., 0] if ncomp == 1 else png.to_gray(px)
-        if cs == "DeviceRGB":
-            if bpc != 8:
-                raise PdfError("sub-8-bit DeviceRGB unsupported")
-            if len(data) < w * h * 3:
-                raise PdfError("image stream shorter than Width*Height*3")
-            rgb = np.frombuffer(data[: w * h * 3], dtype=np.uint8)
-            return png.to_gray(rgb.reshape(h, w, 3))
-        raise PdfError(f"colorspace {cs} unsupported (DeviceGray/DeviceRGB)")
-    raise PdfError(f"image filter chain {filters} unsupported "
-                   "(FlateDecode, DCTDecode, RunLengthDecode, CCITTFaxDecode)")
-
-
-def _content_bytes(objs, page: dict) -> bytes:
-    contents = page.get("Contents")
-    streams: list[bytes] = []
-    for item in (contents if isinstance(contents, list) else [contents]):
-        if not isinstance(item, Ref) or item.num not in objs:
-            continue
-        value, stream = objs[item.num]
-        if stream is None:
-            continue
-        filters = _filters(value) if isinstance(value, dict) else []
-        try:
-            if filters == ["FlateDecode"]:
-                streams.append(zlib.decompress(stream))
-            elif not filters:
-                streams.append(bytes(stream))
-        except Exception:  # noqa: BLE001 — fall back to name order
-            return b""
-    return b"\n".join(streams)
-
-
-_CS_TOKEN = re.compile(
-    rb"/([^\s/<>\[\]()]+)"          # name
-    rb"|(-?(?:\d+\.?\d*|\.\d+))"    # number
-    rb"|([A-Za-z'\"*]+)"            # operator
-)
-
-
-def _strip_strings(data: bytes) -> bytes:
-    """Blank out (...) literal and <...> hex string operands
-    (length-preserving, so BI..EI byte positions stay valid): a searchable
-    scan's text layer must not leak `Q`/`cm`/`Do` lookalikes into the
-    operator stream and corrupt the CTM state."""
-    out = bytearray(data)
-    i, n = 0, len(data)
-    while i < n:
-        c = data[i]
-        if c == 0x28:  # ( — balanced nesting + backslash escapes
-            depth, j = 1, i + 1
-            while j < n and depth:
-                b = data[j]
-                if b == 0x5C:
-                    j += 2
-                    continue
-                if b == 0x28:
-                    depth += 1
-                elif b == 0x29:
-                    depth -= 1
-                j += 1
-            out[i:j] = b" " * (j - i)
-            i = j
-        elif c == 0x3C and data[i + 1 : i + 2] == b"<":  # << dict delim
-            i += 2
-        elif c == 0x3C:  # hex string
-            j = data.find(b">", i + 1)
-            j = n if j < 0 else j + 1
-            out[i:j] = b" " * (j - i)
-            i = j
+        elif isinstance(lk, (bytes, bytearray)):
+            lookup = bytes(lk)
         else:
-            i += 1
-    return bytes(out)
+            raise PdfError("Indexed lookup must be a string or stream")
+        ncomp = {"DeviceRGB": 3, "DeviceGray": 1}.get(str(base))
+        if ncomp is None:
+            raise PdfError(f"Indexed base {base} unsupported")
+        if len(lookup) < (hival + 1) * ncomp:
+            raise PdfError("Indexed lookup shorter than (hival+1)*ncomp")
+        idx = np.minimum(_samples_from_rows(data, w, h, bpc), hival)
+        pal = np.frombuffer(
+            lookup[: (hival + 1) * ncomp], dtype=np.uint8
+        ).reshape(hival + 1, ncomp)
+        px = pal[idx]
+        return px[..., 0] if ncomp == 1 else png.to_gray(px)
+    if cs == "DeviceRGB":
+        if bpc != 8:
+            raise PdfError("sub-8-bit DeviceRGB unsupported")
+        if len(data) < w * h * 3:
+            raise PdfError("image stream shorter than Width*Height*3")
+        rgb = np.frombuffer(data[: w * h * 3], dtype=np.uint8)
+        return png.to_gray(rgb.reshape(h, w, 3))
+    raise PdfError(f"colorspace {cs} unsupported (DeviceGray/DeviceRGB)")
 
 
 # inline-image (BI..ID..EI) abbreviated keys/values (ISO 32000 tbl 91/92)
@@ -1006,80 +843,46 @@ def _norm_inline(v):
     return v
 
 
-def _inline_segments(
-    raw: bytes, stripped: bytes
-) -> tuple[list[tuple[int, int, dict, bytes]], list[tuple[int, int]]]:
-    """BI..ID..EI inline images as ([(start, end, image_dict, payload)],
-    [(dead_start, dead_end)]) — fax-converter PDFs often carry the page
-    scan INLINE rather than as an XObject. BI detection + header parsing
-    run on the STRING-STRIPPED copy (a ' BI ' inside a text-layer string
-    literal must not start a phantom segment — stripping is
-    length-preserving so offsets align); the binary PAYLOAD slices from
-    `raw`. The EI terminator may legally occur inside binary payload, so
-    each whitespace-delimited candidate is DECODE-VERIFIED (a false early
-    EI yields a too-short stream and fails, and the search moves on)."""
-    segs: list[tuple[int, int, dict, bytes]] = []
-    dead: list[tuple[int, int]] = []  # undecodable BI..EI — blank, no draw
-    pos = 0
-    while True:
-        i = stripped.find(b"BI", pos)
-        if i < 0:
-            break
-        before_ok = i == 0 or stripped[i - 1] in _WS or stripped[i - 1] in _DELIM
-        nxt = stripped[i + 2 : i + 3]
-        after_ok = nxt == b"" or nxt[0] in _WS or nxt[0] in _DELIM
-        if not (before_ok and after_ok):
-            pos = i + 2
-            continue
-
-        def _to_first_ei(start: int) -> int:
-            e = raw.find(b"EI", start)
-            return len(raw) if e < 0 else e + 2
-
-        sc = _Scanner(stripped, i + 2)
-        d: dict = {}
-        try:
-            while True:
-                sc._skip_ws()
-                if stripped[sc.pos : sc.pos + 2] == b"ID":
-                    sc.pos += 2
-                    break
-                key = sc.parse()
-                val = sc.parse()
-                if isinstance(key, Name):
-                    d[_INLINE_KEYS.get(str(key), str(key))] = _norm_inline(val)
-        except (PdfError, IndexError):
-            # malformed header: still blank through the terminator so the
-            # binary payload never leaks into the operator stream
-            end = _to_first_ei(i + 2)
-            dead.append((i, end))
-            pos = end
-            continue
-        p0 = sc.pos + 1  # exactly one whitespace byte follows ID
-        q, found = p0, None
-        while found is None:
-            q = raw.find(b"EI", q)
-            if q < 0:
+def _inline_image(sc: _Scanner) -> tuple[dict, bytes] | None:
+    """The inline image after a `BI` operator as (image dict, payload), or
+    None when it cannot be decoded; leaves the cursor after its `EI` —
+    fax-converter PDFs often carry the page scan INLINE rather than as an
+    XObject. The EI terminator may legally occur inside binary payload,
+    so each whitespace-delimited candidate is DECODE-VERIFIED (a false
+    early EI yields a too-short stream and fails, and the search moves
+    on). An undecodable section is skipped through its first EI, so its
+    binary payload never tokenizes as operators."""
+    data, start = sc.data, sc.pos
+    d: dict = {}
+    try:
+        while True:
+            sc._skip_ws()
+            if data[sc.pos : sc.pos + 2] == b"ID":
+                sc.pos += 2
                 break
-            nb = raw[q + 2 : q + 3]
-            if (q > p0 and raw[q - 1] in _WS
+            key, val = sc.parse(), sc.parse()
+            if isinstance(key, Name):
+                d[_INLINE_KEYS.get(str(key), str(key))] = _norm_inline(val)
+    except (PdfError, IndexError, ValueError):
+        pass  # malformed header: skip from BI through the first EI
+    else:
+        start = sc.pos + 1  # exactly one whitespace byte follows ID
+        q = data.find(b"EI", start)
+        while q >= 0:
+            nb = data[q + 2 : q + 3]
+            if (q > start and data[q - 1] in _WS
                     and (nb == b"" or nb[0] in _WS or nb[0] in _DELIM)):
-                for cand in (raw[p0 : q - 1], raw[p0:q]):
+                for cand in (data[start : q - 1], data[start:q]):
                     try:
-                        _decode_image_xobject({}, dict(d), cand)
-                        found = (i, q + 2, d, cand)
-                        break
+                        _decode_image_xobject({}, d, cand)
                     except Exception:  # noqa: BLE001 — try next candidate
                         continue
-            q += 2
-        if found is None:
-            end = _to_first_ei(p0)
-            dead.append((i, end))
-            pos = end
-            continue
-        segs.append(found)
-        pos = found[1]
-    return segs, dead
+                    sc.pos = q + 2
+                    return d, cand
+            q = data.find(b"EI", q + 2)
+    end = data.find(b"EI", start)
+    sc.pos = len(data) if end < 0 else end + 2
+    return None
 
 
 def _mat_mul(m1, m2):
@@ -1093,76 +896,14 @@ def _mat_mul(m1, m2):
     )
 
 
-def _draw_ops(objs, page: dict):
-    """([(name, CTM)] in content order, {inline_name: (dict, payload)}):
-    every image draw — `/Name Do` XObject placements AND BI..ID..EI
-    inline images — with the CTM tracked through q/Q/cm, the placement a
-    viewer would use. Empty on any parse trouble (callers fall back to
-    name order)."""
-    raw = _content_bytes(objs, page)
-    stripped = _strip_strings(raw)
-    segs, dead = _inline_segments(raw, stripped)
-    blanked = bytearray(stripped)
-    for s, e2, _, _ in segs:
-        blanked[s:e2] = b" " * (e2 - s)  # length-preserving: positions hold
-    for s, e2 in dead:
-        blanked[s:e2] = b" " * (e2 - s)
-    data = bytes(blanked)
-    ident = (1.0, 0.0, 0.0, 1.0, 0.0, 0.0)
-    mul = _mat_mul
-    ctm, stack = ident, []
-    nums: list[float] = []
-    last_name = None
-    out: list[tuple[str, tuple]] = []
-    inline: dict[str, tuple[dict, bytes]] = {}
-    seg_idx = 0
-
-    def flush_inline(up_to: int) -> None:
-        nonlocal seg_idx
-        while seg_idx < len(segs) and segs[seg_idx][0] < up_to:
-            nm = f"__inline{seg_idx}"
-            inline[nm] = (segs[seg_idx][2], segs[seg_idx][3])
-            out.append((nm, ctm))
-            seg_idx += 1
-
-    for m in _CS_TOKEN.finditer(data):
-        flush_inline(m.start())
-        name, num, op = m.group(1), m.group(2), m.group(3)
-        if num is not None:
-            nums.append(float(num))
-            continue
-        if name is not None:
-            last_name = name.decode("latin-1")
-            continue
-        ops = op.decode("latin-1")
-        if ops == "q":
-            stack.append(ctm)
-        elif ops == "Q":
-            ctm = stack.pop() if stack else ident
-        elif ops == "cm" and len(nums) >= 6:
-            ctm = mul(tuple(nums[-6:]), ctm)
-        elif ops == "Do" and last_name is not None:
-            out.append((last_name, ctm))
-        nums = []
-    flush_inline(len(data) + 1)
-    return out, inline
-
-
-def _compose_page(objs, images: dict, draws: list, media) -> np.ndarray:
-    """Paint multiple image draws onto one page canvas in content order
-    (later over earlier) — the multi-strip scanner shape, where each page
-    arrives as a stack of image bands. Subset: axis-aligned placements
-    only (b = c = 0; negative scales flip); canvas resolution follows the
+def _compose_page(objs, draws: list, media) -> np.ndarray:
+    """Paint multiple axis-aligned image draws (image dict, stream, CTM)
+    onto one page canvas in content order (later over earlier) — the
+    multi-strip scanner shape, where each page arrives as a stack of
+    image bands. Negative scales flip; canvas resolution follows the
     densest draw so no strip loses pixels."""
     placed = []
-    for name, (a, b, c, d, e, f) in draws:
-        if abs(b) > 1e-9 or abs(c) > 1e-9:
-            # rotated/skewed stamp or watermark: skip it rather than fail
-            # the whole page — the axis-aligned scan strips still composite
-            continue
-        if abs(a) < 1e-9 or abs(d) < 1e-9:
-            continue  # zero-size draw paints nothing
-        value, stream = images[name]
+    for value, stream, (a, b, c, d, e, f) in draws:
         if stream is None:
             raise PdfError("image XObject has no stream")
         img = _decode_image_xobject(objs, value, stream)
@@ -1173,8 +914,6 @@ def _compose_page(objs, images: dict, draws: list, media) -> np.ndarray:
         x0, x1 = sorted((e, e + a))
         y0, y1 = sorted((f, f + d))
         placed.append((img, x0, y0, x1, y1))
-    if not placed:
-        raise PdfError("page draws no image")
     mx0, my0, mx1, my1 = (float(v) for v in media)
     pw, ph = max(mx1 - mx0, 1e-6), max(my1 - my0, 1e-6)
     # pixels per point: keep the densest strip 1:1; bounded canvas
@@ -1370,14 +1109,13 @@ def _make_font_decoder(objs, fd: dict):
     return dec
 
 
-def _font_decoders(objs, page: dict) -> dict[str, object]:
-    return _fonts_from_resources(objs, page.get("Resources"))
-
-
 def _content_tokens(data: bytes):
     """Content-stream token iterator: ('val', operand) for strings /
     numbers / names / arrays / dicts (via _Scanner), ('op', keyword) for
-    operators. Unparseable bytes are skipped (absorbing, like _draw_ops)."""
+    operators, and ('inline', (image dict, payload)) for a decodable
+    BI..ID..EI inline image. Unparseable bytes are skipped, so a string
+    operand (a text layer saying "BI" or "Q") never reads as an
+    operator."""
     sc = _Scanner(data, 0)
     n = len(data)
     while True:
@@ -1399,7 +1137,11 @@ def _content_tokens(data: bytes):
         if sc.pos == start:
             sc.pos += 1  # stray delimiter (] >) — skip
             continue
-        yield ("op", data[start : sc.pos].decode("latin-1"))
+        op = data[start : sc.pos].decode("latin-1")
+        if op != "BI":
+            yield ("op", op)
+        elif (image := _inline_image(sc)) is not None:
+            yield ("inline", image)
 
 
 # a TJ kern gap at least this fraction of an em reads as a word space
@@ -1407,34 +1149,14 @@ def _content_tokens(data: bytes):
 # emitting space glyphs)
 _KERN_SPACE_EM = 0.15
 
-
-def _blank_inline_images(raw: bytes) -> bytes:
-    """Blank BI..ID..EI payloads (and dead sections) so binary bytes never
-    tokenize — shared by the text walker for page AND form streams."""
-    stripped = _strip_strings(raw)
-    segs, dead = _inline_segments(raw, stripped)
-    if not segs and not dead:
-        return raw
-    buf = bytearray(raw)
-    for s, e, _, _ in segs:
-        buf[s:e] = b" " * (e - s)
-    for s, e in dead:
-        buf[s:e] = b" " * (e - s)
-    return bytes(buf)
-
-
-def _fonts_from_resources(objs, res) -> dict[str, object]:
-    res = _deref(objs, res or {}) or {}
-    fonts = _deref(objs, res.get("Font", {})) or {}
-    out: dict[str, object] = {}
-    for name, ref in fonts.items():
-        fd = _deref(objs, ref)
-        if isinstance(fd, dict):
-            out[str(name)] = _make_font_decoder(objs, fd)
-    return out
-
-
 _IDENT = (1.0, 0.0, 0.0, 1.0, 0.0, 0.0)
+
+# Form XObjects nest at most this deep, and a page enters at most
+# _FORM_DRAWS of them (forms that each draw the next many times grow
+# exponentially with depth); a form already being drawn is not entered
+# again, so a form that draws itself ends at once
+_FORM_DEPTH = 8
+_FORM_DRAWS = 1000
 
 # operators that are legitimate on a text-only page (state, color, text,
 # marked content) — anything else flags the page as drawing non-text
@@ -1445,49 +1167,77 @@ _TEXT_PAGE_OPS = {
 }
 
 
-def _run_text_stream(objs, data: bytes, fonts: dict, res, base_ctm,
-                     runs: list, seq: int, depth: int, idx: int):
-    """Text-state machine over one content stream (page or Form XObject).
-    Appends (y, x, seq, text, fs_dev) runs; returns (seq, saw_other_ops).
-    `Do` on a /Subtype /Form recurses with the form's /Matrix composed
-    into the CTM and the form's own /Resources (falling back to the
-    caller's) — born-digital writers routinely wrap page text in forms."""
-    ctm, gsave = base_ctm, []
+class _Marks:
+    """What one page's content draws, in paint order: image draws as
+    (image dict, stream bytes | None, CTM), text runs as (y, x, seq,
+    text, device font size) with text None when its font cannot be
+    decoded, whether any other marking operator ran, the first content
+    or form stream that could not be decoded, and the form draws left."""
+
+    __slots__ = ("draws", "runs", "other", "error", "fonts", "forms_left")
+
+    def __init__(self) -> None:
+        self.draws: list[tuple[dict, bytes | None, tuple]] = []
+        self.runs: list[tuple[float, float, int, str | None, float]] = []
+        self.other = False
+        self.error: PdfError | None = None
+        self.fonts: dict[int, object] = {}  # id(font dict) -> decoder
+        self.forms_left = _FORM_DRAWS
+
+    def font(self, objs, fonts: dict, name):
+        """Text decoder of font resource `name`, None when undecodable."""
+        try:
+            fd = _deref(objs, fonts.get(str(name)))
+            if not isinstance(fd, dict):
+                return None
+            if id(fd) not in self.fonts:
+                self.fonts[id(fd)] = _make_font_decoder(objs, fd)
+            return self.fonts[id(fd)]
+        except PdfError:
+            return None
+
+
+def _latin1(bs: bytes) -> str:
+    return bs.decode("latin-1")
+
+
+def _walk_content(objs, data: bytes, res, fonts: dict, ctm, forms: tuple,
+                  marks: _Marks) -> None:
+    """The one content-stream interpreter, over a page's or a Form
+    XObject's decoded stream. It tracks the graphics state (q/Q/cm) and
+    the text state (BT, Tf, Td/TD/Tm/T*/TL, Tj/'/"/TJ with kern-gap word
+    spacing), resolves `Do` against `res` (this stream's resources),
+    and recurses into Form XObjects with the form's /Matrix composed into
+    the CTM and the form's own /Resources (falling back to the caller's;
+    fonts likewise) — born-digital writers routinely wrap page text in
+    forms, and scanners the page image. `forms` holds the object numbers
+    of the forms being drawn. Results go to `marks`."""
+    res = _deref(objs, res or {}) or {}
+    xobjects = _deref(objs, res.get("XObject", {})) or {}
+    fonts = _deref(objs, res.get("Font", {})) or fonts
+    base_ctm, gsave = ctm, []
     tm = tlm = _IDENT
-    tl = 0.0
-    fs = 0.0
-    dec = _NO_FONT = object()  # sentinel: no Tf yet -> latin-1 fallback
-    saw_other_ops = False
+    tl = fs = 0.0
+    dec = _latin1  # no Tf yet
     operands: list = []
-    last_name = None
 
-    res_d = _deref(objs, res or {}) or {}
-    xobjects = _deref(objs, res_d.get("XObject", {})) or {}
+    def decode(bs: bytes) -> str | None:
+        return None if dec is None else dec(bs)
 
-    def decode_str(bs: bytes) -> str:
-        if dec is _NO_FONT:
-            return bs.decode("latin-1")
-        if dec is None:
-            raise PdfError(
-                f"page {idx}: font without ToUnicode/encoding — text "
-                "undecodable"
-            )
-        return dec(bs)
-
-    def show(text: str) -> None:
-        nonlocal seq
-        if not text:
+    def show(text: str | None) -> None:
+        if text == "":
             return
         trm = _mat_mul(tm, ctm)
         fs_dev = abs(fs) * max((trm[2] ** 2 + trm[3] ** 2) ** 0.5, 1e-9)
-        runs.append((trm[5], trm[4], seq, text, fs_dev))
-        seq += 1
+        marks.runs.append((trm[5], trm[4], len(marks.runs), text, fs_dev))
 
     for kind, tok in _content_tokens(data):
         if kind == "val":
             operands.append(tok)
-            if isinstance(tok, Name):
-                last_name = str(tok)
+            continue
+        if kind == "inline":
+            marks.draws.append((tok[0], tok[1], ctm))
+            operands = []
             continue
         op = tok
         try:
@@ -1500,9 +1250,8 @@ def _run_text_stream(objs, data: bytes, fonts: dict, res, base_ctm,
             elif op == "BT":
                 tm = tlm = _IDENT
             elif op == "Tf" and len(operands) >= 2:
-                name = operands[-2]
                 fs = float(operands[-1])
-                dec = fonts.get(str(name)) if isinstance(name, Name) else None
+                dec = marks.font(objs, fonts, operands[-2])
             elif op in ("Td", "TD") and len(operands) >= 2:
                 tx, ty = float(operands[-2]), float(operands[-1])
                 if op == "TD":
@@ -1517,88 +1266,143 @@ def _run_text_stream(objs, data: bytes, fonts: dict, res, base_ctm,
             elif op == "TL" and operands:
                 tl = float(operands[-1])
             elif op == "Tj" and operands and isinstance(operands[-1], bytes):
-                show(decode_str(operands[-1]))
+                show(decode(operands[-1]))
             elif op == "'" and operands and isinstance(operands[-1], bytes):
                 tlm = _mat_mul((1.0, 0.0, 0.0, 1.0, 0.0, -tl), tlm)
                 tm = tlm
-                show(decode_str(operands[-1]))
+                show(decode(operands[-1]))
             elif op == '"' and len(operands) >= 3:
                 tlm = _mat_mul((1.0, 0.0, 0.0, 1.0, 0.0, -tl), tlm)
                 tm = tlm
-                show(decode_str(operands[-1]))
+                show(decode(operands[-1]))
             elif op == "TJ" and operands and isinstance(operands[-1], list):
-                parts: list[str] = []
+                parts: list[str | None] = []
                 for el in operands[-1]:
                     if isinstance(el, bytes):
-                        parts.append(decode_str(el))
+                        parts.append(decode(el))
                     elif isinstance(el, (int, float)):
                         # kern gap >= _KERN_SPACE_EM em reads as a space
                         if -float(el) / 1000.0 >= _KERN_SPACE_EM:
                             parts.append(" ")
-                show("".join(parts))
-            elif op == "Do" and last_name is not None and depth < 8:
-                target = xobjects.get(last_name)
-                form = _deref(objs, target) if target is not None else None
-                stream = None
-                if isinstance(target, Ref) and target.num in objs:
-                    stream = objs[target.num][1]
-                if (isinstance(form, dict)
-                        and form.get("Subtype") == "Form"
-                        and stream is not None):
-                    inner = _decode_stream(objs, form, stream)
-                    mat = _deref(objs, form.get("Matrix")) or None
-                    fctm = ctm
-                    if isinstance(mat, list) and len(mat) == 6:
-                        fctm = _mat_mul(tuple(float(v) for v in mat), ctm)
-                    fres = form.get("Resources") or res
-                    ffonts = _fonts_from_resources(objs, fres) or fonts
-                    seq, other = _run_text_stream(
-                        objs, _blank_inline_images(inner), ffonts, fres,
-                        fctm, runs, seq, depth + 1, idx,
-                    )
-                    saw_other_ops = saw_other_ops or other
+                show(None if None in parts else "".join(parts))
+            elif op == "Do" and operands and isinstance(operands[-1], Name):
+                ref = xobjects.get(str(operands[-1]))
+                xo = _deref(objs, ref)
+                stream = objs[ref.num][1] if isinstance(ref, Ref) else None
+                subtype = xo.get("Subtype") if isinstance(xo, dict) else None
+                if (subtype == "Form" and stream is not None
+                        and ref.num not in forms
+                        and len(forms) < _FORM_DEPTH and marks.forms_left):
+                    marks.forms_left -= 1
+                    try:
+                        inner = _decode_stream(objs, xo, stream)
+                    except PdfError as e:
+                        marks.error = marks.error or e
+                    else:
+                        mat = _deref(objs, xo.get("Matrix"))
+                        fctm = ctm
+                        if isinstance(mat, list) and len(mat) == 6:
+                            fctm = _mat_mul(tuple(float(v) for v in mat), ctm)
+                        _walk_content(objs, inner, xo.get("Resources") or res,
+                                      fonts, fctm, forms + (ref.num,), marks)
                 else:
-                    saw_other_ops = True  # image/undecodable XObject draw
+                    marks.other = True
+                    if subtype == "Image":
+                        marks.draws.append((xo, stream, ctm))
             elif op not in _TEXT_PAGE_OPS:
-                saw_other_ops = True
+                marks.other = True
         except PdfError:
             raise
         except Exception:  # noqa: BLE001 — malformed operands: skip the op
             pass
         operands = []
-        if kind == "op":
-            last_name = None
-    return seq, saw_other_ops
 
 
-def _page_text_lines(objs, page: dict, idx: int) -> list[str]:
+def _page_marks(objs, page: dict) -> _Marks:
+    """Walk a page's content: its /Contents streams decoded and joined.
+    A stream that cannot be decoded leaves the content empty and is kept
+    as `error` (a text page raises it; an image page falls back to its
+    image XObjects in name order)."""
+    marks = _Marks()
+    contents = page.get("Contents")
+    chunks: list[bytes] = []
+    try:
+        for item in (contents if isinstance(contents, list) else [contents]):
+            if not isinstance(item, Ref) or item.num not in objs:
+                continue
+            value, stream = objs[item.num]
+            if stream is not None:
+                chunks.append(_decode_stream(
+                    objs, value if isinstance(value, dict) else {}, stream))
+    except PdfError as e:
+        marks.error, chunks = e, []
+    _walk_content(objs, b"\n".join(chunks), page.get("Resources"), {},
+                  _IDENT, (), marks)
+    return marks
+
+
+def _page_bitmap(objs, page: dict, marks: _Marks, idx: int) -> np.ndarray | None:
+    """Grayscale bitmap of a page's image draws, or None when the page
+    draws no raster image (the born-digital case — see _page_text_lines).
+    One axis-aligned draw IS the page at its native resolution, returned
+    exactly; several composite in content order (later over earlier),
+    placed by their CTMs; rotated/skewed stamps are dropped from the
+    composite (a page with ONLY such draws decodes its first). A page
+    whose content draws no image, or could not be read, falls back to
+    its own image XObjects, first by name."""
+    draws = marks.draws
+    if not draws:
+        res = _deref(objs, page.get("Resources", {})) or {}
+        xobjects = _deref(objs, res.get("XObject", {})) or {}
+        for _, ref in sorted((str(n), r) for n, r in xobjects.items()
+                             if isinstance(r, Ref)):
+            value, stream = objs[ref.num]
+            if isinstance(value, dict) and value.get("Subtype") == "Image":
+                draws = [(value, stream, _IDENT)]
+                break
+        else:
+            return None
+    placed = [(v, s, m) for v, s, m in draws
+              if abs(m[1]) <= 1e-9 and abs(m[2]) <= 1e-9
+              and abs(m[0]) > 1e-9 and abs(m[3]) > 1e-9]
+    if len(placed) > 1:
+        media = _deref(objs, page.get("MediaBox")) or None
+        if not (isinstance(media, list) and len(media) == 4):
+            # subset fallback: bound the draws themselves
+            xs = [v for _, _, (a, b, c, d, e, f) in placed for v in (e, e + a)]
+            ys = [v for _, _, (a, b, c, d, e, f) in placed for v in (f, f + d)]
+            media = [min(xs), min(ys), max(xs), max(ys)]
+        return _compose_page(objs, placed, [_deref(objs, v) for v in media])
+    value, stream, _ = (placed or draws)[0]
+    if stream is None:
+        raise PdfError(f"page {idx}: image XObject has no stream")
+    return _decode_image_xobject(objs, value, stream)
+
+
+def _page_text_lines(objs, page: dict, marks: _Marks, rot: int,
+                     idx: int) -> list[str]:
     """Positioned text lines of a page with no raster content, top-down,
-    left-to-right: a full text-state machine over the content stream
-    (BT/ET, Tf, Td/TD/Tm/T*/TL, Tj/\'/\"/TJ with kern-gap word spacing,
-    Form-XObject recursion) tracking CTM x text matrix; runs are bucketed
-    into lines by their device-space baseline (tolerance scaled to the
-    font size), ordered by x within a line, and the /Rotate inherited
-    attribute maps baseline coords into display orientation first. Raises
-    PdfError when the page draws non-text content it cannot represent
-    (undecodable font, or path/shading operators with no text at all)."""
-    raw = _content_bytes(objs, page)
-    if not raw.strip(bytes(_WS)):
-        return []  # blank page: no content operators at all
-    fonts = _font_decoders(objs, page)
-    runs: list[tuple[float, float, int, str, float]] = []
-    _, saw_other_ops = _run_text_stream(
-        objs, _blank_inline_images(raw), fonts,
-        page.get("Resources"), _IDENT, runs, 0, 0, idx,
-    )
-
+    left-to-right: runs are bucketed into lines by their device-space
+    baseline (tolerance scaled to the font size) and ordered by x within
+    a line, after the /Rotate display rotation `rot` maps baseline coords
+    into display orientation. Raises PdfError when the content could not
+    be decoded, a font cannot be, or the page draws only non-text content
+    (path/shading operators with no text at all)."""
+    if marks.error is not None:
+        raise marks.error
+    runs = marks.runs
     if not runs:
-        if saw_other_ops:
+        if marks.other:
             raise PdfError(
                 f"page {idx}: vector-graphics page without text is outside "
                 "the extractor subset; plug a rasterizer (pypdfium2) via "
                 "rasterizer="
             )
         return []
+    if any(text is None for _, _, _, text, _ in runs):
+        raise PdfError(
+            f"page {idx}: font without ToUnicode/encoding — text undecodable"
+        )
 
     # /Rotate-aware display coords: (dx across, dy down), so line grouping
     # and ordering match what a viewer (or the raster path) presents
@@ -1609,10 +1413,6 @@ def _page_text_lines(objs, page: dict, idx: int) -> list[str]:
         xs = [x for _, x, _, _, _ in runs]
         ys = [y for y, _, _, _, _ in runs]
         mx0, my0, mx1, my1 = min(xs), min(ys), max(xs), max(ys)
-    rot = _deref(objs, page.get("Rotate", 0)) or 0
-    if not isinstance(rot, int) or rot % 90:
-        raise PdfError(f"page {idx}: bad /Rotate {rot!r}")
-    rot %= 360
 
     def display(x: float, y: float) -> tuple[float, float]:
         if rot == 90:
@@ -1650,86 +1450,74 @@ def _page_text_lines(objs, page: dict, idx: int) -> list[str]:
     return lines
 
 
-def _open_pdf(blob: bytes):
-    """blob -> (objs, [page dict] in page-tree order). Encrypted files
-    (standard handler, empty user password) decrypt transparently: the
-    decrypt pass runs BETWEEN the direct scan and /ObjStm expansion, so
-    encrypted containers expand from plaintext."""
-    blob = bytes(blob)
-    objs, pos_of = _scan_objects(blob)
-    found = _find_encrypt(blob, objs)
-    if found is not None:
-        _decrypt_objects(objs, *found)
-    _expand_objstms(objs, pos_of)
-    if not objs:
-        raise PdfError("no indirect objects found")
-    root = _deref(objs, objs[_trailer_root(blob, objs)][0])
-    pages: list[dict] = []
-    _walk_pages(objs, root.get("Pages"), pages)
-    return objs, pages
-
-
-def _page_bitmap(objs, page: dict, idx: int) -> np.ndarray | None:
-    """Composited grayscale bitmap of one page, or None when the page
-    draws no raster image at all (the born-digital case — see
-    _page_text_lines)."""
-    res = _deref(objs, page.get("Resources", {})) or {}
-    xobjects = _deref(objs, res.get("XObject", {})) or {}
-    images: dict[str, tuple[dict, bytes | None]] = {}
-    for name, ref in xobjects.items():
-        if not isinstance(ref, Ref):
-            continue
-        value, stream = objs[ref.num]
-        if isinstance(value, dict) and value.get("Subtype") == "Image":
-            images[str(name)] = (value, stream)
-    draw_list, inline_images = _draw_ops(objs, page)
-    images.update(inline_images)
-    if not images:
-        return None
-    all_draws = [(n, m) for n, m in draw_list if n in images]
-    # compositing handles axis-aligned placements; rotated/skewed
-    # stamps are dropped from the composite (and a page with ONLY
-    # such draws falls back to single-image decode below)
-    draws = [
-        (n, m) for n, m in all_draws
-        if abs(m[1]) <= 1e-9 and abs(m[2]) <= 1e-9
-        and abs(m[0]) > 1e-9 and abs(m[3]) > 1e-9
-    ]
-    if not draws and all_draws:
-        draws = all_draws[:1]
-    if len(draws) > 1:
-        # multi-strip / multi-draw page: composite in content order
-        # (later over earlier), placed by each draw's CTM
-        media = _deref(objs, page.get("MediaBox")) or None
-        if not (isinstance(media, list) and len(media) == 4):
-            # subset fallback: bound the draws themselves
-            xs = [v for _, (a, b, c, d, e, f) in draws
-                  for v in (e, e + a)]
-            ys = [v for _, (a, b, c, d, e, f) in draws
-                  for v in (f, f + d)]
-            media = [min(xs), min(ys), max(xs), max(ys)]
-        page_img = _compose_page(
-            objs, images, draws, [_deref(objs, v) for v in media]
-        )
-    else:
-        # single draw (or undecodable content stream): that image IS
-        # the page at its native resolution — returned exactly, no
-        # resample. Name-sorted order is the fallback when no draw
-        # parses.
-        chosen = draws[0][0] if draws else sorted(images)[0]
-        value, stream = images[chosen]
-        if stream is None:
-            raise PdfError(f"page {idx}: image XObject has no stream")
-        page_img = _decode_image_xobject(objs, value, stream)
-    # /Rotate (inherited): clockwise display rotation in 90° steps —
-    # scanners emit landscape pages this way and a viewer (or
-    # pypdfium2, the reference's rasterizer) shows them upright
+def _read_page(objs, page: dict, idx: int) -> tuple[str, object]:
+    """("image", bitmap) or ("text", lines) for one page: one walk of its
+    content, then its image draws composite, or its text runs lay out.
+    /Rotate (inherited) is a clockwise display rotation in 90° steps —
+    scanners emit landscape pages this way and a viewer (or pypdfium2,
+    the reference's rasterizer) shows them upright."""
     rot = _deref(objs, page.get("Rotate", 0)) or 0
     if not isinstance(rot, int) or rot % 90:
         raise PdfError(f"page {idx}: bad /Rotate {rot!r}")
-    if rot % 360:
-        page_img = np.rot90(page_img, -((rot // 90) % 4)).copy()
-    return page_img
+    rot %= 360
+    marks = _page_marks(objs, page)
+    img = _page_bitmap(objs, page, marks, idx)
+    if img is None:
+        return "text", _page_text_lines(objs, page, marks, rot, idx)
+    if rot:
+        img = np.rot90(img, -(rot // 90)).copy()
+    return "image", img
+
+
+class _Doc(NamedTuple):
+    objs: dict
+    pages: list
+    trailer: dict
+    crypt: _CryptContext | None
+
+
+def _open_pdf(blob: bytes) -> _Doc:
+    """The one document open: object scan, the newest trailer, then —
+    for encrypted files (standard handler, empty user password) — the
+    decrypt pass BETWEEN the direct scan and /ObjStm expansion, so
+    encrypted containers expand from plaintext; then the page tree from
+    /Root (else the first /Type /Catalog object)."""
+    blob = bytes(blob)
+    objs, pos_of = _scan_objects(blob)
+    if not objs:
+        raise PdfError("no indirect objects found")
+    trailer = _trailer(blob, objs, pos_of)
+    crypt = None
+    if trailer.get("Encrypt") is not None:
+        try:
+            enc = _deref(objs, trailer["Encrypt"])
+        except PdfError:
+            enc = None
+        if not isinstance(enc, dict):
+            # the trailer CLAIMS encryption but the dict is missing or
+            # malformed: fail closed — if the claim were true, every
+            # stream would decode as garbage
+            raise PdfError("encrypted PDF: malformed /Encrypt dictionary")
+        ids = trailer.get("ID")
+        id0 = b""
+        if isinstance(ids, list) and ids and isinstance(ids[0], (bytes, bytearray)):
+            id0 = bytes(ids[0])
+        crypt = _decrypt_objects(objs, enc, id0)
+    _expand_objstms(objs, pos_of)
+    root = trailer.get("Root")
+    if not isinstance(root, Ref):
+        root = next((Ref(num) for num, (value, _) in sorted(objs.items())
+                     if isinstance(value, dict)
+                     and value.get("Type") == "Catalog"), None)
+        if root is None:
+            raise PdfError("no /Root catalog found")
+    pages: list[dict] = []
+    _walk_pages(objs, _deref(objs, root).get("Pages"), pages)
+    return _Doc(objs, pages, trailer, crypt)
+
+
+def _page_content(doc: _Doc) -> list[tuple[str, object]]:
+    return [_read_page(doc.objs, page, idx) for idx, page in enumerate(doc.pages)]
 
 
 def extract_page_images(blob: bytes) -> list[np.ndarray]:
@@ -1740,67 +1528,28 @@ def extract_page_images(blob: bytes) -> list[np.ndarray]:
     text pages — raises PdfError here; use `extract_page_content` when
     text pages should extract as text instead. Zero-page documents
     return []."""
-    objs, pages = _open_pdf(blob)
     out: list[np.ndarray] = []
-    for idx, page in enumerate(pages):
-        img = _page_bitmap(objs, page, idx)
-        if img is None:
+    for idx, (kind, page) in enumerate(_page_content(_open_pdf(blob))):
+        if kind != "image":
             raise PdfError(
                 f"page {idx} has no image XObject — vector/text page is "
                 "outside the raster subset; use extract_page_content, or "
                 "plug a rasterizer (pypdfium2) via rasterizer="
             )
-        out.append(img)
+        out.append(page)
     return out
 
 
 def extract_page_content(blob: bytes) -> list[tuple[str, object]]:
     """PDF bytes -> [("image", 2-D uint8 array) | ("text", [line, ...])]
     per page, in page-tree order — the full-fidelity reader the pipeline
-    uses. Pages that draw raster content composite exactly as
-    extract_page_images; pages with no raster content extract their
-    text-showing operators directly (born-digital pages — cheaper AND
-    exact, where the reference rasterizes everything and OCRs,
-    /root/reference/src/pdf_processing.py:21-73). A page that is neither
-    (vector graphics only, undecodable font) raises PdfError — absorbed
-    per row by the callers."""
-    objs, pages = _open_pdf(blob)
-    out: list[tuple[str, object]] = []
-    for idx, page in enumerate(pages):
-        img = _page_bitmap(objs, page, idx)
-        if img is not None:
-            out.append(("image", img))
-        else:
-            out.append(("text", _page_text_lines(objs, page, idx)))
-    return out
-
-
-def encode_text_pdf(pages: list, **kw) -> bytes:
-    """Convenience writer for born-digital fixtures: every element of
-    `pages` is a list of line strings. See encode_image_pdf's text_*
-    options (tounicode / tj_kern / font_size / leading) — pass them with
-    or without the text_ prefix."""
-    kw = {(k if k.startswith("text_") or k == "objstm" else f"text_{k}"): v
-          for k, v in kw.items()}
-    return encode_image_pdf(list(pages), **kw)
-
-
-def _find_info_ref(blob: bytes, objs) -> Ref | None:
-    m = None
-    for m in re.finditer(rb"trailer", blob):
-        pass
-    if m is not None:
-        try:
-            tr = _Scanner(blob, m.end()).parse()
-            if isinstance(tr, dict) and isinstance(tr.get("Info"), Ref):
-                return tr["Info"]
-        except PdfError:
-            pass
-    for _, (value, _s) in sorted(objs.items()):
-        if (isinstance(value, dict) and value.get("Type") == "XRef"
-                and isinstance(value.get("Info"), Ref)):
-            return value["Info"]
-    return None
+    uses. Pages that draw raster content composite their draws; pages
+    with no raster content extract their text-showing operators directly
+    (born-digital pages — cheaper AND exact, where the reference
+    rasterizes everything and OCRs, its src/pdf_processing.py:21-73). A
+    page that is neither (vector graphics only, undecodable font or
+    content stream) raises PdfError — absorbed per row by the callers."""
+    return _page_content(_open_pdf(blob))
 
 
 def _pdf_text_string(data: bytes) -> str:
@@ -1811,6 +1560,23 @@ def _pdf_text_string(data: bytes) -> str:
     return data.decode("latin-1")
 
 
+def _info(doc: _Doc) -> dict:
+    out: dict[str, object] = {}
+    ref = doc.trailer.get("Info")
+    value = doc.objs.get(ref.num, (None,))[0] if isinstance(ref, Ref) else None
+    if isinstance(value, dict):
+        for k, v in value.items():
+            if isinstance(v, (bytes, bytearray)):
+                raw = bytes(v)
+                if doc.crypt is not None:
+                    raw = doc.crypt.decrypt(raw, ref.num)
+                out[str(k)] = _pdf_text_string(raw)
+            elif isinstance(v, (bool, int, float, Name)):
+                out[str(k)] = v
+    out["n_pages"] = len(doc.pages)
+    return out
+
+
 def pdf_info(blob: bytes) -> dict:
     """Document metadata: the /Info dictionary's entries (Title, Author,
     Subject, dates, ...) decoded as PDF text strings, plus n_pages — what
@@ -1818,33 +1584,14 @@ def pdf_info(blob: bytes) -> dict:
     files decrypt STRING values too: strings encrypt exactly like
     streams (per-object key through R4, the file key under AESV3), which
     the stream-only pass doesn't touch."""
-    blob = bytes(blob)
-    objs, pos_of = _scan_objects(blob)
-    found = _find_encrypt(blob, objs)
-    crypt = None
-    if found is not None:
-        crypt = _decrypt_objects(objs, *found)
-    _expand_objstms(objs, pos_of)
-    if not objs:
-        raise PdfError("no indirect objects found")
-    out: dict[str, object] = {}
-    info_ref = _find_info_ref(blob, objs)
-    if info_ref is not None and info_ref.num in objs:
-        value = objs[info_ref.num][0]
-        if isinstance(value, dict):
-            for k, v in value.items():
-                if isinstance(v, (bytes, bytearray)):
-                    raw = bytes(v)
-                    if crypt is not None:
-                        raw = crypt.decrypt(raw, info_ref.num)
-                    out[str(k)] = _pdf_text_string(raw)
-                elif isinstance(v, (bool, int, float, Name)):
-                    out[str(k)] = v
-    root = _deref(objs, objs[_trailer_root(blob, objs)][0])
-    pages: list[dict] = []
-    _walk_pages(objs, root.get("Pages"), pages)
-    out["n_pages"] = len(pages)
-    return out
+    return _info(_open_pdf(blob))
+
+
+def read_pdf(blob: bytes) -> tuple[dict, list[tuple[str, object]]]:
+    """(pdf_info(blob), extract_page_content(blob)) from one open of the
+    file, for callers that want both."""
+    doc = _open_pdf(blob)
+    return _info(doc), _page_content(doc)
 
 
 def pdfio_page_source(blob: bytes, zoom: float = 2.0) -> list:
@@ -1864,6 +1611,16 @@ def pdfio_page_source(blob: bytes, zoom: float = 2.0) -> list:
         else:
             out.append(png.encode_gray(v, compress_level=1))
     return out
+
+
+def encode_text_pdf(pages: list, **kw) -> bytes:
+    """Convenience writer for born-digital fixtures: every element of
+    `pages` is a list of line strings. See encode_image_pdf's text_*
+    options (tounicode / tj_kern / font_size / leading) — pass them with
+    or without the text_ prefix."""
+    kw = {(k if k.startswith("text_") or k == "objstm" else f"text_{k}"): v
+          for k, v in kw.items()}
+    return encode_image_pdf(list(pages), **kw)
 
 
 # ---------------------------------------------------------------------------

@@ -488,3 +488,37 @@ def test_pdf_report_and_cli_mode(spark, tmp_path, monkeypatch):
     back = spark.read.parquet(outp)
     assert back.count() == 3
     assert back.filter("page_kind = 'text'").count() == 1
+
+
+def test_pdf_report_reads_each_file_once(monkeypatch):
+    """pdf_report's per-row function opens a file once: one object scan
+    per row, whose page list also gives n_pages. The stage runs in
+    process over a stand-in frame that captures the mapInPandas
+    function."""
+    import pandas as pd
+
+    from ner_ocr_spark.operators.pdf import pdf_report
+
+    scans = []
+    real_scan = pdfio._scan_objects
+    monkeypatch.setattr(pdfio, "_scan_objects",
+                        lambda blob: scans.append(1) or real_scan(blob))
+
+    class _Frame:
+        def select(self, *cols):
+            return self
+
+        def mapInPandas(self, fn, schema):
+            self.fn = fn
+            return self
+
+    frame = pdf_report(_Frame())
+    blob = pdfio.encode_image_pdf(
+        [["one line"], ["two", "lines"]], info={"Title": "Once"})
+    batch = pd.DataFrame({"doc_id": ["a"], "payload": [blob]})
+    (out,) = list(frame.fn(iter([batch])))
+    assert len(scans) == 1
+    assert list(out["page_idx"]) == [0, 1]
+    assert list(out["n_pages"]) == [2, 2]
+    assert list(out["title"]) == ["Once", "Once"]
+    assert out["error"].isna().all()

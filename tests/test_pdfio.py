@@ -608,3 +608,264 @@ def test_ahx_chain_with_array_decodeparms_predictor():
     )
     (page,) = pdfio.extract_page_images(tampered)
     assert np.array_equal(page, g)
+
+
+# -- one reader path: content streams, forms, filters, trailers --------------
+
+
+def _write_pdf(bodies: list[bytes], trailer: bytes = b"<< /Root 1 0 R >>"):
+    """Object i+1 = bodies[i], then a classic `trailer` (no xref table:
+    the reader's brute scan does not need one)."""
+    out = b"%PDF-1.4\n"
+    for i, body in enumerate(bodies, start=1):
+        out += b"%d 0 obj\n%s\nendobj\n" % (i, body)
+    return out + b"trailer\n" + trailer + b"\n%%EOF\n"
+
+
+def _stream(head: bytes, data: bytes) -> bytes:
+    return b"<< %s /Length %d >>\nstream\n%s\nendstream" % (
+        head, len(data), data)
+
+
+def _image_body(img: np.ndarray) -> bytes:
+    h, w = img.shape
+    return _stream(
+        b"/Type /XObject /Subtype /Image /Width %d /Height %d "
+        b"/ColorSpace /DeviceGray /BitsPerComponent 8 /Filter /FlateDecode"
+        % (w, h), zlib.compress(img.tobytes(), 6))
+
+
+def _form_scan_pdf(img: np.ndarray, self_draw: bool = False) -> bytes:
+    """A scan drawn through a Form XObject: the page draws /Fm0, the form
+    draws /Im0. With self_draw the form also draws itself."""
+    h, w = img.shape
+    form_res = b"/Im0 6 0 R" + (b" /Fm0 5 0 R" if self_draw else b"")
+    form = b"q %d 0 0 %d 0 0 cm /Im0 Do Q" % (w, h)
+    if self_draw:
+        form += b" /Fm0 Do"
+    return _write_pdf([
+        b"<< /Type /Catalog /Pages 2 0 R >>",
+        b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+        b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 %d %d] "
+        b"/Resources << /XObject << /Fm0 5 0 R >> >> /Contents 4 0 R >>"
+        % (w, h),
+        _stream(b"", b"q /Fm0 Do Q"),
+        _stream(b"/Type /XObject /Subtype /Form /BBox [0 0 %d %d] "
+                b"/Resources << /XObject << %s >> >>" % (w, h, form_res),
+                form),
+        _image_body(img),
+    ])
+
+
+def _text_page_pdf(content: bytes, filters: bytes = b"",
+                   extra: list[bytes] | None = None,
+                   xobjects: bytes = b"") -> bytes:
+    """One WinAnsi Helvetica text page whose content stream is stored
+    as given under /Filter `filters`."""
+    return _write_pdf([
+        b"<< /Type /Catalog /Pages 2 0 R >>",
+        b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+        b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
+        b"/Resources << /Font << /F1 5 0 R >> %s >> /Contents 4 0 R >>"
+        % xobjects,
+        _stream(b"/Filter %s" % filters if filters else b"", content),
+        b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica "
+        b"/Encoding /WinAnsiEncoding >>",
+    ] + (extra or []))
+
+
+_HELLO = b"BT /F1 12 Tf 72 720 Td (HELLO WORLD) Tj ET"
+
+
+def test_form_xobject_scan_reads_as_image_page():
+    """A scan drawn through a Form XObject is an image page: the one
+    content walk follows `Do` into the form and places its image draw."""
+    g = _grad()
+    assert pdfio.extract_page_content(_form_scan_pdf(g))[0][0] == "image"
+    (page,) = pdfio.extract_page_images(_form_scan_pdf(g))
+    assert np.array_equal(page, g)
+
+
+def test_form_xobject_scan_ocrs_through_extract_spans(spark):
+    blob = _form_scan_pdf(_page_gray(PAGE_LINES[0]))
+    rows = pipeline.extract_spans(
+        _docs(spark), blob_resolver=_resolver_for(blob), with_ner=False,
+    ).filter("kind = 'pdf'").orderBy("line_idx").collect()
+    assert [r["error"] for r in rows] == [None, None]
+    assert [r["text"] for r in rows] == [
+        normalize_text(line) for line in PAGE_LINES[0]]
+
+
+@pytest.mark.parametrize("filters,encode", [
+    (b"/ASCIIHexDecode", lambda c: c.hex().encode() + b">"),
+    (b"[/ASCIIHexDecode /FlateDecode]",
+     lambda c: zlib.compress(c).hex().encode() + b">"),
+])
+def test_text_content_stream_filter_chains(filters, encode):
+    """A text page's content stream goes through the same filter chain
+    as every other stream, so ASCIIHex (alone or before Flate) reads."""
+    blob = _text_page_pdf(encode(_HELLO), filters)
+    assert pdfio.extract_page_content(blob) == [("text", ["HELLO WORLD"])]
+
+
+def test_corrupt_text_content_stream_is_an_error_not_a_blank_page():
+    bad = zlib.compress(_HELLO)[:-6] + b"\x00garbage"
+    blob = _text_page_pdf(bad, b"/FlateDecode")
+    with pytest.raises(pdfio.PdfError):
+        pdfio.extract_page_content(blob)
+
+
+def test_corrupt_image_content_stream_falls_back_to_name_order():
+    g = _grad()
+    blob = pdfio.encode_image_pdf([g])
+    old = b"q 31 0 0 24 0 0 cm /Im0 Do Q"
+    bad = b"\x78\x9c\x00garbage"
+    tampered = blob.replace(
+        b"<< /Length %d >>\nstream\n%s" % (len(old), old),
+        b"<< /Filter /FlateDecode /Length %d >>\nstream\n%s" % (len(bad), bad))
+    assert tampered != blob
+    (page,) = pdfio.extract_page_images(tampered)
+    assert np.array_equal(page, g)
+
+
+def test_corrupt_text_content_stream_is_one_error_row(spark):
+    bad = zlib.compress(_HELLO)[:-6] + b"\x00garbage"
+    blob = _text_page_pdf(bad, b"/FlateDecode")
+    rows = pipeline.extract_spans(
+        _docs(spark), blob_resolver=_resolver_for(blob), with_ner=False,
+    ).filter("kind = 'pdf'").collect()
+    assert len(rows) == 1
+    assert rows[0]["error"].startswith("PdfError: ")
+
+
+def test_pdf_info_follows_incremental_update():
+    """An incremental update appends a new /Info object and a newer XRef
+    stream that `startxref` points at: the newest trailer wins."""
+    blob = pdfio.encode_image_pdf([_grad()], objstm=True,
+                                  info={"Title": "Old"})
+    assert pdfio.pdf_info(blob)["Title"] == "Old"
+    nums = [int(x) for x in re.findall(rb"(\d+) 0 obj", blob)]
+    info_num, xref_num = max(nums) + 1, max(nums) + 2
+    title = b"\xfe\xff" + "New".encode("utf-16-be")
+    update = b"%d 0 obj\n<< /Title <%s> >>\nendobj\n" % (
+        info_num, title.hex().encode())
+    xref_pos = len(blob) + len(update)
+    rows = zlib.compress(bytes([1]) + (len(blob)).to_bytes(4, "big")
+                         + bytes(2) + bytes([1])
+                         + xref_pos.to_bytes(4, "big") + bytes(2))
+    update += (
+        b"%d 0 obj\n<< /Type /XRef /Size %d /Index [%d 2] /W [1 4 2] "
+        b"/Root 1 0 R /Info %d 0 R /Prev %d /Filter /FlateDecode "
+        b"/Length %d >>\nstream\n%s\nendstream\nendobj\n"
+        % (xref_num, xref_num + 1, info_num, info_num,
+           blob.rindex(b"startxref"), len(rows), rows))
+    update += b"startxref\n%d\n%%%%EOF\n" % xref_pos
+    got = pdfio.pdf_info(blob + update)
+    assert got["Title"] == "New" and got["n_pages"] == 1
+
+
+def test_self_drawing_form_ends_within_the_depth_bound():
+    """A Form XObject that draws itself (hostile input) ends, on an image
+    page and on a text page, with pages or a PdfError."""
+    g = _grad()
+    try:
+        got = pdfio.extract_page_content(_form_scan_pdf(g, self_draw=True))
+    except pdfio.PdfError:
+        pass
+    else:
+        assert got[0][0] == "image"
+        assert np.array_equal(got[0][1], g)
+    form = b"BT /F1 12 Tf 72 700 Td (LOOP) Tj ET /Fx0 Do"
+    blob = _text_page_pdf(
+        _HELLO + b" /Fx0 Do", xobjects=b"/XObject << /Fx0 6 0 R >>",
+        extra=[_stream(b"/Type /XObject /Subtype /Form /BBox [0 0 612 792] "
+                       b"/Resources << /Font << /F1 5 0 R >> "
+                       b"/XObject << /Fx0 6 0 R >> >>", form)])
+    try:
+        got = pdfio.extract_page_content(blob)
+    except pdfio.PdfError:
+        pass
+    else:
+        assert got[0][0] == "text" and got[0][1][0] == "HELLO WORLD"
+
+
+# -- reader digest: one fixture per writer mode ------------------------------
+
+
+def _digest_fixtures() -> list[bytes]:
+    g = _page_gray(PAGE_LINES[0])
+    grad = _grad()
+    bilevel = g > 127
+    jb = jpeg.encode(_page_gray(PAGE_LINES[1]), quality=90)
+    h = g.shape[0]
+    strips = [g[: h // 3], g[h // 3 : 2 * h // 3], g[2 * h // 3 :]]
+    text = [["café naïve — déjà vu", "second line £20"], ["page two"]]
+    info = {"Title": "Reader digest — Ω", "Author": "pdfio"}
+    enc = pdfio.encode_image_pdf
+    return [
+        enc([g, grad]),
+        enc([jb]),
+        *[enc([grad], predictor=p) for p in (2, 10, 11, 12, 13, 14, 15)],
+        enc([grad], rle=True),
+        enc([bilevel], ccitt="g3"),
+        enc([bilevel], ccitt=2),
+        enc([bilevel], ccitt="g4"),
+        enc([bilevel]),
+        enc([strips]),
+        enc([g, jb, strips], objstm=True, info=info),
+        *[enc([grad, text[0]], encrypt=m, info=info)
+          for m in ("rc4-40", "rc4-128", "aes-128")],
+        pdfio.encode_text_pdf(text, tounicode=True),
+        pdfio.encode_text_pdf(text, tj_kern=True),
+        enc([g, text[0], jb, text[1]]),
+    ]
+
+
+def test_reader_digest_over_writer_modes():
+    """sha256 of (extract_page_content, pdf_info) over one fixture per
+    writer mode: pins every page kind, bitmap, line and metadata entry
+    the reader produces for the shapes the writer makes."""
+    import hashlib
+
+    h = hashlib.sha256()
+    for blob in _digest_fixtures():
+        for kind, v in pdfio.extract_page_content(blob):
+            h.update(kind.encode())
+            if kind == "image":
+                h.update(repr((v.shape, str(v.dtype))).encode() + v.tobytes())
+            else:
+                h.update(repr(v).encode())
+        h.update(repr(sorted(pdfio.pdf_info(blob).items())).encode())
+    assert h.hexdigest() == (
+        "b635afb071885c2242d4c7663edd6d85d3843aceeac2ee7cd657f486ddb27179")
+
+
+def test_fanned_out_form_chain_ends():
+    """Eight nested forms that each draw the next ten times would be 10^8
+    form walks: a page enters a bounded number of forms and ends."""
+    import time
+
+    g = _grad()
+    h, w = g.shape
+    chain = []
+    for i in range(8):  # form i (object 5+i) draws form i+1 ten times
+        body = (b"/Fm%d Do " % (i + 1)) * 10 if i < 7 else (
+            b"q %d 0 0 %d 0 0 cm /Im0 Do Q" % (w, h))
+        res = (b"/XObject << /Fm%d %d 0 R >>" % (i + 1, 6 + i) if i < 7
+               else b"/XObject << /Im0 13 0 R >>")
+        chain.append(_stream(b"/Type /XObject /Subtype /Form /BBox [0 0 %d %d] "
+                             b"/Resources << %s >>" % (w, h, res), body))
+    blob = _write_pdf([
+        b"<< /Type /Catalog /Pages 2 0 R >>",
+        b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+        b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 %d %d] "
+        b"/Resources << /XObject << /Fm0 5 0 R >> >> /Contents 4 0 R >>"
+        % (w, h),
+        _stream(b"", b"/Fm0 Do"),
+        *chain,
+        _image_body(g),
+    ])
+    t0 = time.monotonic()
+    ((kind, page),) = pdfio.extract_page_content(blob)
+    assert time.monotonic() - t0 < 30
+    assert kind == "image" and np.array_equal(page, g)
