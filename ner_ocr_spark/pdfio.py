@@ -843,15 +843,15 @@ def _norm_inline(v):
     return v
 
 
-def _inline_image(sc: _Scanner) -> tuple[dict, bytes] | None:
-    """The inline image after a `BI` operator as (image dict, payload), or
-    None when it cannot be decoded; leaves the cursor after its `EI` —
-    fax-converter PDFs often carry the page scan INLINE rather than as an
-    XObject. The EI terminator may legally occur inside binary payload,
-    so each whitespace-delimited candidate is DECODE-VERIFIED (a false
-    early EI yields a too-short stream and fails, and the search moves
-    on). An undecodable section is skipped through its first EI, so its
-    binary payload never tokenizes as operators."""
+def _inline_image(sc: _Scanner) -> tuple[dict, bytes, np.ndarray] | None:
+    """The inline image after a `BI` operator as (image dict, payload,
+    bitmap), or None when it cannot be decoded; leaves the cursor after
+    its `EI` — fax-converter PDFs often carry the page scan INLINE rather
+    than as an XObject. The EI terminator may legally occur inside binary
+    payload, so each whitespace-delimited candidate is DECODE-VERIFIED (a
+    false early EI yields a too-short stream and fails, and the search
+    moves on). An undecodable section is skipped through its first EI, so
+    its binary payload never tokenizes as operators."""
     data, start = sc.data, sc.pos
     d: dict = {}
     try:
@@ -874,11 +874,11 @@ def _inline_image(sc: _Scanner) -> tuple[dict, bytes] | None:
                     and (nb == b"" or nb[0] in _WS or nb[0] in _DELIM)):
                 for cand in (data[start : q - 1], data[start:q]):
                     try:
-                        _decode_image_xobject({}, d, cand)
+                        img = _decode_image_xobject({}, d, cand)
                     except Exception:  # noqa: BLE001 — try next candidate
                         continue
                     sc.pos = q + 2
-                    return d, cand
+                    return d, cand, img
             q = data.find(b"EI", q + 2)
     end = data.find(b"EI", start)
     sc.pos = len(data) if end < 0 else end + 2
@@ -896,17 +896,14 @@ def _mat_mul(m1, m2):
     )
 
 
-def _compose_page(objs, draws: list, media) -> np.ndarray:
-    """Paint multiple axis-aligned image draws (image dict, stream, CTM)
-    onto one page canvas in content order (later over earlier) — the
-    multi-strip scanner shape, where each page arrives as a stack of
-    image bands. Negative scales flip; canvas resolution follows the
-    densest draw so no strip loses pixels."""
+def _compose_page(draws: list, media) -> np.ndarray:
+    """Paint multiple axis-aligned image draws (bitmap, CTM) onto one page
+    canvas in content order (later over earlier) — the multi-strip
+    scanner shape, where each page arrives as a stack of image bands.
+    Negative scales flip; canvas resolution follows the densest draw so
+    no strip loses pixels."""
     placed = []
-    for value, stream, (a, b, c, d, e, f) in draws:
-        if stream is None:
-            raise PdfError("image XObject has no stream")
-        img = _decode_image_xobject(objs, value, stream)
+    for img, (a, b, c, d, e, f) in draws:
         if a < 0:
             img = img[:, ::-1]
         if d < 0:
@@ -1112,9 +1109,9 @@ def _make_font_decoder(objs, fd: dict):
 def _content_tokens(data: bytes):
     """Content-stream token iterator: ('val', operand) for strings /
     numbers / names / arrays / dicts (via _Scanner), ('op', keyword) for
-    operators, and ('inline', (image dict, payload)) for a decodable
-    BI..ID..EI inline image. Unparseable bytes are skipped, so a string
-    operand (a text layer saying "BI" or "Q") never reads as an
+    operators, and ('inline', (image dict, payload, bitmap)) for a
+    decodable BI..ID..EI inline image. Unparseable bytes are skipped, so a
+    string operand (a text layer saying "BI" or "Q") never reads as an
     operator."""
     sc = _Scanner(data, 0)
     n = len(data)
@@ -1172,9 +1169,13 @@ class _Marks:
     (image dict, stream bytes | None, CTM), text runs as (y, x, seq,
     text, device font size) with text None when its font cannot be
     decoded, whether any other marking operator ran, the first content
-    or form stream that could not be decoded, and the form draws left."""
+    or form stream that could not be decoded, and the form draws left.
+    `bitmap` decodes each drawn image once per page, however often it is
+    drawn; an inline image's bitmap, decoded when its EI was verified,
+    rides in with its draw."""
 
-    __slots__ = ("draws", "runs", "other", "error", "fonts", "forms_left")
+    __slots__ = ("draws", "runs", "other", "error", "fonts", "forms_left",
+                 "bitmaps")
 
     def __init__(self) -> None:
         self.draws: list[tuple[dict, bytes | None, tuple]] = []
@@ -1183,6 +1184,16 @@ class _Marks:
         self.error: PdfError | None = None
         self.fonts: dict[int, object] = {}  # id(font dict) -> decoder
         self.forms_left = _FORM_DRAWS
+        # (id(image dict), id(stream)) -> bitmap; both stay alive in draws
+        self.bitmaps: dict[tuple[int, int], np.ndarray] = {}
+
+    def bitmap(self, objs, value: dict, stream: bytes | None) -> np.ndarray:
+        key = (id(value), id(stream))
+        if key not in self.bitmaps:
+            if stream is None:
+                raise PdfError("image XObject has no stream")
+            self.bitmaps[key] = _decode_image_xobject(objs, value, stream)
+        return self.bitmaps[key]
 
     def font(self, objs, fonts: dict, name):
         """Text decoder of font resource `name`, None when undecodable."""
@@ -1236,7 +1247,9 @@ def _walk_content(objs, data: bytes, res, fonts: dict, ctm, forms: tuple,
             operands.append(tok)
             continue
         if kind == "inline":
-            marks.draws.append((tok[0], tok[1], ctm))
+            d, payload, img = tok
+            marks.bitmaps[(id(d), id(payload))] = img
+            marks.draws.append((d, payload, ctm))
             operands = []
             continue
         op = tok
@@ -1320,13 +1333,17 @@ def _walk_content(objs, data: bytes, res, fonts: dict, ctm, forms: tuple,
 
 def _page_marks(objs, page: dict) -> _Marks:
     """Walk a page's content: its /Contents streams decoded and joined.
-    A stream that cannot be decoded leaves the content empty and is kept
-    as `error` (a text page raises it; an image page falls back to its
-    image XObjects in name order)."""
+    /Contents is a stream, an array of streams, or a reference to such an
+    array. A stream that cannot be decoded leaves the content empty and
+    is kept as `error` (a text page raises it; an image page falls back
+    to its image XObjects in name order)."""
     marks = _Marks()
     contents = page.get("Contents")
     chunks: list[bytes] = []
     try:
+        if isinstance(contents, Ref) and isinstance(
+                _deref(objs, contents), list):
+            contents = _deref(objs, contents)
         for item in (contents if isinstance(contents, list) else [contents]):
             if not isinstance(item, Ref) or item.num not in objs:
                 continue
@@ -1341,7 +1358,7 @@ def _page_marks(objs, page: dict) -> _Marks:
     return marks
 
 
-def _page_bitmap(objs, page: dict, marks: _Marks, idx: int) -> np.ndarray | None:
+def _page_bitmap(objs, page: dict, marks: _Marks) -> np.ndarray | None:
     """Grayscale bitmap of a page's image draws, or None when the page
     draws no raster image (the born-digital case — see _page_text_lines).
     One axis-aligned draw IS the page at its native resolution, returned
@@ -1372,11 +1389,11 @@ def _page_bitmap(objs, page: dict, marks: _Marks, idx: int) -> np.ndarray | None
             xs = [v for _, _, (a, b, c, d, e, f) in placed for v in (e, e + a)]
             ys = [v for _, _, (a, b, c, d, e, f) in placed for v in (f, f + d)]
             media = [min(xs), min(ys), max(xs), max(ys)]
-        return _compose_page(objs, placed, [_deref(objs, v) for v in media])
+        return _compose_page(
+            [(marks.bitmap(objs, v, s), m) for v, s, m in placed],
+            [_deref(objs, v) for v in media])
     value, stream, _ = (placed or draws)[0]
-    if stream is None:
-        raise PdfError(f"page {idx}: image XObject has no stream")
-    return _decode_image_xobject(objs, value, stream)
+    return marks.bitmap(objs, value, stream)
 
 
 def _page_text_lines(objs, page: dict, marks: _Marks, rot: int,
@@ -1461,7 +1478,7 @@ def _read_page(objs, page: dict, idx: int) -> tuple[str, object]:
         raise PdfError(f"page {idx}: bad /Rotate {rot!r}")
     rot %= 360
     marks = _page_marks(objs, page)
-    img = _page_bitmap(objs, page, marks, idx)
+    img = _page_bitmap(objs, page, marks)
     if img is None:
         return "text", _page_text_lines(objs, page, marks, rot, idx)
     if rot:

@@ -4,6 +4,8 @@ round 1 had no JPEG path at all)."""
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
 import pytest
 
@@ -11,6 +13,7 @@ from ner_ocr_spark import corpus, jpeg
 from ner_ocr_spark.imageio import decode_image, decode_image_gray, sniff
 from ner_ocr_spark.kernels import ocr
 from ner_ocr_spark.png import decode_gray as png_decode_gray
+from tests.test_jpeg_progressive import DEEP_SA, SPECTRAL_ONLY
 
 
 def test_gray_roundtrip_smooth_exact():
@@ -110,3 +113,112 @@ def test_gray_with_nontrivial_sampling_factors():
     assert np.array_equal(jpeg.decode(bytes(enc)), jpeg.decode(jpeg.encode(g, quality=95)))
 
 
+
+# computed on the codec whose sequential and progressive scans had separate
+# paths: it keeps the progressive == baseline tests anchored now that both
+# decode through one path
+CODEC_DIGEST = ("bc0a38b5af09dda8a8a4633b4762a7be"
+                "acf2e9f523cbd072ecc05610c63a21cf")
+
+
+def _with_gray_sampling_22(blob: bytes) -> bytes:
+    """Rewrite a gray file's SOF sampling byte from 0x11 to 0x22."""
+    enc = bytearray(blob)
+    sof = max(enc.find(b"\xff\xc0"), enc.find(b"\xff\xc2"))
+    hv_off = sof + 2 + 2 + 6 + 1  # marker+len+prec+h+w+ncomp+cid -> hv byte
+    assert enc[hv_off] == 0x11
+    enc[hv_off] = 0x22
+    return bytes(enc)
+
+
+def test_codec_digest():
+    """sha256 over the encoders' bytes and the decoder's pixels for every
+    scan layout the codec writes: gray and RGB 4:4:4/4:2:0 at odd sizes,
+    restart intervals 0/1/3, the default, spectral-only and deep
+    successive-approximation scripts, and gray declared with hv=0x22. The
+    progressive == baseline tests compare two decodes; this pins both."""
+    h = hashlib.sha256()
+
+    def add(blob: bytes) -> None:
+        px = jpeg.decode(blob)
+        h.update(blob)
+        h.update(repr(px.shape).encode())
+        h.update(px.tobytes())
+
+    rng = np.random.RandomState(19)
+    gray = (rng.rand(29, 43) * 255).astype(np.uint8)
+    rgb = (rng.rand(27, 37, 3) * 255).astype(np.uint8)
+    ramp = np.add.outer(np.arange(21), np.arange(35)).astype(np.uint8)
+    smooth = np.dstack([ramp, ramp[::-1], np.roll(ramp, 5, axis=1)])
+    for img, sub in ((gray, "444"), (rgb, "444"), (rgb, "420"),
+                     (smooth, "420")):
+        for ri in (0, 1, 3):
+            add(jpeg.encode(img, quality=85, subsampling=sub,
+                            restart_interval=ri))
+            add(jpeg.encode_progressive(img, quality=85, subsampling=sub,
+                                        restart_interval=ri))
+    for script in (SPECTRAL_ONLY, DEEP_SA):
+        for ri in (0, 3):
+            add(jpeg.encode_progressive(gray, quality=90, scan_script=script,
+                                        restart_interval=ri))
+    add(_with_gray_sampling_22(jpeg.encode(gray, quality=95)))
+    add(_with_gray_sampling_22(jpeg.encode_progressive(gray, quality=95)))
+    assert h.hexdigest() == CODEC_DIGEST
+
+
+@pytest.mark.parametrize("sub", ["444", "420"])
+def test_non_interleaved_sequential_equals_interleaved(sub):
+    """T.81 A.2: a sequential file may send each component in its own
+    scan (the MCU is then one block of that component's grid, and the
+    restart interval counts those blocks). It decodes equal to the one
+    interleaved scan of the same coefficients."""
+    img = (np.random.RandomState(8).rand(37, 45, 3) * 255).astype(np.uint8)
+    scans = [([ci], 0, 63, 0, 0) for ci in range(3)]
+    blob = jpeg._encode(img, 88, sub, 2, False, scans)
+    assert blob[:4] == b"\xff\xd8\xff\xe0" and b"\xff\xc0" in blob
+    assert blob.count(b"\xff\xda") == 3
+    interleaved = jpeg.decode(jpeg.encode(img, quality=88, subsampling=sub))
+    assert np.array_equal(jpeg.decode(blob), interleaved)
+
+
+# header byte -> (segment marker, offset from the marker's 0xFF)
+_HEADER_BYTES = {
+    "sof_ncomp": ("sof", 9), "sof_hv": ("sof", 11), "sof_tq": ("sof", 12),
+    "sos_ns": ("sos", 4), "sos_id": ("sos", 5), "sos_tables": ("sos", 6),
+    "dht_bits16": ("dht", 20),  # the first table's count of 16-bit codes
+}
+
+
+def _mutate_header(blob: bytes, where: str, value: int) -> bytes:
+    """Overwrite one byte of the SOF, the first SOS or the first DHT; the
+    SOF and SOS bytes after the component count are the first
+    component's."""
+    enc = bytearray(blob)
+    seg, off = _HEADER_BYTES[where]
+    at = {"sof": max(enc.find(b"\xff\xc0"), enc.find(b"\xff\xc2")),
+          "sos": enc.find(b"\xff\xda"), "dht": enc.find(b"\xff\xc4")}[seg]
+    enc[at + off] = value
+    return bytes(enc)
+
+
+@pytest.mark.parametrize("progressive", [False, True])
+@pytest.mark.parametrize("where,value,message", [
+    ("sof_hv", 0x01, "sampling factors 0x1 outside 1..4"),
+    ("sof_hv", 0x15, "sampling factors 1x5 outside 1..4"),
+    ("sos_id", 9, "scan names component 9, absent from SOF"),
+    ("sof_tq", 2, "undefined quantization table 2"),
+    ("sos_tables", 0x22, "undefined Huffman table DC2"),
+    ("sof_ncomp", 0, "truncated or empty JPEG frame header"),
+    ("sos_ns", 4, "truncated JPEG scan header"),
+    ("dht_bits16", 255, "truncated JPEG Huffman table"),
+])
+def test_malformed_header_raises_value_error(progressive, where, value,
+                                              message):
+    """A malformed header is a ValueError with a message, not a
+    ZeroDivisionError, StopIteration, KeyError or IndexError from deep
+    inside."""
+    img = (np.random.RandomState(4).rand(20, 28, 3) * 255).astype(np.uint8)
+    blob = (jpeg.encode_progressive if progressive else jpeg.encode)(
+        img, quality=80, subsampling="420")
+    with pytest.raises(ValueError, match=message):
+        jpeg.decode(_mutate_header(blob, where, value))

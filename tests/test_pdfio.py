@@ -869,3 +869,42 @@ def test_fanned_out_form_chain_ends():
     ((kind, page),) = pdfio.extract_page_content(blob)
     assert time.monotonic() - t0 < 30
     assert kind == "image" and np.array_equal(page, g)
+
+
+def test_contents_reference_to_an_array_reads():
+    """/Contents may be a reference to an array of streams (`/Contents 6
+    0 R` with `6 0 obj [4 0 R 7 0 R]`): the page reads the text of every
+    stream in it, not ("text", [])."""
+    blob = _write_pdf([
+        b"<< /Type /Catalog /Pages 2 0 R >>",
+        b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+        b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
+        b"/Resources << /Font << /F1 5 0 R >> >> /Contents 6 0 R >>",
+        _stream(b"", _HELLO),
+        b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica "
+        b"/Encoding /WinAnsiEncoding >>",
+        b"[4 0 R 7 0 R]",
+        _stream(b"", b"BT /F1 12 Tf 72 700 Td (SECOND LINE) Tj ET"),
+    ])
+    assert pdfio.extract_page_content(blob) == [
+        ("text", ["HELLO WORLD", "SECOND LINE"])]
+
+
+@pytest.mark.parametrize("page_test", [
+    test_fanned_out_form_chain_ends, test_inline_image_page_extracts,
+], ids=["image_drawn_896_times", "inline_image"])
+def test_each_image_decodes_once_per_page(monkeypatch, page_test):
+    """A page decodes each of its images once: the fanned-out form chain
+    draws one image 896 times, and an inline image's bitmap, decoded
+    when its EI was verified, rides with its draw. Each test runs as
+    written, under a counter."""
+    calls = []
+    real = pdfio._decode_image_xobject
+
+    def counting(*args):
+        calls.append(args)
+        return real(*args)
+
+    monkeypatch.setattr(pdfio, "_decode_image_xobject", counting)
+    page_test()
+    assert len(calls) == 1
