@@ -41,6 +41,12 @@ import numpy as np
 
 # -- constants ---------------------------------------------------------------
 
+# samples of the coefficient store one SOF may allocate (its MCU-padded
+# frame summed over components, int32 each: 512 MiB). An A4 page rasterized
+# at operators/pdf.PDF_ZOOM is ~6M RGB samples; without a cap a forged SOF
+# of 65535x65535 asks for 16 GiB before any scan data is read.
+MAX_FRAME_SAMPLES = 1 << 27
+
 ZIGZAG = np.array([
     0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
     12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
@@ -640,9 +646,15 @@ class _Frame:
             self.ids.append(cid)
             self.samps.append((hs, vs))
             self.tqs.append(tq)
+        if not (self.h and self.w):
+            raise ValueError(f"JPEG frame has zero size {self.w}x{self.h}")
         _, _, mcux, mcuy = _mcu_grid(self.samps, self.w, self.h)
-        self.coefs = [np.zeros((mcuy * vs, mcux * hs, 64), dtype=np.int32)
-                      for hs, vs in self.samps]
+        shapes = [(mcuy * vs, mcux * hs, 64) for hs, vs in self.samps]
+        samples = sum(by * bx * 64 for by, bx, _ in shapes)
+        if samples > MAX_FRAME_SAMPLES:
+            raise ValueError(f"JPEG frame {self.w}x{self.h} needs {samples} "
+                             f"coefficient samples, above {MAX_FRAME_SAMPLES}")
+        self.coefs = [np.zeros(shape, dtype=np.int32) for shape in shapes]
 
 
 def decode(data: bytes) -> np.ndarray:
@@ -711,6 +723,8 @@ def decode(data: bytes) -> np.ndarray:
                 " — lossless/arithmetic/hierarchical)"
             )
         elif marker == 0xDD:  # DRI
+            if len(seg) < 2:
+                raise ValueError("truncated JPEG restart interval (DRI)")
             (restart_interval,) = struct.unpack(">H", seg[:2])
         elif marker == 0xDA:  # SOS
             if frame is None:

@@ -48,11 +48,13 @@ _VDC_BITS = 20
 def balance_by_cost(df: DataFrame, cost: Column, n_partitions: int) -> DataFrame:
     """Place df's (doc_id, span_idx) rows on n_partitions so each holds
     ~equal total `cost`, through one repartitionById exchange."""
-    pid = F.spark_partition_id()
-    rank = F.monotonically_increasing_id() - F.shiftleft(pid.cast("long"), 33)
-    vdc = F.conv(F.reverse(F.lpad(F.bin(pid), _VDC_BITS, "0")), 2, 10).cast(
-        "double") / (1 << _VDC_BITS)
-    n = F.lit(n_partitions)
-    target = F.pmod(rank + F.floor(vdc * n), n).cast("int")
+    # one SQL string, parsed in one call: as F.* calls it cost ~150 py4j
+    # round trips per plan build
+    pid = "spark_partition_id()"
+    rank = f"monotonically_increasing_id() - shiftleft(CAST({pid} AS BIGINT), 33)"
+    vdc = (f"CAST(conv(reverse(lpad(bin({pid}), {_VDC_BITS}, '0')), 2, 10) AS DOUBLE)"
+           f" / {1 << _VDC_BITS}")
+    n = n_partitions
+    target = F.expr(f"CAST(pmod({rank} + floor({vdc} * {n}), {n}) AS INT)")
     return df.sortWithinPartitions(cost.desc(), "doc_id", "span_idx").repartitionById(
         n_partitions, target)

@@ -34,7 +34,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ner_ocr_spark import corpus as corpus_mod
@@ -51,17 +51,33 @@ SPAN_COLS = ["doc_id", "span_idx", "line_idx", "kind", "text", "media_ref",
              "box", "score", "transformer_text", "transformer_score", "error"]
 
 
+# normalize_expr(text) AS text, reused across plan builds: building it
+# costs ~100 py4j round trips (PySpark wraps every F.* call and Column
+# method in a call-site capture of ~6 round trips). A Column is a handle
+# into one JVM, so the cache keeps the gateway it was built on and is
+# rebuilt under any other.
+_normalized: tuple[object, Column | None] = (None, None)
+
+
+def _normalized_text(spark: SparkSession) -> Column:
+    global _normalized
+    gateway = spark.sparkContext._gateway
+    if _normalized[0] is not gateway:
+        _normalized = (gateway, normalize_expr(F.col("text")).alias("text"))
+    return _normalized[1]
+
+
 def explode_spans(documents: DataFrame) -> DataFrame:
     """documents -> long span table; span_idx = array position = order."""
-    return documents.select(
-        "doc_id", F.posexplode("spans").alias("span_idx", "span")
-    ).select(
+    return documents.selectExpr(
+        "doc_id", "posexplode(spans) AS (span_idx, span)"
+    ).selectExpr(
         "doc_id",
-        F.col("span_idx").cast("int").alias("span_idx"),
-        F.col("span.kind").alias("kind"),
-        F.col("span.text").alias("text"),
-        F.col("span.media_ref").alias("media_ref"),
-        F.col("span.offset").alias("offset"),
+        "CAST(span_idx AS INT) AS span_idx",
+        "span.kind AS kind",
+        "span.text AS text",
+        "span.media_ref AS media_ref",
+        "span.offset AS offset",
     )
 
 
@@ -69,9 +85,9 @@ def text_rows(spans: DataFrame) -> DataFrame:
     """The JVM text branch: (doc_id, span_idx, text) of every text span
     that is non-blank after normalize_expr."""
     return (
-        spans.filter(F.col("kind") == "text")
-        .select("doc_id", "span_idx", normalize_expr(F.col("text")).alias("text"))
-        .filter(F.length("text") > 0)
+        spans.filter("kind = 'text'")
+        .select("doc_id", "span_idx", _normalized_text(spans.sparkSession))
+        .filter("length(text) > 0")
     )
 
 
@@ -148,18 +164,18 @@ def extract_spans(
     # the image sniff rejects the bytes into a per-row error) and html spans
     # carry their raw markup in `text` for main-content extraction (north
     # rule: boilerplate strip / DOM heuristics). One spread, one crossing.
-    py = spans.filter(F.col("kind").isin(["media", "pdf", "html"])).select(
+    py = spans.filter("kind IN ('media', 'pdf', 'html')").selectExpr(
         "doc_id", "span_idx", "kind", "text", "media_ref"
     )
     # size-aware placement (§4.3.2): payload bytes ~ decoded pixel count
     # ~ OCR cost; html rows' markup length stands in, and rows with neither
     # cost 0, so without blobs the deal is a count round-robin. A
     # 1000-media-span doc lands on ~all partitions, not one straggler.
-    cost = F.length("text")
+    cost = "length(text)"
     if blobs is not None:
         py = py.join(blobs, "media_ref", "left")
-        cost = F.coalesce(F.length("image_png"), cost)
-    py = balance_by_cost(py, cost, n_part)
+        cost = f"coalesce(length(image_png), {cost})"
+    py = balance_by_cost(py, F.expr(cost), n_part)
     # refinement AND normalize+NER happen INSIDE the OCR stage: a
     # filter-fork into a second mapInPandas would re-execute the whole OCR
     # plan on both branches, and a separate NER stage would make these rows
@@ -186,52 +202,39 @@ def extract_spans(
     if with_ner:
         ner_fn, ner_schema = make_ner_stage(gaz, passthrough=text.schema)
         text = text.mapInPandas(ner_fn, ner_schema)
-    return text.select(
+    return text.selectExpr(
         "doc_id",
         "span_idx",
-        F.lit(0).alias("line_idx"),
-        F.lit("text").alias("kind"),
+        "0 AS line_idx",
+        "'text' AS kind",
         "text",
-        F.lit(None).cast("string").alias("media_ref"),
-        F.lit(None).cast("array<double>").alias("box"),
-        F.lit(1.0).alias("score"),
-        F.lit(None).cast("string").alias("transformer_text"),
-        F.lit(None).cast("double").alias("transformer_score"),
-        F.lit(None).cast("string").alias("error"),
+        "CAST(NULL AS STRING) AS media_ref",
+        "CAST(NULL AS ARRAY<DOUBLE>) AS box",
+        # a bare 1.0 is DECIMAL(2,1) in Spark SQL
+        "CAST(1.0 AS DOUBLE) AS score",
+        "CAST(NULL AS STRING) AS transformer_text",
+        "CAST(NULL AS DOUBLE) AS transformer_score",
+        "CAST(NULL AS STRING) AS error",
         *extra,
-    ).unionByName(py_branch.select(*SPAN_COLS, *extra))
+    ).unionByName(py_branch.selectExpr(*SPAN_COLS, *extra))
 
 
 def assemble_documents(extracted: DataFrame) -> DataFrame:
     """Re-assemble the per-document ordered span array — the exact shape of
     the span-sequence-equality invariant (kind, text, media_ref, order).
     sort_array on the leading (span_idx, line_idx) struct fields restores
-    order without a global sort."""
-    ordered = F.transform(
-        # sort_array, not array_sort: same ordering ((span_idx, line_idx)
-        # is unique per doc, so the nullable tail fields never decide),
-        # but ArraySort's default comparator is an interpreted lambda per
-        # comparison (round 6)
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    F.col("span_idx"),
-                    F.col("line_idx"),
-                    F.col("kind"),
-                    F.col("text"),
-                    F.col("media_ref"),
-                )
-            )
-        ),
-        lambda s: F.struct(
-            s["kind"].alias("kind"),
-            s["text"].alias("text"),
-            s["media_ref"].alias("media_ref"),
-        ),
-    )
-    return extracted.filter(F.col("error").isNull()).groupBy("doc_id").agg(
-        ordered.alias("spans")
-    )
+    order without a global sort.
+
+    sort_array, not array_sort: same ordering ((span_idx, line_idx) is
+    unique per doc, so the nullable tail fields never decide), but
+    ArraySort's default comparator is an interpreted lambda per comparison
+    (round 6)."""
+    return extracted.filter("error IS NULL").groupBy("doc_id").agg(F.expr(
+        "transform("
+        "sort_array(collect_list(struct(span_idx, line_idx, kind, text, media_ref))),"
+        " s -> struct(s.kind AS kind, s.text AS text, s.media_ref AS media_ref)"
+        ") AS spans"
+    ))
 
 
 def run(

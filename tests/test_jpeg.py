@@ -5,6 +5,7 @@ round 1 had no JPEG path at all)."""
 from __future__ import annotations
 
 import hashlib
+import struct
 
 import numpy as np
 import pytest
@@ -222,3 +223,33 @@ def test_malformed_header_raises_value_error(progressive, where, value,
         img, quality=80, subsampling="420")
     with pytest.raises(ValueError, match=message):
         jpeg.decode(_mutate_header(blob, where, value))
+
+
+def test_truncated_restart_interval_raises_value_error():
+    """A DRI segment with one payload byte is a ValueError, not the
+    struct.error of unpacking two bytes from one."""
+    g = np.add.outer(np.arange(16), np.arange(16)).astype(np.uint8)
+    enc = jpeg.encode(g, restart_interval=1)
+    at = enc.find(b"\xff\xdd\x00\x04")
+    assert at > 0
+    cut = enc[:at] + b"\xff\xdd\x00\x03" + enc[at + 4:at + 5] + enc[at + 6:]
+    with pytest.raises(ValueError, match="truncated JPEG restart interval"):
+        jpeg.decode(cut)
+
+
+@pytest.mark.parametrize("progressive", [False, True])
+@pytest.mark.parametrize("h,w,message", [
+    (65535, 65535, "coefficient samples, above"),
+    (0, 16, "zero size"),
+    (16, 0, "zero size"),
+])
+def test_frame_size_is_checked_before_allocation(progressive, h, w, message):
+    """The SOF's dimensions size the coefficient store before any scan data
+    is read: a forged 65535x65535 frame (16 GiB of int32 coefficients) and
+    a zero-size frame are ValueErrors, not a MemoryError or an empty page."""
+    g = np.add.outer(np.arange(16), np.arange(16)).astype(np.uint8)
+    enc = bytearray((jpeg.encode_progressive if progressive else jpeg.encode)(g))
+    at = max(enc.find(b"\xff\xc0"), enc.find(b"\xff\xc2"))
+    enc[at + 5:at + 9] = struct.pack(">HH", h, w)
+    with pytest.raises(ValueError, match=message):
+        jpeg.decode(bytes(enc))

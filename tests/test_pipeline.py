@@ -3,7 +3,23 @@
 
 from __future__ import annotations
 
+import re
+
+import pytest
+
 from ner_ocr_spark import corpus, oracle, pipeline
+
+SPAN_TYPES = [
+    ("doc_id", "string"), ("span_idx", "int"), ("line_idx", "int"),
+    ("kind", "string"), ("text", "string"), ("media_ref", "string"),
+    ("box", "array<double>"), ("score", "double"),
+    ("transformer_text", "string"), ("transformer_score", "double"),
+    ("error", "string"),
+]
+NER_TYPES = [
+    ("entities", "array<struct<entity_type:string,surface:string,start:int,end:int>>"),
+    ("bio", "string"),
+]
 
 
 def test_span_sequence_equality(spark, documents_df):
@@ -36,6 +52,35 @@ def test_entities_match_oracle(spark, documents_df):
                          for e in want_row["entities"]]
             assert got_ents == want_ents
             assert got_row["bio"] == want_row["bio"]
+
+
+@pytest.mark.parametrize("with_ner", [True, False])
+def test_extract_spans_schema(spark, documents_df, with_ner):
+    """extract_spans' column types in both NER modes, and each branch's
+    own: unionByName widens a branch whose type differs (a bare SQL 1.0 is
+    DECIMAL(2,1), a bare NULL is VOID) by casting its column under the
+    union, so the output schema alone would not show a mistyped literal."""
+    out = pipeline.extract_spans(documents_df, with_ner=with_ner)
+    got = [(f.name, f.dataType.simpleString()) for f in out.schema.fields]
+    assert got == SPAN_TYPES + (NER_TYPES if with_ner else [])
+    union = out._jdf.queryExecution().analyzed()
+    assert union.nodeName() == "Union"
+    children = union.children()
+    for i in range(children.size()):
+        head = children.apply(i).toString().splitlines()[0]
+        assert not re.search(r"cast\(\w+#\d+L? as ", head), head
+
+
+def test_normalized_text_column_is_kept_per_gateway(spark):
+    """text_rows reuses one normalize_expr Column across plan builds; a
+    Column is a handle into one JVM, so another gateway gets its own."""
+    from types import SimpleNamespace
+
+    first = pipeline._normalized_text(spark)
+    assert pipeline._normalized_text(spark) is first
+    elsewhere = SimpleNamespace(sparkContext=SimpleNamespace(_gateway=object()))
+    assert pipeline._normalized_text(elsewhere) is not first
+    assert pipeline._normalized_text(spark) is not first
 
 
 def test_no_errors_on_clean_corpus(spark, documents_df):

@@ -78,6 +78,19 @@ def _subtree(plan: str, marker: str) -> list[str]:
     return below
 
 
+def _blobs_table(spark, tmp_path):
+    """A parquet (media_ref, image_png) table of four corpus media spans."""
+    from ner_ocr_spark import corpus
+
+    refs = [s["media_ref"] for r in corpus.build_documents(40)
+            for s in r["spans"] if s["kind"] == "media"][:4]
+    spark.createDataFrame(
+        [(r, corpus.render_media_blob(r)) for r in refs],
+        "media_ref string, image_png binary",
+    ).write.parquet(str(tmp_path / "blobs"))
+    return spark.read.parquet(str(tmp_path / "blobs"))
+
+
 @pytest.mark.parametrize("with_blobs", [False, True], ids=["no_blobs", "blobs"])
 def test_pipeline_shuffle_count(spark, documents_df, tmp_path, with_blobs):
     """The extraction plan has exactly the two designed shuffles (the
@@ -85,17 +98,9 @@ def test_pipeline_shuffle_count(spark, documents_df, tmp_path, with_blobs):
     repartitionById exchange feeds the OCR stage, no range exchange (whose
     bound sample re-ran scan + explode + join) and no Spark job runs while
     the plan is built."""
-    from ner_ocr_spark import corpus, pipeline
+    from ner_ocr_spark import pipeline
 
-    blobs = None
-    if with_blobs:
-        refs = [s["media_ref"] for r in corpus.build_documents(40)
-                for s in r["spans"] if s["kind"] == "media"][:4]
-        spark.createDataFrame(
-            [(r, corpus.render_media_blob(r)) for r in refs],
-            "media_ref string, image_png binary",
-        ).write.parquet(str(tmp_path / "blobs"))
-        blobs = spark.read.parquet(str(tmp_path / "blobs"))
+    blobs = _blobs_table(spark, tmp_path) if with_blobs else None
     sc = spark.sparkContext
     sc.setJobGroup("plan-build", "plan-build")
     try:
@@ -112,6 +117,37 @@ def test_pipeline_shuffle_count(spark, documents_df, tmp_path, with_blobs):
     shuffles = [ln for ln in below_ocr if re.search(r"(?<!Broadcast)Exchange ", ln)]
     assert len(shuffles) == 1, plan
     assert "shufflepartitionidpassthrough" in shuffles[0], plan
+
+
+@pytest.mark.parametrize("with_blobs", [False, True], ids=["no_blobs", "blobs"])
+def test_pipeline_build_py4j_round_trips(spark, documents_df, tmp_path,
+                                         monkeypatch, with_blobs):
+    """pipeline.run builds its plan in at most 300 py4j round trips, in
+    both blobs modes. Classic PySpark wraps every F.* call and Column
+    method in a call-site capture of ~6 round trips, so the static
+    projections are SQL expression strings, one parse each; as F.* trees
+    the same plan takes ~1,200. The minimum of 3 builds leaves out py4j's
+    deletes of garbage-collected JVM handles, which land in whichever build
+    runs when the collector does."""
+    import py4j.java_gateway
+
+    from ner_ocr_spark import pipeline
+
+    blobs = _blobs_table(spark, tmp_path) if with_blobs else None
+    calls = [0]
+    send = py4j.java_gateway.GatewayClient.send_command
+
+    def counting(self, *args, **kwargs):
+        calls[0] += 1
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(py4j.java_gateway.GatewayClient, "send_command", counting)
+    counts = []
+    for _ in range(3):
+        calls[0] = 0
+        pipeline.run(spark, documents_df, blobs=blobs)
+        counts.append(calls[0])
+    assert min(counts) <= 300, counts
 
 
 def test_curate_dedup_window_limit_is_partial_and_final(spark):
