@@ -8,8 +8,8 @@ One pass tags all entity types (the reference loops per type,
 /root/reference/src/pipelines/entity.py:53-63 — O(types) model calls; here
 one scan).
 
-Pure functions; the Spark side batches them inside mapInPandas
-(operators/extract.py).
+Pure functions; the Spark side calls them per text from the NER Arrow UDF
+and from the OCR stage (operators/extract.py).
 """
 
 from __future__ import annotations

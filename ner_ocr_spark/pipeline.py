@@ -3,8 +3,9 @@
     documents(doc_id, spans array<struct<kind,text,media_ref,offset>>)
       -> posexplode (span_idx mints the order the invariant needs)
       -> route kind:
-         text -> JVM normalizer (-> mapInPandas NER with NER: the slim
-           (doc_id, span_idx, text) rows only)
+         text -> JVM normalizer (-> with NER, one scalar Arrow UDF over
+           `text` alone; entities/bio come back and are zipped to the
+           JVM row by position)
          media/pdf/html -> balance_by_cost: one repartitionById exchange
            [size-aware skew defusal]
            -> mapInPandas python stage: OCR (pdf pages expand in-stage) or
@@ -15,7 +16,10 @@
 
 with_ner=False is the same plan, except that text rows skip the NER
 crossing (they never leave the JVM) and entities/bio are dropped; the
-python branch is the same stage in both modes.
+python branch is the same stage in both modes. A scalar UDF whose output
+nobody reads is pruned by the optimizer: `run` keeps only (kind, text,
+media_ref) per span, so its plan tags no text row, while a mapInPandas
+stage always runs.
 
 Two shuffles total, with or without blobs=: the python-branch placement and
 the assembly groupBy (a blobs= table small enough to broadcast adds none).
@@ -40,8 +44,8 @@ from pyspark.sql import functions as F
 from ner_ocr_spark import corpus as corpus_mod
 from ner_ocr_spark.operators.balance import balance_by_cost
 from ner_ocr_spark.operators.extract import (
-    make_ner_stage,
     make_ocr_stage,
+    ner_udf,
     ocr_ner_schema,
 )
 from ner_ocr_spark.operators.normalize import normalize_expr
@@ -191,17 +195,15 @@ def extract_spans(
     )
 
     # -- text branch: JVM normalizer; with NER, the NER crossing ----------
-    # SLIM projection through the python boundary (guide §4.1: pass only
-    # the columns the function needs): every other SPAN_COLS field is a
-    # literal for text rows (line_idx 0, score 1.0, the rest NULL) and is
-    # attached JVM-side after the crossing instead of serializing half a
-    # million NULL/object cells each way (round 6: the passthrough
-    # round-trip alone measured 1.5 s at sf1).
+    # only `text` crosses, through one scalar Arrow UDF, and only its
+    # entities/bio struct comes back: doc_id and span_idx stay in the JVM
+    # (ArrowEvalPython zips the result back by position), and every other
+    # SPAN_COLS field is a literal for text rows (line_idx 0, score 1.0,
+    # the rest NULL), attached JVM-side by the one select below.
     text = text_rows(spans)
     extra = ["entities", "bio"] if with_ner else []
     if with_ner:
-        ner_fn, ner_schema = make_ner_stage(gaz, passthrough=text.schema)
-        text = text.mapInPandas(ner_fn, ner_schema)
+        text = text.withColumn("ner", ner_udf(gaz)(text["text"]))
     return text.selectExpr(
         "doc_id",
         "span_idx",
@@ -215,7 +217,7 @@ def extract_spans(
         "CAST(NULL AS STRING) AS transformer_text",
         "CAST(NULL AS DOUBLE) AS transformer_score",
         "CAST(NULL AS STRING) AS error",
-        *extra,
+        *(f"ner.{c} AS {c}" for c in extra),
     ).unionByName(py_branch.selectExpr(*SPAN_COLS, *extra))
 
 

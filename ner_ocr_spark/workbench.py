@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from ner_ocr_spark import corpus as corpus_mod
 from ner_ocr_spark import pipeline
-from ner_ocr_spark.operators.extract import make_ner_stage
+from ner_ocr_spark.operators.extract import ner_udf
 from ner_ocr_spark.operators.layout import to_markdown
 from ner_ocr_spark.operators.search import search as search_op
 
@@ -214,6 +214,5 @@ def entity_pages(
     )
     pages = to_markdown(regions, line_threshold, gap_threshold)
     gaz = gazetteer if gazetteer is not None else corpus_mod.GAZETTEER
-    ner_fn, schema = make_ner_stage(gaz, text_col="page_text",
-                                    passthrough=pages.schema)
-    return pages.mapInPandas(ner_fn, schema)
+    return pages.withColumn("ner", ner_udf(gaz)(pages["page_text"])).selectExpr(
+        *pages.columns, "ner.entities AS entities", "ner.bio AS bio")

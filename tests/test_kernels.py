@@ -3,12 +3,17 @@
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
+import pyarrow as pa
 import pytest
+from pyspark.sql import types as T
 
 from ner_ocr_spark import corpus, font
 from ner_ocr_spark.kernels import ocr
 from ner_ocr_spark.kernels.ner import GazetteerTagger
 from ner_ocr_spark.kernels.normalize import normalize_text
+from ner_ocr_spark.operators.extract import (_NER_ARROW, make_ner_stage,
+                                             tag_array, tag_columns)
 from ner_ocr_spark.png import decode_gray, encode_gray
 
 
@@ -105,3 +110,87 @@ def test_gazetteer_tagger_leftmost_longest():
 def test_gazetteer_tagger_empty():
     tagger = GazetteerTagger(corpus.GAZETTEER)
     assert tagger.tag("") == ([], "")
+
+
+# surfaces that overlap and share tokens, plus one whose surface upper-cases
+# differently from its lower-case spelling (ß -> SS)
+_ADVERSARIAL_GAZ = corpus.GAZETTEER + [
+    ("BOB", "PERSON"), ("STONE AGE", "ERA"), ("NEW YORK", "CITY"),
+    ("NEW YORK TIMES", "ORG"), ("STRASSE", "STREET")]
+
+_ADVERSARIAL_TEXTS = [
+    "",
+    "ALICE\nCOOPER",  # a multi-token surface split by a newline
+    "saw BOB\n\nSTONE  and\tCAROL \n RIVERA",
+    "LONDON LONDON LONDON",  # repeated surfaces
+    "BOB STONE AGE BOB BOB STONE",  # overlapping surfaces
+    "NEW YORK TIMES NEW YORK NEW",
+    "\x1cALICE\x1dCOOPER\x1e\x1fLONDON\x1c",  # str.split() separators
+    "\xa0LONDON\xa0BOB\xa0STONE",
+    "straße Straße STRASSE ß",
+]
+
+
+def _tag_array(tagger, texts):
+    out = tag_array(tagger, texts if isinstance(texts, pa.Array)
+                    else pa.array(texts, pa.string()))
+    assert out.type == _NER_ARROW and len(out) == len(texts)
+    return out
+
+
+def test_tag_array_matches_tag_columns_over_corpus_text():
+    """tag_array (the NER UDF's batch function) equals tag_columns row by
+    row over the corpus's text spans, raw and normalized."""
+    tagger = GazetteerTagger(corpus.GAZETTEER)
+    raw = [s["text"] for d in corpus.build_documents(60) for s in d["spans"]
+           if s["kind"] == "text"]
+    texts = raw + [normalize_text(t) for t in raw]
+    got = _tag_array(tagger, texts).to_pylist()
+    assert got == [tag_columns(tagger, t) for t in texts]
+    assert sum(len(r["entities"]) for r in got) > 50
+
+
+def test_tag_array_adversarial_text():
+    tagger = GazetteerTagger(_ADVERSARIAL_GAZ)
+    got = _tag_array(tagger, _ADVERSARIAL_TEXTS).to_pylist()
+    assert got == [tag_columns(tagger, t) for t in _ADVERSARIAL_TEXTS]
+    assert got[1]["bio"] == "B-PERSON I-PERSON"
+    assert [e["surface"] for e in got[4]["entities"]] == [
+        "BOB STONE", "BOB", "BOB STONE"]
+    assert [e["entity_type"] for e in got[6]["entities"]] == ["PERSON", "CITY"]
+    assert [e["surface"] for e in got[8]["entities"]] == ["STRASSE"] * 3
+    # an Arrow batch may be a slice of a larger buffer: offsets start there
+    whole = pa.array(_ADVERSARIAL_TEXTS, pa.string())
+    assert _tag_array(tagger, whole.slice(3, 4)).to_pylist() == got[3:7]
+
+
+def test_tag_array_batch_without_entities():
+    """A batch with no match (and a NULL, which tags as "") still yields one
+    entities list per row, all empty, over zero flat entities."""
+    tagger = GazetteerTagger(corpus.GAZETTEER)
+    out = _tag_array(tagger, ["no match here", "", None, "ALICE alone"])
+    ents = out.field("entities")
+    assert len(ents) == 4 and ents.null_count == 0
+    assert ents.offsets.to_pylist() == [0, 0, 0, 0, 0]
+    assert len(ents.values) == 0
+    assert out.field("bio").to_pylist() == ["O O O", "", "", "O O"]
+
+
+def test_make_ner_stage_adapts_tag_array():
+    """make_ner_stage keeps its (fn, schema) contract over pandas batches:
+    the input columns pass through, entities/bio are appended."""
+    passthrough = T.StructType([T.StructField("k", T.IntegerType()),
+                                T.StructField("page_text", T.StringType())])
+    fn, schema = make_ner_stage(_ADVERSARIAL_GAZ, "page_text",
+                                passthrough=passthrough)
+    assert schema.fieldNames() == ["k", "page_text", "entities", "bio"]
+    texts = _ADVERSARIAL_TEXTS + [None]
+    # a batch whose index does not start at 0, as a slice of a frame has
+    frames = list(fn(iter([pd.DataFrame({"k": range(len(texts)),
+                                         "page_text": texts},
+                                        index=range(7, 7 + len(texts)))])))
+    tagger = GazetteerTagger(_ADVERSARIAL_GAZ)
+    got = [{"entities": list(e), "bio": b}
+           for e, b in zip(frames[0]["entities"], frames[0]["bio"])]
+    assert got == [tag_columns(tagger, t or "") for t in texts]
+    assert frames[0]["k"].tolist() == list(range(len(texts)))

@@ -175,10 +175,11 @@ def test_extraction_plan_compiles_without_codegen_fallback(spark, with_ner):
     hides the overflow.
 
     The plan has two branches in both NER modes: the source explodes
-    twice (text branch + python branch), one python stage serves media,
-    pdf and html spans, and the NER stage — with NER only — sees the slim
-    (doc_id, span_idx, text) text rows. Without NER, text rows stay in
-    the JVM, so the plan has no ArrowEvalPython."""
+    twice (text branch + python branch) and one python stage serves
+    media, pdf and html spans. With NER, text rows are tagged by one
+    scalar Arrow UDF whose only argument is `text`: doc_id and span_idx
+    stay in the JVM and only entities/bio come back. Without NER, text
+    rows stay in the JVM, so the plan has no ArrowEvalPython."""
     from ner_ocr_spark import corpus, pipeline
     from tests.conftest import DOC_SCHEMA
 
@@ -193,12 +194,10 @@ def test_extraction_plan_compiles_without_codegen_fallback(spark, with_ner):
     plan = _executed(out).split("== Initial Plan ==")[0]
     assert plan.count("Generate posexplode") == 2, plan
     stages = re.findall(r"MapInPandas stage\(([^)]*)\)#\d+, \[([^\]]*)\]", plan)
-    assert len(stages) == (2 if with_ner else 1), plan
-    ner_inputs = [re.sub(r"#\d+", "", args).split(", ")
-                  for args, outs in stages if "transformer_text" not in outs]
-    assert ner_inputs == ([["doc_id", "span_idx", "text"]] if with_ner else [])
-    if not with_ner:
-        assert "ArrowEvalPython" not in _executed(out)
+    assert len(stages) == 1 and "transformer_text" in stages[0][1], plan
+    udfs = re.findall(r"ArrowEvalPython \[([^\]]*)\]", plan)
+    assert [re.sub(r"#\d+", "", u) for u in udfs] == (
+        ["ner(text)"] if with_ner else []), plan
 
 
 def test_minhash_uses_partial_aggregation(spark):

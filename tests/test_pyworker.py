@@ -143,7 +143,9 @@ PROBE = textwrap.dedent("""
     spark.sparkContext.setLogLevel("ERROR")
     print("BEFORE", *run_probe(spark))
     docs = spark.createDataFrame(corpus.build_documents(1), {schema!r})
-    n = pipeline.extract_spans(docs).count()
+    # collect(), not count(): count() reads no column, so the optimizer
+    # drops the NER UDF and no engine code runs in a python worker
+    n = len(pipeline.extract_spans(docs).collect())
     print("SPANS", n)
     print("AFTER", *run_probe(spark))
     spark.stop()
