@@ -19,6 +19,8 @@ from __future__ import annotations
 
 import math
 from dataclasses import dataclass
+from functools import lru_cache
+from typing import Callable
 
 import numpy as np
 
@@ -96,7 +98,13 @@ def despeckle(mask: np.ndarray) -> np.ndarray:
 def bounded_resize(gray: np.ndarray, max_side_limit: int = MAX_SIDE_LIMIT) -> np.ndarray:
     """Downscale so max side <= limit (reference S4 semantics,
     /root/reference/src/image_processing.py:76-134). Integer block-mean —
-    an area-style filter with no temp files."""
+    an area-style filter with no temp files.
+
+    The k x k block sums are k strided row adds then k strided column adds
+    in an integer accumulator (uint16 while k*k*255 < 2**16, else uint32),
+    and `sum // (k*k)` is the truncated float64 mean exactly: the sum is
+    an integer, so the float quotient is correctly rounded and never
+    crosses the next integer."""
     h, w = gray.shape
     side = max(h, w)
     if side <= max_side_limit:
@@ -105,10 +113,14 @@ def bounded_resize(gray: np.ndarray, max_side_limit: int = MAX_SIDE_LIMIT) -> np
     ph, pw = (-h) % k, (-w) % k
     if ph or pw:
         gray = np.pad(gray, ((0, ph), (0, pw)), constant_values=255)
-    h2, w2 = gray.shape
-    return (
-        gray.reshape(h2 // k, k, w2 // k, k).mean(axis=(1, 3)).astype(np.uint8)
-    )
+    rows = gray[0::k].astype(np.uint16 if k * k * 255 < 2**16 else np.uint32)
+    for i in range(1, k):
+        rows += gray[i::k]
+    out = rows[:, 0::k].copy()
+    for j in range(1, k):
+        out += rows[:, j::k]
+    out //= k * k
+    return out.astype(np.uint8)
 
 
 def estimate_skew(
@@ -120,28 +132,41 @@ def estimate_skew(
     variance would fail on single-line pages whose aligned profile is
     near-uniform. Works on pixel coordinates directly (no per-angle image
     rotation)."""
-    ys, xs = np.nonzero(mask)
+    # row-major ink coordinates — the max_px subsample picks by this order;
+    # one flat scan is ~3x cheaper than the 2-D np.nonzero
+    ys, xs = np.divmod(np.flatnonzero(mask), mask.shape[1])
     if len(ys) < 32:
         return 0.0
     if len(ys) > max_px:
         idx = np.linspace(0, len(ys) - 1, max_px).astype(np.int64)
         ys, xs = ys[idx], xs[idx]
-    ysf = ys.astype(np.float32)
-    xsf = xs.astype(np.float32)
+    # the objective is order-free: visit the pixels column by column, so
+    # neighbours land in different bins and bincount's increments do not
+    # queue on one counter (row order measured ~25% slower per sweep)
+    by_col = np.argsort(xs.astype(np.uint16), kind="stable")
+    ysf = ys.take(by_col).astype(np.float32)
+    xsf = xs.take(by_col).astype(np.float32)
+    yp = np.empty_like(ysf)
+    xp = np.empty_like(xsf)
 
     # note (round 6): batching the whole angle sweep into one (n_angles,
     # n_px) matrix + offset bincount was MEASURED SLOWER (6.4 vs 4.1
     # ms/page) — the per-angle arrays fit L1/L2 while the batch thrashes —
-    # so the scalar loop stays.
-    def _obj(ang: float) -> float:
+    # so the scalar loop stays, over two reused float32 buffers. Only the
+    # float32 products round (cos/sin as float32 scalars, as value-based
+    # casting does for python floats); the bins are integers, so their
+    # float32 min-shift is exact, and the int64 dot of the counts is exact.
+    def _obj(ang: float) -> int:
         r = math.radians(ang)
-        yprime = ysf * math.cos(r) - xsf * math.sin(r)
-        bins = np.round(yprime).astype(np.int64)
-        bins -= bins.min()
-        counts = np.bincount(bins).astype(np.float64)
-        return float((counts * counts).sum())
+        np.multiply(ysf, np.float32(math.cos(r)), out=yp)
+        np.multiply(xsf, np.float32(math.sin(r)), out=xp)
+        np.subtract(yp, xp, out=yp)
+        np.rint(yp, out=yp)
+        np.subtract(yp, yp.min(), out=yp)
+        counts = np.bincount(yp.astype(np.intp))
+        return int(np.dot(counts, counts))
 
-    best_angle, best_obj = 0.0, -1.0
+    best_angle, best_obj = 0.0, -1
     for ang in np.arange(-max_angle, max_angle + 1e-9, step):
         o = _obj(float(ang))
         if o > best_obj:
@@ -162,10 +187,12 @@ def rotate_gray(gray: np.ndarray, angle_deg: float, bg: int) -> np.ndarray:
     re-binarized glyphs stay crisp (a binary nearest-neighbor rotation
     would double the sampling error).
 
-    Bandwidth-lean: a 1-px bg border replaces the validity mask (clipped
-    out-of-range reads hit the border and produce exact bg fill), and all
-    coordinate math is separable float32 outer sums — the kernel is
-    memory-bandwidth-bound at full core saturation."""
+    Sparse: a 1-px bg border replaces the validity mask (clipped
+    out-of-range reads hit the border), and the float64 four-tap math runs
+    only at output pixels whose 2x2 source neighborhood holds a non-bg
+    pixel. Every other output pixel is exactly `bg`: its four taps all
+    equal bg and its weights sum to 1 within a few ulps, so the rounded
+    bilinear value is bg. On a rendered page ~90% of the pixels skip."""
     if abs(angle_deg) < 1e-9:
         return gray
     h, w = gray.shape
@@ -177,51 +204,56 @@ def rotate_gray(gray: np.ndarray, angle_deg: float, bg: int) -> np.ndarray:
     ncy, ncx = (nh - 1) / 2.0, (nw - 1) / 2.0
     dy = (np.arange(nh, dtype=np.float32) - ncy)
     dx = (np.arange(nw, dtype=np.float32) - ncx)
-    sy = (c * dy + cy)[:, None] + (s * dx)[None, :]
-    sx = (-s * dy + cx)[:, None] + (c * dx)[None, :]
-    y0 = np.floor(sy).astype(np.int32)
-    x0 = np.floor(sx).astype(np.int32)
-    fy = sy - y0
-    fx = sx - x0
-    # shift into the padded frame; clip so every access lands in-bounds
-    np.clip(y0, -1, h, out=y0)
-    np.clip(x0, -1, w, out=x0)
-    y0 += 1
-    x0 += 1
-    g = np.full((h + 3, w + 3), np.float32(bg))
-    g[1 : h + 1, 1 : w + 1] = gray
-    # flat-index float32 gathers upcast to float64 before the first
-    # multiply, then reused (1-f) factors + in-place accumulation. fy/fx
-    # are float64 (float32 sy minus int32 y0 promotes — original
-    # behavior), the gathered sample values are exact in either width, and
-    # the multiply/add association order is unchanged, so the result is
-    # bit-identical to the 2-D fancy-indexed form at ~2.5x fewer / ~2x
-    # narrower passes over full-size temporaries (round-6: this call was
-    # ~1/3 of ocr_page)
+    sy = ((c * dy + cy)[:, None] + (s * dx)[None, :]).ravel()
+    sx = ((-s * dy + cx)[:, None] + (c * dx)[None, :]).ravel()
+    # top-left tap, shifted into the padded frame and clipped in-bounds
+    flat = np.floor(sy).astype(np.int32)
+    np.clip(flat, -1, h, out=flat)
+    flat += 1
     gw = w + 3
-    flat = y0
     flat *= gw
-    flat += x0  # y0/x0 buffers are dead past here — reuse as the index
+    x0 = np.floor(sx).astype(np.int32)
+    np.clip(x0, -1, w, out=x0)
+    x0 += 1
+    flat += x0
+    g = np.full((h + 3, w + 3), bg, dtype=np.uint8)
+    g[1 : h + 1, 1 : w + 1] = gray
+    # hot[p]: one of the four taps read from top-left tap p (p, its right,
+    # below and below-right neighbours) is non-bg
+    ink = g != bg
+    hot = ink.copy()
+    hot[:-1] |= ink[1:]
+    hot[:, :-1] |= hot[:, 1:]
+    sel = np.flatnonzero(hot.ravel().take(flat))
+    f = flat.take(sel)
+    # widths and op order are pinned by the OCR digest: fy/fx are float64
+    # (float32 sy minus int32 floor promotes), the gathered samples are
+    # exact in float64, and the four products accumulate tap by tap
+    sys_, sxs = sy.take(sel), sx.take(sel)
+    fy = sys_ - np.floor(sys_).astype(np.int32)
+    fx = sxs - np.floor(sxs).astype(np.int32)
     gf = g.ravel()
     omfy = 1.0 - fy
     omfx = 1.0 - fx
-    v = gf.take(flat).astype(np.float64)
+    v = gf.take(f).astype(np.float64)
     v *= omfy
     v *= omfx
-    t = gf.take(flat + 1).astype(np.float64)
+    t = gf.take(f + 1).astype(np.float64)
     t *= omfy
     t *= fx
     v += t
-    np.add(flat, gw, out=flat)
-    t2 = gf.take(flat).astype(np.float64)
-    t2 *= fy
-    t2 *= omfx
-    v += t2
-    t3 = gf.take(flat + 1).astype(np.float64)
-    t3 *= fy
-    t3 *= fx
-    v += t3
-    return np.clip(np.round(v, out=v), 0, 255).astype(np.uint8)
+    f += gw
+    t = gf.take(f).astype(np.float64)
+    t *= fy
+    t *= omfx
+    v += t
+    t = gf.take(f + 1).astype(np.float64)
+    t *= fy
+    t *= fx
+    v += t
+    out = np.full(nh * nw, bg, dtype=np.uint8)
+    out[sel] = np.clip(np.round(v, out=v), 0, 255)
+    return out.reshape(nh, nw)
 
 
 def _bands(profile: np.ndarray, min_gap: int, min_size: int) -> list[tuple[int, int]]:
@@ -249,26 +281,18 @@ def segment_lines(mask: np.ndarray) -> list[tuple[int, int]]:
 
 
 def _trim(mask: np.ndarray) -> tuple[np.ndarray, int, int]:
-    ys, xs = np.nonzero(mask)
+    ys = np.flatnonzero(mask.any(axis=1))
     if len(ys) == 0:
         return mask[:0, :0], 0, 0
-    return mask[ys.min() : ys.max() + 1, xs.min() : xs.max() + 1], int(xs.min()), int(ys.min())
+    xs = np.flatnonzero(mask.any(axis=0))
+    return mask[ys[0] : ys[-1] + 1, xs[0] : xs[-1] + 1], int(xs[0]), int(ys[0])
 
 
-def _trim_robust(mask: np.ndarray, min_count: int) -> np.ndarray:
-    """Trim to rows/cols carrying at least min_count ink pixels — a single
-    stray rotation-artifact pixel must not extend a glyph's bounding box
-    (it shifts the whole resample grid and flips near-tie classifications
-    like D/O)."""
-    rows = np.flatnonzero(mask.sum(axis=1) >= min_count)
-    cols = np.flatnonzero(mask.sum(axis=0) >= min_count)
-    if len(rows) == 0 or len(cols) == 0:
-        t, _, _ = _trim(mask)
-        return t
-    return mask[rows[0] : rows[-1] + 1, cols[0] : cols[-1] + 1]
-
-
-from functools import lru_cache
+def _extent(counts: np.ndarray, min_count: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Per row of `counts`: the [first, last + 1) span of entries >= min_count,
+    and whether there is one."""
+    hit = counts >= min_count
+    return hit.argmax(axis=1), hit.shape[1] - hit[:, ::-1].argmax(axis=1), hit.any(axis=1)
 
 
 @lru_cache(maxsize=4096)
@@ -277,6 +301,29 @@ def _edges(n_src: int, n_dst: int) -> tuple[np.ndarray, np.ndarray]:
     lo = np.minimum(e[:-1], n_src - 1)
     hi = np.maximum(np.minimum(e[1:], n_src), lo + 1)
     return lo, hi
+
+
+def _grid_edges(lo: np.ndarray, hi: np.ndarray, n_dst: int) -> tuple[np.ndarray, np.ndarray]:
+    """(n, n_dst) block edges of the n spans [lo, hi), each split by `_edges`."""
+    e0, e1 = zip(*(_edges(int(n), n_dst) for n in hi - lo))
+    return np.stack(e0) + lo[:, None], np.stack(e1) + lo[:, None]
+
+
+def _sat(a: np.ndarray) -> np.ndarray:
+    """Zero-bordered int32 summed-area table: sat[y, x] = a[:y, :x].sum()."""
+    sat = np.zeros((a.shape[0] + 1, a.shape[1] + 1), dtype=np.int32)
+    np.cumsum(a, axis=0, dtype=np.int32, out=sat[1:, 1:])
+    np.cumsum(sat[1:, 1:], axis=1, out=sat[1:, 1:])
+    return sat
+
+
+def _block_means(sat, y0, y1, x0, x1) -> np.ndarray:
+    """(n, a, b) block means of n boxes over a summed-area table, given each
+    box's (n, a) row and (n, b) column block edges. The sums are exact
+    integers, so the float64 quotients do not depend on the table's width."""
+    y0, y1, x0, x1 = y0[:, :, None], y1[:, :, None], x0[:, None, :], x1[:, None, :]
+    s = sat[y1, x1] - sat[y0, x1] - sat[y1, x0] + sat[y0, x0]
+    return s / ((y1 - y0) * (x1 - x0))
 
 
 def _resample_shifted(cell: np.ndarray, dy: float, dx: float) -> np.ndarray:
@@ -290,35 +337,13 @@ def _resample_shifted(cell: np.ndarray, dy: float, dx: float) -> np.ndarray:
     y1 = np.maximum(np.minimum(ye[1:], h), y0 + 1)
     x0 = np.minimum(xe[:-1], w - 1)
     x1 = np.maximum(np.minimum(xe[1:], w), x0 + 1)
-    sat = np.zeros((h + 1, w + 1), dtype=np.float32)
-    sat[1:, 1:] = cell.astype(np.float32).cumsum(0).cumsum(1)
-    s = (
-        sat[y1[:, None], x1[None, :]]
-        - sat[y0[:, None], x1[None, :]]
-        - sat[y1[:, None], x0[None, :]]
-        + sat[y0[:, None], x0[None, :]]
-    )
-    area = (y1 - y0)[:, None] * (x1 - x0)[None, :]
-    return s / area
+    return _block_means(_sat(cell), y0[None], y1[None], x0[None], x1[None])[0]
 
 
 def _resample_to_template(cell: np.ndarray) -> np.ndarray:
-    """Block-mean resample an arbitrary-size glyph crop to the match grid.
-    Fully vectorized: summed-area table + fancy-indexed block sums (the
-    per-cell python loop was the kernel's hot spot)."""
-    h, w = cell.shape
-    y0, y1 = _edges(h, _MATCH_H)
-    x0, x1 = _edges(w, _MATCH_W)
-    sat = np.zeros((h + 1, w + 1), dtype=np.float32)
-    sat[1:, 1:] = cell.astype(np.float32).cumsum(0).cumsum(1)
-    s = (
-        sat[y1[:, None], x1[None, :]]
-        - sat[y0[:, None], x1[None, :]]
-        - sat[y1[:, None], x0[None, :]]
-        + sat[y0[:, None], x0[None, :]]
-    )
-    area = (y1 - y0)[:, None] * (x1 - x0)[None, :]
-    return s / area
+    """Block-mean resample an arbitrary-size glyph crop to the match grid."""
+    (y0, y1), (x0, x1) = _edges(cell.shape[0], _MATCH_H), _edges(cell.shape[1], _MATCH_W)
+    return _block_means(_sat(cell), y0[None], y1[None], x0[None], x1[None])[0]
 
 
 def _build_templates() -> tuple[np.ndarray, np.ndarray]:
@@ -326,7 +351,7 @@ def _build_templates() -> tuple[np.ndarray, np.ndarray]:
     for i in range(len(_CHARS)):
         t = _TEMPLATES[i]
         trimmed, _, _ = _trim(t)
-        big = np.kron(trimmed, np.ones((6, 6), dtype=np.float32))
+        big = np.kron(trimmed, np.ones((6, 6), dtype=np.uint8))
         rows.append(_resample_to_template(big).ravel())
     flat = np.stack(rows).astype(np.float32)
     return flat, (flat * flat).sum(axis=1)
@@ -339,12 +364,13 @@ _TIE_MARGIN = 3.0  # d2 gap under which a sub-pixel vote re-checks the call
 
 
 def classify_glyphs(
-    glyphs: np.ndarray, raw_cells: list[np.ndarray] | None = None
+    glyphs: np.ndarray, raw_cell: Callable[[int], np.ndarray] | None = None
 ) -> tuple[list[str], np.ndarray]:
-    """Nearest-template classification, vectorized over a (n, 14, 10) float
+    """Nearest-template classification, vectorized over a (n, 21, 15) float
     stack (ink fractions in [0,1]). Soft L2 distance — tolerates the partial
     pixels a deskew resample leaves — computed as one matmul against all
-    templates. Returns (chars, scores in [0,1])."""
+    templates. `raw_cell(i)` crops glyph i's ink for the near-tie re-vote.
+    Returns (chars, scores in [0,1])."""
     global _TPL_FLAT, _TPL_ONES
     if _TPL_FLAT is None:
         _TPL_FLAT, _TPL_ONES = _build_templates()
@@ -360,7 +386,7 @@ def classify_glyphs(
     best = np.argmin(d2, axis=1)
     n_px = g.shape[1]
     chars = [_CHARS[i] for i in best]
-    if raw_cells is not None:
+    if raw_cell is not None:
         # near-tie disambiguation: when the runner-up is within _TIE_MARGIN,
         # re-vote under small fractional grid shifts — the true glyph wins
         # more alignments than a smear artifact does
@@ -370,9 +396,10 @@ def classify_glyphs(
             if d2[i, b] - d2[i, a] >= _TIE_MARGIN:
                 continue
             votes = {a: 0, b: 0}
+            cell = raw_cell(i)
             for dy in (-0.34, 0.0, 0.34):
                 for dx in (-0.34, 0.0, 0.34):
-                    r = _resample_shifted(raw_cells[i], dy, dx).ravel().astype(np.float32)
+                    r = _resample_shifted(cell, dy, dx).ravel().astype(np.float32)
                     da = ((r - _TPL_FLAT[a]) ** 2).sum()
                     db = ((r - _TPL_FLAT[b]) ** 2).sum()
                     votes[a if da <= db else b] += 1
@@ -407,7 +434,12 @@ def segment_cells(line_mask: np.ndarray, scale_hint: float) -> list[tuple[int, i
 
 
 def recognize_mask(mask: np.ndarray) -> list[LineResult]:
-    """Segment + classify a deskewed binary ink mask into text lines."""
+    """Segment + classify a deskewed binary ink mask into text lines.
+
+    Per line, one int32 summed-area table gives every cell's per-row ink
+    counts, its column profile and its glyph's match-grid block sums, so
+    no cell is cropped or resampled on its own (only a near-tie re-vote
+    crops its glyph)."""
     results: list[LineResult] = []
     for y0, y1 in segment_lines(mask):
         band = mask[y0:y1]
@@ -416,35 +448,41 @@ def recognize_mask(mask: np.ndarray) -> list[LineResult]:
             continue
         scale_hint = max(trimmed.shape[0] / font.GLYPH_H, 1.0)
         cells = segment_cells(trimmed, scale_hint)
-        crops: list[np.ndarray] = []
-        spaces: list[bool] = []
         min_ink = max(2.0 * scale_hint, 2.0)
-        kept_cells: list[tuple[int, int]] = []
         robust_count = max(2, int(round(scale_hint / 2.0)))
-        raw_cells: list[np.ndarray] = []
-        for x0, x1, space in cells:
-            cell = trimmed[:, x0:x1]
-            if int(cell.sum()) < min_ink:
-                continue
-            cy = _trim_robust(cell, robust_count)
-            if cy.size == 0:
-                continue
-            crops.append(_resample_to_template(cy))
-            raw_cells.append(cy)
-            spaces.append(space)
-            kept_cells.append((x0, x1))
-        if not crops:
+        h, w = trimmed.shape
+        sat = _sat(trimmed)
+        cx0, cx1 = np.array([c[:2] for c in cells]).T
+        row_ink = np.diff(sat[:, cx1] - sat[:, cx0], axis=0).T  # (cells, h)
+        keep = np.flatnonzero(row_ink.sum(axis=1) >= min_ink)
+        if not len(keep):
             continue
-        chars, scores = classify_glyphs(np.stack(crops), raw_cells=raw_cells)
+        row_ink, cx0, cx1 = row_ink[keep], cx0[keep], cx1[keep]
+        # each cell's column profile, zero-padded to the widest cell
+        cols = cx0[:, None] + np.arange(int((cx1 - cx0).max()))[None, :]
+        col_ink = np.where(cols < cx1[:, None], np.diff(sat[-1])[np.minimum(cols, w - 1)], 0)
+        # robust trim: rows/cols carrying >= robust_count ink pixels — a
+        # single stray rotation-artifact pixel must not extend a glyph's box
+        # (it shifts the resample grid and flips near-ties like D/O); a
+        # cell with no such row or column falls back to its plain ink box
+        ya, yb, ok = _extent(row_ink, robust_count)
+        xa, xb, ok_x = _extent(col_ink, robust_count)
+        if not (ok & ok_x).all():
+            t = np.where(ok & ok_x, robust_count, 1)[:, None]
+            (ya, yb, _), (xa, xb, _) = _extent(row_ink, t), _extent(col_ink, t)
+        glyphs = _block_means(sat, *_grid_edges(ya, yb, _MATCH_H),
+                              *_grid_edges(xa + cx0, xb + cx0, _MATCH_W))
+        chars, scores = classify_glyphs(
+            glyphs, lambda i: trimmed[ya[i] : yb[i], cx0[i] + xa[i] : cx0[i] + xb[i]])
         pieces: list[str] = []
-        for ch, space in zip(chars, spaces):
-            if space:
+        for ch, k in zip(chars, keep):
+            if cells[k][2]:
                 pieces.append(" ")
             pieces.append(ch)
         text = "".join(pieces)
-        x_min = float(x_off + kept_cells[0][0])
-        x_max = float(x_off + kept_cells[-1][1])
-        y_min, y_max = float(y0 + y_off), float(y0 + y_off + trimmed.shape[0])
+        x_min = float(x_off + cx0[0])
+        x_max = float(x_off + cx1[-1])
+        y_min, y_max = float(y0 + y_off), float(y0 + y_off + h)
         box = [x_min, y_min, x_max, y_max]
         poly = [[x_min, y_min], [x_max, y_min], [x_max, y_max], [x_min, y_max]]
         results.append(
@@ -480,11 +518,10 @@ def page_frame(
     if abs(angle) > 1e-9:
         # crop to the ink bounding box (+2 px) first: margins would only
         # inflate the rotated canvas and every downstream full-image pass
-        ys, xs = np.nonzero(mask)
-        if len(ys):
-            y0, y1 = max(int(ys.min()) - 2, 0), min(int(ys.max()) + 3, gray.shape[0])
-            x0, x1 = max(int(xs.min()) - 2, 0), min(int(xs.max()) + 3, gray.shape[1])
-            gray = gray[y0:y1, x0:x1]
+        ink, x0, y0 = _trim(mask)
+        if ink.size:
+            gray = gray[max(y0 - 2, 0) : y0 + ink.shape[0] + 2,
+                        max(x0 - 2, 0) : x0 + ink.shape[1] + 2]
         gray = rotate_gray(gray, angle, bg)
         mask = despeckle(binarize(gray))
     return gray, mask

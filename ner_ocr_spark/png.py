@@ -15,7 +15,11 @@ passes is an independently filtered sub-image, decoded and scattered back
 into the pixel grid); all five scanline filters with the correct
 per-pixel byte stride. `decode_gray` reduces any of them to the 2-D uint8
 array the OCR kernel consumes (BT.601 integer luma). Palette transparency
-(tRNS) is ignored — alpha never affects OCR ink.
+(tRNS) is ignored — alpha never affects OCR ink. Decoding is bounded by
+the header: a frame above `jpeg.MAX_FRAME_SAMPLES` samples is rejected
+before anything is inflated or allocated, and the IDAT stream is inflated
+to at most the size IHDR implies (a deflate bomb is a `ValueError`, not a
+worker OOM).
 
 Encoder: grayscale (filter 0) and RGB/RGBA (filter 0); used by the corpus
 renderer and the color-input test fixtures. (Interlaced/16-bit fixtures
@@ -29,6 +33,8 @@ import struct
 import zlib
 
 import numpy as np
+
+from ner_ocr_spark.jpeg import MAX_FRAME_SAMPLES
 
 _SIG = b"\x89PNG\r\n\x1a\n"
 
@@ -162,6 +168,8 @@ def decode(data: bytes) -> np.ndarray:
         payload = data[pos + 8 : pos + 8 + length]
         pos += 12 + length
         if tag == b"IHDR":
+            if len(payload) != 13:
+                raise ValueError(f"PNG IHDR is {len(payload)} bytes, not 13")
             w, h, depth, ctype, _, _, interlace = struct.unpack(">IIBBBBB", payload)
             if ctype not in _CHANNELS or interlace not in (0, 1):
                 raise ValueError(
@@ -182,18 +190,30 @@ def decode(data: bytes) -> np.ndarray:
     if w is None:
         raise ValueError("missing IHDR")
     ch = _CHANNELS[ctype]
-    buf = memoryview(zlib.decompress(bytes(idat)))
+    if w * h * ch > MAX_FRAME_SAMPLES:
+        raise ValueError(f"PNG {w}x{h}x{ch} exceeds {MAX_FRAME_SAMPLES} samples")
+    # (w, h, x0, y0, dx, dy) of each filtered sub-image: the whole image,
+    # or the non-empty Adam7 passes
+    subs = [(w, h, 0, 0, 1, 1)] if interlace == 0 else [
+        ((w - x0 + dx - 1) // dx, (h - y0 + dy - 1) // dy, x0, y0, dx, dy)
+        for x0, y0, dx, dy in _ADAM7]
+    subs = [sub for sub in subs if sub[0] > 0 and sub[1] > 0]
+    # inflate no further than the header implies (a deflate bomb stops here)
+    raw_size = sum(ph * ((pw * ch * depth + 7) // 8 + 1) for pw, ph, *_ in subs)
+    try:
+        buf = zlib.decompressobj().decompress(bytes(idat), raw_size + 1)
+    except zlib.error as e:
+        raise ValueError(f"corrupt PNG pixel data: {e}") from e
+    if len(buf) > raw_size:
+        raise ValueError("PNG pixel data longer than the header implies")
+    buf = memoryview(buf)
     if interlace == 0:
         flat, _ = _decode_sub(buf, w, h, ch, depth, 0)
         grid = flat.reshape(h, w, ch)
     else:
         grid = np.zeros((h, w, ch), dtype=np.uint8)
         offset = 0
-        for x0, y0, dx, dy in _ADAM7:
-            pw = (w - x0 + dx - 1) // dx
-            ph = (h - y0 + dy - 1) // dy
-            if pw <= 0 or ph <= 0:
-                continue
+        for pw, ph, x0, y0, dx, dy in subs:
             sub, offset = _decode_sub(buf, pw, ph, ch, depth, offset)
             grid[y0::dy, x0::dx] = sub.reshape(ph, pw, ch)
     if ctype == 0:

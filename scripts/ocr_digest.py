@@ -34,7 +34,7 @@ A refactor that claims bit-identical output must leave both unchanged.
 Pages are rendered by the deterministic corpus renderer, so the digests
 depend only on the engine (and numpy's float arithmetic).
 
-Usage: python scripts/ocr_digest.py      # ~5 min on one core
+Usage: python scripts/ocr_digest.py      # ~110 s on a 4-core box
 Prints one JSON line: {"digest", "pages", "lines", "refined_digest",
 "refined_rows", "workbench_refined_digest", "crop_digest", "crops",
 "seconds"}.

@@ -135,3 +135,44 @@ def test_ocr_exact_on_color_pages(mode):
         got, score = ocr.ocr_text(blob)
         assert got == truth, (mode, ref)
         assert score > 0.8
+
+
+def _gray_png(w: int, h: int, idat: bytes, interlace: int = 0) -> bytes:
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, interlace)
+    return _SIG + _chunk(b"IHDR", ihdr) + _chunk(b"IDAT", idat) + _chunk(b"IEND", b"")
+
+
+@pytest.mark.parametrize("interlace", [0, 1])
+def test_deflate_bomb_is_a_value_error(interlace):
+    """A 16x16 header over ~256 MB of inflated zeros: the decoder inflates
+    no more than the header implies (plus one byte) and rejects the rest,
+    instead of materializing the whole stream."""
+    z = zlib.compressobj(9)
+    chunk = bytes(1 << 20)
+    idat = b"".join(z.compress(chunk) for _ in range(256)) + z.flush()
+    assert len(idat) < 1 << 20
+    with pytest.raises(ValueError, match="longer than the header"):
+        decode(_gray_png(16, 16, idat, interlace))
+
+
+@pytest.mark.parametrize("interlace", [0, 1])
+def test_oversized_header_is_a_value_error(interlace):
+    """A 65535x65535 IHDR is over the shared frame budget: rejected before
+    inflating and before the Adam7 grid (4 GiB) is allocated."""
+    with pytest.raises(ValueError, match="exceeds"):
+        decode(_gray_png(65535, 65535, zlib.compress(bytes(100)), interlace))
+
+
+def test_exact_size_pixel_data_still_decodes():
+    img = np.arange(12 * 5, dtype=np.uint8).reshape(5, 12)
+    raw = np.hstack([np.zeros((5, 1), np.uint8), img]).tobytes()
+    assert np.array_equal(decode(_gray_png(12, 5, zlib.compress(raw))), img)
+    with pytest.raises(ValueError, match="longer than the header"):
+        decode(_gray_png(12, 5, zlib.compress(raw + b"\0")))
+    with pytest.raises(ValueError, match="corrupt PNG"):
+        decode(_gray_png(12, 5, b"\x78\x9c not deflate"))
+
+
+def test_short_ihdr_is_a_value_error():
+    with pytest.raises(ValueError, match="IHDR is 5 bytes"):
+        decode(_SIG + _chunk(b"IHDR", bytes(5)) + _chunk(b"IEND", b""))
